@@ -36,9 +36,9 @@ import graft.core.Executer
   * tombstone codec — so a reader fleet wanting provenance no longer
   * links the engine either.
   *
-  * Legacy (pre-manifest, listing+seqlock) stores are refused loudly:
-  * their partition-swap protocol requires the seqlock retry loop that
-  * only the engine implements; `Executer.reshapeTo` migrates them.
+  * A store with no manifest layer (the retired listing-based layout) is
+  * refused loudly, by the same gate and message as the engine
+  * ([[graft.core.Executer.isPublished]]).
   */
 object StoreReader {
   private def fsFor(spark: SparkSession, path: String): (FileSystem, Path) = {
@@ -60,31 +60,25 @@ object StoreReader {
     }
   }
 
-  /** The store's current published generation, or -1 when none (a
-    * never-ingested store, or a legacy listing-based one). */
+  /** The store's current published generation, or -1 when none. */
   def currentVersion(spark: SparkSession, storePath: String): Long = {
     val (fs, root) = fsFor(spark, storePath)
     readCurrent(fs, root)
   }
 
   /** The resolved snapshot at `version` (default: the current
-    * generation). None when the store has no published generation
-    * (fresh: reads empty); a legacy listing-based store is refused
-    * loudly — its partition-swap protocol requires the seqlock retry
-    * loop only the engine implements. */
-  private def snapOf(fs: FileSystem, root: Path, storePath: String,
+    * generation). None when the store has nothing published yet (reads
+    * empty); a legacy listing-based store is refused loudly. */
+  private def snapOf(fs: FileSystem, root: Path,
       version: Long): Option[graft.core.Snapshot] = {
     val v = if (version >= 0L) version else readCurrent(fs, root)
     if (v < 0L) {
-      if (fs.exists(new Path(root, "map_results")))
-        throw new UnsupportedOperationException(
-          s"$storePath is a legacy (listing-based) store with no published " +
-            "generations; external lock-free reads need a manifest store " +
-            "(Executer.reshapeTo migrates)")
-      // Fresh store, nothing ever ingested: empty results, key column
-      // only — the payload schema lives in the engine's task type, which
-      // an external reader deliberately does not know.
-      None
+      // Nothing published (or a first build still in flight): empty
+      // results, key column only — the payload schema lives in the
+      // engine's task type, which an external reader deliberately does
+      // not know. The gate throws on a legacy store instead.
+      if (Executer.isPublished(fs, root)) snapOf(fs, root, version)
+      else None
     } else {
       val in = new java.io.DataInputStream(
         fs.open(new Path(root, s"_manifests/m$v")))
@@ -98,9 +92,9 @@ object StoreReader {
     * partials and map_results rows both carry the finals' (reduce_key,
     * payload) column pair. None when the store has no published
     * generation (fresh: reads empty; legacy: refused loudly). */
-  private def liveTreeFiles(fs: FileSystem, root: Path, storePath: String,
+  private def liveTreeFiles(fs: FileSystem, root: Path,
       version: Long): Option[(Vector[String], Vector[String])] =
-    snapOf(fs, root, storePath, version).map { snap =>
+    snapOf(fs, root, version).map { snap =>
       val tree = snap.live.getOrElse("reduce_tree", Vector.empty)
       val salvage =
         if (tree.nonEmpty) tree
@@ -140,7 +134,7 @@ object StoreReader {
   def finals(spark: SparkSession, storePath: String,
       version: Long = -1L): DataFrame = {
     val (fs, root) = fsFor(spark, storePath)
-    liveTreeFiles(fs, root, storePath, version) match {
+    liveTreeFiles(fs, root, version) match {
       case Some((files, _)) if files.nonEmpty => readFiles(spark, root, files)
       case Some((_, tree)) => emptyWithSchema(spark, root, tree)
       case None => emptyFinals(spark)
@@ -159,7 +153,7 @@ object StoreReader {
   def pointQuery(spark: SparkSession, storePath: String, key: String,
       version: Long = -1L): DataFrame = {
     val (fs, root) = fsFor(spark, storePath)
-    liveTreeFiles(fs, root, storePath, version) match {
+    liveTreeFiles(fs, root, version) match {
       case Some((files, _)) if files.nonEmpty =>
         val cfg = new Path(root, "_config")
         val pruned =
@@ -193,7 +187,7 @@ object StoreReader {
   def keysQuery(spark: SparkSession, storePath: String, keys: Seq[String],
       version: Long = -1L): DataFrame = {
     val (fs, root) = fsFor(spark, storePath)
-    liveTreeFiles(fs, root, storePath, version) match {
+    liveTreeFiles(fs, root, version) match {
       case Some((files, _)) if files.nonEmpty && keys.nonEmpty =>
         val cfg = new Path(root, "_config")
         val pruned =
@@ -245,7 +239,7 @@ object StoreReader {
       spark.sparkContext.emptyRDD[Row],
       StructType(Seq(StructField("doc_id", StringType),
         StructField("bucket", org.apache.spark.sql.types.IntegerType))))
-    snapOf(fs, root, storePath, version) match {
+    snapOf(fs, root, version) match {
       case None => emptyContrib
       case Some(snap) =>
         val files = snap.live.getOrElse("map_results", Vector.empty)
@@ -317,7 +311,7 @@ object StoreReader {
       spark.sparkContext.emptyRDD[Row],
       StructType(Seq(StructField("reduce_key", StringType),
         StructField("bucket", org.apache.spark.sql.types.IntegerType))))
-    snapOf(fs, root, storePath, version) match {
+    snapOf(fs, root, version) match {
       case None => empty
       case Some(snap) =>
         val files = snap.live.getOrElse("map_results", Vector.empty)
@@ -376,7 +370,7 @@ object StoreReader {
   def changedKeysSince(spark: SparkSession, storePath: String,
       sinceVersion: Long, version: Long = -1L): DataFrame = {
     val (fs, root) = fsFor(spark, storePath)
-    snapOf(fs, root, storePath, version) match {
+    snapOf(fs, root, version) match {
       case None =>
         require(sinceVersion == -1L,
           s"store has no published generations; sinceVersion must be -1, " +
@@ -461,7 +455,7 @@ object StoreReader {
     val (fs, root) = fsFor(spark, storePath)
     val cur = if (version >= 0L) version else readCurrent(fs, root)
     if (cur < 0L) throw new UnsupportedOperationException(
-      "diffSince: not a manifest store (no published generations)")
+      "diffSince: the store has no published generation yet")
     val keys = changedKeysSince(spark, storePath, sinceVersion, cur)
       .limit(maxChurnKeys + 1).collect().map(_.getString(0)).toSeq
     if (keys.length > maxChurnKeys) throw new IllegalStateException(

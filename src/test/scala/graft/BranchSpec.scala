@@ -81,11 +81,10 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("guards: legacy source, occupied destination, GC'd target") {
-    val legacy = new Executer(PeopleCountByState,
-      TestTmp.dir("graft-br-legacy"), cfg.copy(manifests = false))
-    legacy.execute(spark.createDataset(Seq(Person("a", "CA"))))
-    intercept[UnsupportedOperationException] {
-      legacy.branchAt(0L, TestTmp.dir("graft-br-x") + "/s")
+    val legacy = LegacyStore.build("graft-br-legacy")
+    LegacyStore.assertRefused(legacy) {
+      new Executer(PeopleCountByState, legacy, cfg)
+        .branchAt(0L, TestTmp.dir("graft-br-x") + "/s")
     }
 
     val srcStore = TestTmp.dir("graft-br-g-src")

@@ -210,10 +210,9 @@ class ChangedKeysSpec extends AnyFunSuite {
   }
 
   test("legacy stores refuse: generations are a manifest construct") {
-    val store = TestTmp.dir("graft-chg-legacy")
-    val ex = new Executer(PeopleCountByState, store,
-      ExecuterConfig(fanIn = 4, finalParts = 2, manifests = false))
-    ex.execute(spark.createDataset(Seq(Person("a", "CA"))))
-    intercept[UnsupportedOperationException] { ex.changedKeysSince(-1L) }
+    val store = LegacyStore.build("graft-chg-legacy")
+    LegacyStore.assertRefused(store) {
+      new Executer(PeopleCountByState, store, cfg).changedKeysSince(-1L)
+    }
   }
 }

@@ -76,9 +76,8 @@ class DriverWriteSpec extends AnyFunSuite {
     assert(sOn.nonEmpty && tOn.nonEmpty)
   }
 
-  test("recompute-maintained store: driver-written ≡ job-written, " +
-      "legacy (non-manifest) layout") {
-    val cfg = ExecuterConfig(fanIn = 8, finalParts = 4, manifests = false)
+  test("recompute-maintained store: driver-written ≡ job-written") {
+    val cfg = ExecuterConfig(fanIn = 8, finalParts = 4)
     val (sOn, tOn) =
       runSchedule(PlainCountByState, cfg, TestTmp.dir("graft-dwonL"), on = true)
     val (sOff, tOff) =
@@ -124,21 +123,14 @@ class DriverWriteSpec extends AnyFunSuite {
   }
 
   test("the probe's driver-side map read + fully-driver pruned recompute " +
-      "≡ the collect-job spellings (non-delta task, both layouts)") {
-    for (manifests <- Seq(true, false)) {
-      val cfg = ExecuterConfig(fanIn = 8, finalParts = 4,
-        manifests = manifests)
-      val (sOn, tOn) = withProp("graft.driverRead", on = true)(
-        runSchedule(PlainCountByState, cfg,
-          TestTmp.dir(s"graft-pron$manifests"), on = true))
-      val (sOff, tOff) = withProp("graft.driverRead", on = false)(
-        runSchedule(PlainCountByState, cfg,
-          TestTmp.dir(s"graft-proff$manifests"), on = true))
-      assert(sOn == sOff,
-        s"maintained state diverged between read spellings (manifests=$manifests)")
-      assert(tOn == tOff,
-        s"tree-table content diverged between read spellings (manifests=$manifests)")
-      assert(sOn.nonEmpty && tOn.nonEmpty)
-    }
+      "≡ the collect-job spellings (non-delta task)") {
+    val cfg = ExecuterConfig(fanIn = 8, finalParts = 4)
+    val (sOn, tOn) = withProp("graft.driverRead", on = true)(
+      runSchedule(PlainCountByState, cfg, TestTmp.dir("graft-pron"), on = true))
+    val (sOff, tOff) = withProp("graft.driverRead", on = false)(
+      runSchedule(PlainCountByState, cfg, TestTmp.dir("graft-proff"), on = true))
+    assert(sOn == sOff, "maintained state diverged between read spellings")
+    assert(tOn == tOff, "tree-table content diverged between read spellings")
+    assert(sOn.nonEmpty && tOn.nonEmpty)
   }
 }

@@ -4,10 +4,9 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.core.{Executer, ExecuterConfig}
 
-/** ChurnProps' adversarial schedule replayed against the MANIFEST store
-  * layout (SURVEY §14). The crash shape differs from the legacy twin: a
-  * manifest store's interrupted batch never strands live data in
-  * `.trash` — it leaves a surviving dirty WAL plus orphan files no
+/** Random op interleavings ≡ from-scratch recompute on the manifest
+  * store layout (SURVEY §14). An interrupted batch never moves live
+  * data — it leaves a surviving dirty WAL plus orphan files no
   * published manifest references. The simulation here plants both: a
   * conservative WAL naming every (key, parent) pair, and an orphan copy
   * of a live data file (which would double-count every row of its

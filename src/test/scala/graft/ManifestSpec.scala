@@ -54,8 +54,8 @@ class ManifestSpec extends AnyFunSuite {
     assert(before == Map("CA" -> 20L, "TX" -> 20L))
 
     // Two update batches that rewrite every final partition the snapshot
-    // plan reads. Under the legacy swap these renames would break the
-    // resolved plan (file-not-found) or tear it; under manifests the
+    // plan reads. A rename-aside swap would break the resolved plan
+    // (file-not-found) or tear it; under manifests the
     // replaced files are retired in place, so the OLD plan keeps
     // returning the OLD consistent answer — a free time-travel read
     // within the retention window.
@@ -184,26 +184,5 @@ class ManifestSpec extends AnyFunSuite {
     val stale = intercept[Exception](ex.queryAllAt(v1).collect())
     assert(stale.toString.toLowerCase.contains("file"),
       s"expected a file-level failure for a GC'd generation, got $stale")
-
-    // A legacy store has no generations.
-    val legacy = new Executer(PeopleCountByState, TestTmp.dir("graft-mani5l"),
-      cfg.copy(manifests = false))
-    legacy.execute(spark.createDataset(Seq(Person("x", "CA"))))
-    assert(legacy.snapshotVersion() == -1L)
-  }
-
-  test("legacy stores get no manifest; manifests=false is honored on fresh stores") {
-    val store = TestTmp.dir("graft-mani4")
-    val ex = new Executer(PeopleCountByState, store,
-      cfg.copy(manifests = false))
-    ex.execute(spark.createDataset(Seq(Person("a", "CA"))))
-    assert(!Files.exists(Paths.get(store, "_current")))
-    assert(counts(ex) == Map("CA" -> 1L))
-    // An instance opened with manifests=true on the legacy store must NOT
-    // convert it mid-life (readers of the store may be listing-based).
-    val ex2 = new Executer(PeopleCountByState, store, cfg)
-    ex2.execute(spark.createDataset(Seq(Person("b", "TX"))))
-    assert(!Files.exists(Paths.get(store, "_current")))
-    assert(counts(ex2) == Map("CA" -> 1L, "TX" -> 1L))
   }
 }

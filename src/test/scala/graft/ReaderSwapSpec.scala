@@ -10,13 +10,8 @@ import graft.core.{Executer, ExecuterConfig}
 /** Concurrent-reader isolation during partition swaps (VERDICT r5
   * "What's missing #2"): a reader scanning the store while maintenance
   * rewrites final partitions must NEVER observe a silently-missing
-  * partition (the window between the swap's rename-aside and rename-in
-  * could previously be listed as "partition has no files" with no
-  * error). The `_epoch` seqlock closes it: reads spin until they build
-  * against the same even epoch before and after the listing. A swap
-  * landing AFTER a read's listing surfaces as a retriable read error
-  * (files renamed away mid-scan), never as silent loss — that residual
-  * contract is pinned here too: every SUCCESSFUL read is consistent.
+  * partition or a torn generation, and — since reads resolve a published
+  * manifest's immutable file list — never even a retriable error.
   *
   * The reader runs on a SEPARATE SparkSession (shared context, own SQL
   * state — the in-JVM stand-in for a second reader process; nothing
@@ -112,11 +107,4 @@ class ReaderSwapSpec extends AnyFunSuite {
       s"manifest reads must never need a retry, got $retriable")
   }
 
-  test("legacy store: seqlock fallback still guarantees no silent loss") {
-    // Pre-manifest stores keep the optimistic-seqlock contract: every
-    // SUCCESSFUL read is consistent; a swap after the read's listing may
-    // surface as a retriable error (counted, tolerated).
-    churn(TestTmp.dir("graft-readerswap-legacy"),
-      ExecuterConfig(fanIn = 4, finalParts = 2, manifests = false))
-  }
 }

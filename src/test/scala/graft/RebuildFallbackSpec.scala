@@ -30,7 +30,7 @@ object PoisonCountByState extends MapReduceTask[Person, StatePop] {
   * semantics; (2) steady-state small updates never pay the check;
   * (3) a kill inside the fallback leaves the store on the previous
   * published generation exactly like any crashed batch (VERDICT r7 #6),
-  * and recover + resubmit completes it; (4) legacy stores never take it.
+  * and recover + resubmit completes it.
   */
 class RebuildFallbackSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = TestSpark.spark
@@ -114,15 +114,5 @@ class RebuildFallbackSpec extends AnyFunSuite {
     ex.execute(spark.createDataset(bulkUpdate))
     assert(allCounts(ex) == expectedAfterUpdate)
     assert(ex.lastStats.get.mode == "rebuild-fallback")
-  }
-
-  test("legacy (non-manifest) stores never take the fallback") {
-    val store = TestTmp.dir("graft-rbf-legacy")
-    val ex = new Executer(PeopleCountByState, store,
-      cfg.copy(manifests = false))
-    ex.execute(spark.createDataset(baseDocs))
-    ex.execute(spark.createDataset(bulkUpdate))
-    assert(ex.lastStats.get.mode != "rebuild-fallback")
-    assert(allCounts(ex) == expectedAfterUpdate)
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -46,166 +44,81 @@ class RecoverySpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$store/dirty")))
   }
 
-  // The four tests below pin LEGACY-layout crash windows (in-place
-  // tombstones.bin, stranded .trash directories): a manifest store cannot
-  // produce them — its tombstone files are immutable+versioned and its
-  // swaps never move live files. ManifestSpec pins the manifest layout's
-  // own (stronger) crash contract: batch invisible until publish.
-  private val legacyCfg = graft.core.ExecuterConfig(manifests = false)
+  private def writePairs(store: String, file: String,
+      pairs: Seq[(String, Int)]): Unit = {
+    val out = new java.io.DataOutputStream(
+      Files.newOutputStream(java.nio.file.Paths.get(store, file)))
+    out.writeInt(pairs.size)
+    pairs.foreach { case (k, v) => TestTmp.writeStr(out, k); out.writeInt(v) }
+    out.close()
+  }
+
+  /** The interrupted batch had already bumped the _seq counter (the real
+    * crash ordering), so a re-submission gets a higher seq. */
+  private def bumpSeqTo(store: String, n: Int): Unit = {
+    val fsPath = java.nio.file.Paths.get(store)
+    val seqOut = new java.io.DataOutputStream(
+      Files.newOutputStream(fsPath.resolve("_seq")))
+    seqOut.writeInt(n); seqOut.close()
+    Files.deleteIfExists(fsPath.resolve("._seq.crc"))
+  }
 
   test("recover() after a crash between tombstone write and append") {
-    // The documented crash window of the merge-on-read update path:
-    // dirty WAL written, tombstones written, new rows NOT yet appended.
-    // recover() must land on the consistent "docs deleted" state (the
-    // interrupted batch is the caller's to re-submit), never duplicates.
+    // The crash window of the merge-on-read update path: dirty WAL
+    // written, the batch's tombstone file written, new rows NOT yet
+    // appended, nothing published. The tombstone file is an orphan the
+    // published manifest does not reference, so recover() must land on
+    // the pre-batch state (the batch is invisible, never half-applied)
+    // and re-submitting the batch completes it.
     val store = TestTmp.dir("graft-rec4")
-    val ex = new Executer(PeopleCountByState, store, legacyCfg)
+    val ex = new Executer(PeopleCountByState, store)
     ex.execute(spark.createDataset(Seq(
       Person("a", "CA"), Person("b", "CA"), Person("c", "TX"))))
 
     val parentOfA = graft.functions.StableBucketHash.hash(
       "A", graft.core.ExecuterConfig().buckets) / graft.core.ExecuterConfig().fanIn
-    val fsPath = java.nio.file.Paths.get(store)
-    def writePairs(file: String, pairs: Seq[(String, Int)]): Unit = {
-      val out = new java.io.DataOutputStream(
-        java.nio.file.Files.newOutputStream(fsPath.resolve(file)))
-      out.writeInt(pairs.size)
-      pairs.foreach { case (k, v) => TestTmp.writeStr(out, k); out.writeInt(v) }
-      out.close()
-    }
-    // Interrupted update of doc 'a' (CA → TX): WAL marks (CA, parent),
-    // tombstone kills a's rows older than the interrupted batch's seq.
-    // That batch had already bumped the _seq counter (the real crash
-    // ordering), so the eventual re-submission gets a higher seq.
-    writePairs("dirty.pairs", Seq(("CA", parentOfA)))
-    writePairs("tombstones.bin", Seq(("A", 1)))
-    val seqOut = new java.io.DataOutputStream(
-      java.nio.file.Files.newOutputStream(fsPath.resolve("_seq")))
-    seqOut.writeInt(1); seqOut.close()
-    // The engine writes through Hadoop's checksummed local FS; this raw
-    // overwrite invalidates the sidecar — drop it so the read skips
-    // verification (the crash being simulated would have written both).
-    java.nio.file.Files.deleteIfExists(fsPath.resolve("._seq.crc"))
+    // Interrupted update of doc 'a' (CA → TX).
+    writePairs(store, "dirty.pairs", Seq(("CA", parentOfA)))
+    Files.createDirectories(java.nio.file.Paths.get(store, "_tomb"))
+    writePairs(store, "_tomb/t1.bin", Seq(("A", 1)))
+    bumpSeqTo(store, 1)
 
     assert(!ex.isClean)
     ex.recover()
     assert(ex.isClean)
-    // 'a' is consistently gone; re-submitting the batch completes it.
-    assert(ex.query("CA").collect().toSeq == Seq(StatePop("CA", 1L)))
+    assert(ex.query("CA").collect().toSeq == Seq(StatePop("CA", 2L)))
     ex.execute(spark.createDataset(Seq(Person("a", "TX"))))
     assert(ex.query("CA").collect().toSeq == Seq(StatePop("CA", 1L)))
     assert(ex.query("TX").collect().toSeq == Seq(StatePop("TX", 2L)))
+    ex.compact()
+    assert(!Files.exists(java.nio.file.Paths.get(store, "_tomb/t1.bin")),
+      "compact() kept the crashed batch's orphan tombstone file")
   }
 
   test("recover() repairs an interrupted delete(key)") {
-    // delete() crash window: the key's map rows are already invalidated
-    // (emulated via tombstones, which make them equally invisible) but
-    // the tree rewrite never ran — the WAL must let recover() finish
-    // the job, or the key would stay queryable forever.
+    // delete() crash window: the WAL names the key's pairs and its map
+    // rewrite was merged in unpublished. recover() replays the pruned
+    // re-reduce over the PUBLISHED state — the delete stays invisible
+    // and the store consistent (WAL cleared) — and re-running the
+    // delete completes it.
     val store = TestTmp.dir("graft-rec5")
-    val ex = new Executer(PeopleCountByState, store, legacyCfg)
+    val ex = new Executer(PeopleCountByState, store)
     ex.execute(spark.createDataset(Seq(
       Person("a", "CA"), Person("b", "CA"), Person("c", "TX"))))
 
     val cfg = graft.core.ExecuterConfig()
     def parentOf(id: String) =
       graft.functions.StableBucketHash.hash(id, cfg.buckets) / cfg.fanIn
-    val fsPath = java.nio.file.Paths.get(store)
-    def writePairs(file: String, pairs: Seq[(String, Int)]): Unit = {
-      val out = new java.io.DataOutputStream(
-        java.nio.file.Files.newOutputStream(fsPath.resolve(file)))
-      out.writeInt(pairs.size)
-      pairs.foreach { case (k, v) => TestTmp.writeStr(out, k); out.writeInt(v) }
-      out.close()
-    }
-    writePairs("dirty.pairs",
+    writePairs(store, "dirty.pairs",
       Seq(("CA", parentOf("A")), ("CA", parentOf("B"))).distinct)
-    writePairs("tombstones.bin", Seq(("A", 1), ("B", 1)))
-    val seqOut = new java.io.DataOutputStream(
-      java.nio.file.Files.newOutputStream(fsPath.resolve("_seq")))
-    seqOut.writeInt(1); seqOut.close()
-    java.nio.file.Files.deleteIfExists(fsPath.resolve("._seq.crc"))
 
     ex.recover()
     assert(ex.isClean)
+    assert(ex.query("CA").collect().toSeq == Seq(StatePop("CA", 2L)))
+    assert(ex.query("TX").collect().toSeq == Seq(StatePop("TX", 1L)))
+    ex.delete("CA")
     assert(ex.query("CA").collect().isEmpty)
     assert(ex.query("TX").collect().toSeq == Seq(StatePop("TX", 1L)))
-  }
-
-  test("recover() restores a map partition stranded mid-swap in .trash") {
-    // The swap inside stageAndOverwriteDirs renames dest → .trash, then
-    // staged → dest. A crash between the two renames used to lose the
-    // partition permanently — map_results is SOURCE state, not
-    // reconstructible from the WAL (ADVICE r3). recover() must rename
-    // the stranded directory back before anything else runs.
-    val store = TestTmp.dir("graft-rec6")
-    val ex = new Executer(PeopleCountByState, store, legacyCfg)
-    ex.execute(spark.createDataset(Seq(
-      Person("a", "CA"), Person("b", "CA"), Person("c", "TX"))))
-    val before = ex.queryAll().collect().toSet
-
-    // Strand one real parent partition exactly as the crash would.
-    val mapDir = java.nio.file.Paths.get(s"$store/map_results")
-    val parentDir = java.nio.file.Files.list(mapDir).iterator().asScala
-      .find(_.getFileName.toString.startsWith("parent=")).get
-    val trash = java.nio.file.Paths.get(s"$store/map_results.trash")
-    java.nio.file.Files.createDirectories(trash)
-    java.nio.file.Files.move(parentDir, trash.resolve(parentDir.getFileName))
-
-    ex.recover()
-    assert(java.nio.file.Files.exists(parentDir))
-    assert(!java.nio.file.Files.exists(trash))
-    assert(ex.queryAll().collect().toSet == before)
-    // And the next batch runs normally over the restored state.
-    ex.execute(spark.createDataset(Seq(Person("d", "TX"))))
-    assert(ex.query("TX").collect().toSeq == Seq(StatePop("TX", 2L)))
-  }
-
-  test("recover() drops a stale trash copy of a partition whose swap completed") {
-    // A multi-partition fold/compact swap deletes .trash only after ALL
-    // directories swapped. A crash in between leaves some partitions
-    // fully swapped (dest = new content) with their OLD copy still in
-    // .trash. Restoring must NOT merge those stale files into the
-    // completed directory — that would duplicate every live row, and
-    // fold/compact swaps have no WAL that would ever repair it.
-    val store = TestTmp.dir("graft-rec7")
-    val ex = new Executer(PeopleCountByState, store, legacyCfg)
-    ex.execute(spark.createDataset(Seq(
-      Person("a", "CA"), Person("b", "CA"), Person("c", "TX"))))
-    val before = ex.queryAll().collect().toSet
-
-    val mapDir = java.nio.file.Paths.get(s"$store/map_results")
-    val parents = java.nio.file.Files.list(mapDir).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("parent=")).toSeq
-    val trash = java.nio.file.Paths.get(s"$store/map_results.trash")
-    // Swap COMPLETED for this partition: dest holds the (identical, in
-    // this simulation) new content, trash still holds the old copy with
-    // different part-file names — the merge hazard.
-    val done = parents.head
-    val doneTrash = trash.resolve(done.getFileName)
-    java.nio.file.Files.createDirectories(doneTrash)
-    java.nio.file.Files.list(done).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .foreach { f =>
-        java.nio.file.Files.copy(f,
-          doneTrash.resolve("stale-" + f.getFileName.toString))
-      }
-    // And a second partition stranded MID-swap (dest missing) — the case
-    // restore must still repair.
-    if (parents.size > 1) {
-      val mid = parents(1)
-      java.nio.file.Files.move(mid, trash.resolve(mid.getFileName))
-    }
-
-    ex.recover()
-    assert(!java.nio.file.Files.exists(trash))
-    assert(ex.queryAll().collect().toSet == before,
-      "stale trash files merged into a completed swap (rows duplicated) " +
-        "or a stranded partition lost")
-    // The tree only re-reads map rows on the next re-reduce, so assert
-    // the duplication directly at the storage layer: one map row per doc.
-    assert(spark.read.parquet(s"$store/map_results").count() == 3L,
-      "stale trash files merged into a completed swap duplicated map rows")
   }
 
   test("recover() after a crash mid-initial-build replays the full rebuild") {

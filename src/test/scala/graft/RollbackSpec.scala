@@ -144,11 +144,10 @@ class RollbackSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { ex.rollbackTo(-1L) }
     intercept[IllegalArgumentException] { ex.rollbackTo(v0 + 5) }
 
-    val legacyStore = TestTmp.dir("graft-rb-legacy")
-    val legacy = new Executer(PeopleCountByState, legacyStore,
-      cfg.copy(manifests = false))
-    legacy.execute(spark.createDataset(Seq(Person("a", "CA"))))
-    intercept[UnsupportedOperationException] { legacy.rollbackTo(0L) }
+    val legacy = LegacyStore.build("graft-rb-legacy")
+    LegacyStore.assertRefused(legacy) {
+      new Executer(PeopleCountByState, legacy, cfg).rollbackTo(0L)
+    }
   }
 
   test("a GC'd target fails loudly and mutates nothing") {

@@ -7,16 +7,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Executer, ExecuterConfig}
 
-/** The base-relation cache (Executer.cachedRel) must never serve a stale
-  * file listing: every mutation bumps the persisted store version
-  * (`_mod`), and every read re-validates against it — including reads
+/** The base-relation cache (Executer.relFor) must never serve a stale
+  * file list: plans are keyed by the snapshot they resolve — a published
+  * generation's version, or the writer's pending model revision — and
+  * every read resolves the current `_current` pointer, including reads
   * from a DIFFERENT Executer instance on the same store (writer handoff
   * is the reference's normal operating mode: one process builds, a later
   * process updates, `MapReduce/Program.cs:13-45`). Each scenario here
-  * failed with a naive forever-cache and passes only because
-  * invalidation covers that mutation type: append (incremental update),
-  * staged partition swap (key delete), tombstone write + fold
-  * (deleteDocuments/compact), and the initial build's overwrite. */
+  * would fail under a forever-cache keyed by table path alone, and
+  * passes only because every mutation type lands a new generation:
+  * append (incremental update), staged partition swap (key delete),
+  * tombstone write + fold (deleteDocuments/compact), and the initial
+  * build. */
 class StaleListingSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._

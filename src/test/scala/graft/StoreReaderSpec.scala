@@ -318,14 +318,9 @@ class StoreReaderSpec extends AnyFunSuite {
     assert(g.collect().isEmpty)
     assert(g.columns.toSeq == Seq("reduce_key"))
 
-    val legacy = TestTmp.dir("graft-extread-legacy")
-    val ex = new Executer(PeopleCountByState, legacy,
-      cfg.copy(manifests = false))
-    ex.execute(spark.createDataset(Seq(Person("a", "CA"))))
+    val legacy = LegacyStore.build("graft-extread-legacy")
     assert(StoreReader.currentVersion(spark, legacy) == -1L)
-    intercept[UnsupportedOperationException] {
-      StoreReader.finals(spark, legacy)
-    }
+    LegacyStore.assertRefused(legacy)(StoreReader.finals(spark, legacy))
   }
 
   test("head re-resolve survives aggressive GC + compaction; a stale " +
