@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.StructType
   *
   * The driver read decodes ~9 MB/100 ms; the job costs 200–350 ms
   * flat — the read wins to ~25 MB unfiltered, further with pruning.
-  * This sizes `SPARK_GRAFT_DRIVER_MAP_READ_MAX_BYTES` (16 MB default:
-  * 2× margin) and keeps the filtered tier out of the engine (its extra
+  * This sizes the engine's `Executer.DriverMapReadMaxBytes` constant
+  * (16 MB: 2× margin) and keeps the filtered tier out of the engine (its extra
   * reader build per batch is not worth the marginal pruning below the
   * ceiling). Usage: `runMain graft.ProbeMapRead [rowsPerParent]
   * [nParents]`.

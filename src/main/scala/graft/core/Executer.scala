@@ -99,11 +99,6 @@ object Executer {
     }
   }
 
-  /** A reduce key's final-results partition — ONE definition shared by
-    * the engine's pruned reads (`query`/`queryKeys`/point time travel)
-    * and the external reader's [[graft.sources.StoreReader.pointQuery]].
-    * Must agree with `pmod(hash(reduce_key), finalParts)` used on
-    * write (Spark's Murmur3, seed 42). */
   /** True when a batch's optimized plan is shuffle-free and cheap to
     * re-evaluate partially: leaf scans under projections, filters,
     * limits and typed map/filter nodes only. Anything that implies an
@@ -124,6 +119,11 @@ object Executer {
     }.isEmpty
   }
 
+  /** A reduce key's final-results partition — ONE definition shared by
+    * the engine's pruned reads (`query`/`queryKeys`/point time travel)
+    * and the external reader's [[graft.sources.StoreReader.pointQuery]].
+    * Must agree with `pmod(hash(reduce_key), finalParts)` used on
+    * write (Spark's Murmur3, seed 42). */
   private[graft] def fpartHash(key: String, finalParts: Int): Int = {
     val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction.hash(
       org.apache.spark.unsafe.types.UTF8String.fromString(key),
@@ -138,10 +138,13 @@ object Executer {
     if (i < 0) rel else rel.substring(0, i)
   }
 
-  /** The engine's case-insensitive document-id normalization (Spark's
-    * UTF8String upper-casing — locale-stable where JDK toUpperCase is
-    * not), shared so the external reader cannot drift from the ids the
-    * engine stored. */
+  /** The engine's case-insensitive document-id normalization
+    * (`Executer.cs:246-247,302`): Spark's UTF8String upper-casing, the
+    * SAME uppercase the SQL `upper()` of the distributed write path
+    * stores. JDK `String.toUpperCase` diverges from it on non-ASCII under
+    * some default locales (tr-TR dotted i), which would make deletes and
+    * contribution lookups silently miss stored ids. Shared so the
+    * external reader cannot drift from the ids the engine stored. */
   private[graft] def normDocId(id: String): String =
     org.apache.spark.unsafe.types.UTF8String.fromString(id)
       .toUpperCase.toString
@@ -229,6 +232,66 @@ object Executer {
         "_current or _manifests/): only manifest stores can be opened — " +
         "rebuild it from its source documents into a new store path")
 
+  /** Ceiling on the dirty-directory count the driver-merge paths
+    * ([[Executer!.startRereduceDeltaDriver]],
+    * [[Executer!.rereducePrunedDriver]]) rewrite from the driver; past
+    * it the distributed spelling's width wins back. Covers every
+    * driver-small batch shape the local fixtures produce (≤ fanIn
+    * parents + finalParts fparts). */
+  private[core] final val DriverMergeMaxDirs = 96
+
+  /** Byte ceiling on the LIVE tree content of the dirty directories a
+    * driver merge would rewrite. Measured (q77 vs q121l, round 16): with
+    * ~300 KB of dirty-dir state the driver rewrite wins ~0.7s over the
+    * distributed spelling; at a few MB (a wide-fan-out shingle index
+    * whose every update dirties the whole tree) it LOSES ~2.4s — the
+    * retained-row rewrite wants width. */
+  private[core] final val DriverMergeMaxBytes = 1L << 20
+
+  /** Size-statistics ceiling on the batch auto-collect probe: a narrow
+    * batch whose optimized plan estimates past this many bytes is never
+    * take()-probed — the probe itself would scan row groups (and run any
+    * typed map) of a corpus-scale input on every build, only to
+    * overflow. Every batch the collect actually serves (micro-batches,
+    * dimension slices) is well under 1 MB of source; corpus scans that
+    * must stay distributed start around 2.5 MB — 2 MB splits them with
+    * the probe cost landing on neither. */
+  private[core] final val DriverBatchCollectMaxBytes = 2L << 20
+
+  /** Row ceiling on the full dirty-directory fetch the driver-merge
+    * paths use (touched AND untouched rows — the merge rewrites whole
+    * directories, so fetching the retained rows lets the rewrite skip
+    * re-scanning them). [[DriverMergeMaxBytes]] already bounds the same
+    * content to ~1 MB of parquet; this caps pathological row counts
+    * (thousands of near-empty rows per KB) independently. Overflow
+    * falls back to the distributed spelling, results unchanged. */
+  private[core] final val DriverMergeMaxRows = 1 << 18
+
+  /** Byte ceiling on the LIVE map_results content of the incoming
+    * parents that the driver-side probe read
+    * ([[Executer!.readMapParentsDriver]]) will scan in place of the
+    * stale-rows probe job. Larger than [[DriverMergeMaxBytes]]
+    * deliberately: the map read replaces a Spark job whose fixed cost
+    * buys a lot of single-threaded parquet decoding, and a 1-doc update
+    * on a corpus-scale store touches exactly one parent directory
+    * (~1/fanIn of the table). Measured (ProbeMapRead, map-shaped
+    * parents, min of 5): the driver read decodes ~9 MB/100 ms and the
+    * probe collect job costs 200–350 ms flat, so the read wins up to
+    * ~25 MB; 16 MB keeps a 2× margin. Row density is guarded separately
+    * (the read drops its retained rows past [[DriverMergeMaxRows]]).
+    * Batches whose parents sum past this ceiling keep the pushed-down
+    * probe job unchanged. */
+  private[core] final val DriverMapReadMaxBytes = 16L << 20
+
+  /** Byte ceiling on the reduce-tree content the fully-driver pruned
+    * recompute ([[Executer!.rereducePrunedDriver]]'s job-free spelling)
+    * reads in place of its one collect job: the dirty keys' level-1
+    * partials live in EVERY parent (sibling inclusion), so the read
+    * spans the whole level 1 plus the dirty level-2 fparts. Sized like
+    * [[DriverMapReadMaxBytes]] and for the same reason — the read
+    * replaces a whole job, not just its run time. */
+  private[core] final val DriverTreeReadMaxBytes = 4L << 20
+
   /** On-disk store format version. Bump when ANY persisted layout
     * changes: table schemas/partitioning, manifest or WAL encoding,
     * tombstone format, state-file layout. Folded into the cross-run
@@ -306,6 +369,9 @@ class Executer[D, R <: Product: TypeTag](
     lease: Option[LeaseProvider] = None)(implicit spark: SparkSession) {
 
   import spark.implicits._
+  import Executer.{DriverBatchCollectMaxBytes, DriverMapReadMaxBytes,
+    DriverMergeMaxBytes, DriverMergeMaxDirs, DriverMergeMaxRows,
+    DriverTreeReadMaxBytes}
 
   /** Sentinel `parent` value in the dirty WAL meaning "full rebuild". */
   private val FullRebuild = -1
@@ -324,28 +390,6 @@ class Executer[D, R <: Product: TypeTag](
     * per-doc-keyed indexes (signature/cell tables, dirty pairs ≈ 2 ×
     * batch docs) on the cheap path for multi-thousand-doc batches. */
   private val DriverDirtyLimit = config.driverDirtyLimit
-
-  /** Ceiling on the dirty-directory count the driver-merge delta path
-    * ([[rereduceDeltaDriver]]) will rewrite in its one-task tree write;
-    * past it the distributed spelling's width wins back. Env-tunable so
-    * a cluster deployment can size it to its reduce-tree directory
-    * stats; the default covers every driver-small batch shape the local
-    * fixtures produce (≤ fanIn parents + finalParts fparts). */
-  private val DriverMergeMaxDirs =
-    sys.env.get("SPARK_GRAFT_DRIVER_MERGE_DIRS")
-      .orElse(sys.props.get("graft.driverMergeMaxDirs"))
-      .map(_.toInt).getOrElse(96)
-
-  /** Byte ceiling on the LIVE tree content of the dirty directories a
-    * driver merge would rewrite through its one task. Measured (q77 vs
-    * q121l, round 16): with ~300 KB of dirty-dir state the one-task
-    * rewrite wins ~0.7s over the distributed spelling; at a few MB
-    * (a wide-fan-out shingle index whose every update dirties the whole
-    * tree) it LOSES ~2.4s — the retained-row rewrite wants width. */
-  private val DriverMergeMaxBytes =
-    sys.env.get("SPARK_GRAFT_DRIVER_MERGE_MAX_BYTES")
-      .orElse(sys.props.get("graft.driverMergeMaxBytes"))
-      .map(_.toLong).getOrElse(1L << 20)
 
   /** The live data files of the named reduce-tree partition
     * directories, as ((level, part), path, length): the snapshot's live
@@ -412,77 +456,6 @@ class Executer[D, R <: Product: TypeTag](
       }
     }
   }
-
-  /** Size-statistics ceiling on the batch auto-collect probe: a narrow
-    * batch whose optimized plan estimates past this many bytes is never
-    * take()-probed — the probe itself would scan row groups (and run any
-    * typed map) of a corpus-scale input on every build, only to
-    * overflow. Every batch the collect actually serves (micro-batches,
-    * dimension slices) is well under 1 MB of source; corpus scans that
-    * must stay distributed start around 2.5 MB — 2 MB splits them with
-    * the probe cost landing on neither. Env/prop tunable for
-    * deployments with different row widths. */
-  private val DriverBatchCollectMaxBytes =
-    sys.env.get("SPARK_GRAFT_BATCH_COLLECT_MAX_BYTES")
-      .orElse(sys.props.get("graft.batchCollectMaxBytes"))
-      .map(_.toLong).getOrElse(2L << 20)
-
-  /** Kill switch for the driver-direct parquet spelling of the tiny
-    * maintenance writes (tree rewrite, local map append/build). On by
-    * default: the files are produced by Spark's OWN parquet
-    * OutputWriter (same write support, footer metadata, codec and type
-    * encodings a write job's task uses — verified byte-compatible by
-    * ProbeDriverWrite + DriverWriteSpec), only the job scheduling and
-    * commit protocol around it are skipped. `0` restores the one-task
-    * Spark-job spelling everywhere. */
-  private val DriverParquetEnabled =
-    sys.env.get("SPARK_GRAFT_DRIVER_PARQUET")
-      .orElse(sys.props.get("graft.driverParquet"))
-      .forall(_ != "0")
-
-  /** Row ceiling on the full dirty-directory collect the driver-merge
-    * paths use (touched AND untouched rows — the merge rewrites whole
-    * directories, so collecting the retained rows lets the rewrite skip
-    * re-scanning them). [[DriverMergeMaxBytes]] already bounds the same
-    * content to ~1 MB of parquet; this caps pathological row counts
-    * (thousands of near-empty rows per KB) independently. Overflow
-    * falls back to the distributed spelling, results unchanged. */
-  private val DriverMergeMaxRows =
-    sys.env.get("SPARK_GRAFT_DRIVER_MERGE_MAX_ROWS")
-      .orElse(sys.props.get("graft.driverMergeMaxRows"))
-      .map(_.toInt).getOrElse(1 << 18)
-
-  /** Byte ceiling on the LIVE map_results content of the incoming
-    * parents that the driver-side probe read ([[readMapParentsDriver]])
-    * will scan in place of the stale-rows probe job. Larger than
-    * [[DriverMergeMaxBytes]] deliberately: the map read replaces a
-    * Spark job whose fixed cost buys a lot of single-threaded parquet
-    * decoding, and a 1-doc update on a corpus-scale store touches
-    * exactly one parent directory (~1/fanIn of the table). Measured
-    * (ProbeMapRead, map-shaped parents, min of 5): the driver read
-    * decodes ~9 MB/100 ms and the probe collect job costs 200–350 ms
-    * flat, so the read wins up to ~25 MB; 16 MB keeps a 2× margin.
-    * Row density is guarded separately ([[readMapParentsDriver]]'s
-    * footer row-count pre-check against [[DriverMergeMaxRows]]), so a
-    * pathologically row-dense parent bails on metadata, not after a
-    * wasted decode. Batches whose parents sum past either ceiling keep
-    * the pushed-down probe job unchanged. */
-  private val DriverMapReadMaxBytes =
-    sys.env.get("SPARK_GRAFT_DRIVER_MAP_READ_MAX_BYTES")
-      .orElse(sys.props.get("graft.driverMapReadMaxBytes"))
-      .map(_.toLong).getOrElse(16L << 20)
-
-  /** Byte ceiling on the reduce-tree content the fully-driver pruned
-    * recompute ([[rereducePrunedDriver]]'s job-free spelling) reads in
-    * place of its one collect job: the dirty keys' level-1 partials
-    * live in EVERY parent (sibling inclusion), so the read spans the
-    * whole level 1 plus the dirty level-2 fparts. Sized like
-    * [[DriverMapReadMaxBytes]] and for the same reason — the read
-    * replaces a whole job, not just its run time. */
-  private val DriverTreeReadMaxBytes =
-    sys.env.get("SPARK_GRAFT_DRIVER_TREE_READ_MAX_BYTES")
-      .orElse(sys.props.get("graft.driverTreeReadMaxBytes"))
-      .map(_.toLong).getOrElse(4L << 20)
 
   implicit private val encR: Encoder[R] = Encoders.product[R]
   implicit private val encKR: Encoder[(String, String, R)] =
@@ -813,9 +786,6 @@ class Executer[D, R <: Product: TypeTag](
     manifestCache.put(v, next)
   }
 
-  /** Rename every data file under `<destPath>.staging` into the
-    * destination (additive — existing files untouched), delete the
-    * staging dir, and return the new files' store-relative paths. */
   /** Hadoop `FileSystem.rename` reports many failures (destination
     * exists, source vanished, some HDFS permission/quota cases) by
     * returning FALSE rather than throwing. Every rename in a mutation
@@ -826,6 +796,9 @@ class Executer[D, R <: Product: TypeTag](
     if (!fs.rename(src, dest))
       throw new java.io.IOException(s"rename failed: $src -> $dest")
 
+  /** Rename every data file under `<destPath>.staging` into the
+    * destination (additive — existing files untouched), delete the
+    * staging dir, and return the new files' store-relative paths. */
   private def mergeStagedDir(destPath: String): Vector[String] = {
     val staging = new Path(s"$destPath.staging")
     val table = new Path(destPath).getName
@@ -901,17 +874,6 @@ class Executer[D, R <: Product: TypeTag](
     mergeStagedDir(destPath)
   }
 
-  /** Run tiny maintenance queries with 1-partition, non-adaptive
-    * shuffles. In the driver-pruned path every shuffle moves ≤
-    * [[DriverDirtyLimit]] rows by construction, but at the session's
-    * defaults each action still fans out into one Spark job per AQE
-    * stage at the full shuffle width — measured 25 jobs (~6 s of pure
-    * scheduler/commit latency) for a 1-document update. With AQE off and
-    * one shuffle partition the same update is a handful of single-stage
-    * jobs; the update cost becomes O(dirty), not O(session width).
-    * Safe to scope via session conf: the store lease guarantees no
-    * concurrent maintenance, and reads (query/queryAll) never pass
-    * through here. */
   /** Shuffle width for the distributed maintenance branch. Narrow
     * (8-wide, AQE off) ONLY when both hold: the store declares a small
     * shape (fanIn ≤ 32 parents), AND the batch itself is driver-small
@@ -928,6 +890,23 @@ class Executer[D, R <: Product: TypeTag](
       withTinyShuffle(8, codegenOff = false)(f)
     else f
 
+  /** [[withTinyShuffle]] sized for a driver-small batch: a tiny one
+    * runs single-partition and interpreted, a larger one at a fixed
+    * 8-wide with codegen on. */
+  private def withBatchShuffle[A](tiny: Boolean)(f: => A): A =
+    withTinyShuffle(if (tiny) 1 else 8, codegenOff = tiny)(f)
+
+  /** Run tiny maintenance queries with 1-partition, non-adaptive
+    * shuffles. In the driver-pruned path every shuffle moves ≤
+    * [[DriverDirtyLimit]] rows by construction, but at the session's
+    * defaults each action still fans out into one Spark job per AQE
+    * stage at the full shuffle width — measured 25 jobs (~6 s of pure
+    * scheduler/commit latency) for a 1-document update. With AQE off and
+    * one shuffle partition the same update is a handful of single-stage
+    * jobs; the update cost becomes O(dirty), not O(session width).
+    * Safe to scope via session conf: the store lease guarantees no
+    * concurrent maintenance, and reads (query/queryAll) never pass
+    * through here. */
   private def withTinyShuffle[A](
       parts: Int = 1, codegenOff: Boolean = true)(f: => A): A = {
     val saved = Seq(
@@ -1013,15 +992,6 @@ class Executer[D, R <: Product: TypeTag](
     }
   }
 
-  /** Document ids are case-insensitive (`Executer.cs:246-247,302`):
-    * normalize once at the boundary — with `UTF8String.toUpperCase`,
-    * the SAME uppercase the write path stores (SQL `upper()` and the
-    * driver-local map both use it). JDK `String.toUpperCase` diverges
-    * from it on non-ASCII under some default locales (tr-TR dotted i),
-    * which would make [[deleteDocuments]]/[[contributionsOf]] silently
-    * miss stored ids. */
-  private def normId(id: String): String = Executer.normDocId(id)
-
   // ---------------------------------------------------------------------
   // Ingest / update — mirrors `Executer.Execute` (`Executer.cs:31-45`)
   // ---------------------------------------------------------------------
@@ -1058,7 +1028,7 @@ class Executer[D, R <: Product: TypeTag](
     // A DISTRIBUTED batch that is actually driver-small is collected
     // once and re-planned as a LocalRelation, so every driver-local
     // fast path below (driver-side map, job-free probes, driver-merged
-    // delta, single-stage writes) applies to it — the reference's
+    // delta, driver-written files) applies to it — the reference's
     // single-node update model, recovered for callers that hand us a
     // small scan (a streaming micro-batch, a dimension-table read)
     // instead of createDataset rows. Gated on a SHUFFLE-FREE plan —
@@ -1091,8 +1061,6 @@ class Executer[D, R <: Product: TypeTag](
       // LocalRelation plan (no persist, no materialization job), the
       // batch's new dirty pairs are computable without any Spark job,
       // and the cluster never re-executes the map function for it.
-      // `UTF8String.toUpperCase` matches the SQL `upper()` exactly
-      // (JDK-locale upper would diverge on e.g. dotted-I).
       val localDocRows: Option[Seq[D]] =
         if (localSmall) Some(docsL.collect().toSeq) else None
       // One version per document per batch — REJECTED LOUDLY otherwise.
@@ -1131,18 +1099,22 @@ class Executer[D, R <: Product: TypeTag](
             "must emit (documentId(doc), entry) pairs — any other id " +
             "corrupts delete-and-invalidate (rows persist under the " +
             "emitted id, invalidation keys on documentId)")
-      localDocRows.foreach { ds =>
-        val ids = ds.map(d => org.apache.spark.unsafe.types.UTF8String
-          .fromString(t.documentId(d)).toUpperCase.toString)
-        val seen = scala.collection.mutable.HashSet.empty[String]
-        ids.foreach(id => if (!seen.add(id)) dupIdError(id))
-      }
+      // A local batch's ids are normalized once, in batch order: the
+      // duplicate check builds the set that the contract guard and the
+      // ids probe below both read.
+      val localIds: Option[scala.collection.Set[String]] =
+        localDocRows.map { ds =>
+          val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+          ds.foreach { d =>
+            val id = Executer.normDocId(t.documentId(d))
+            if (!seen.add(id)) dupIdError(id)
+          }
+          seen
+        }
       val localMapped: Option[Seq[(String, String, R)]] = localDocRows.map { ds =>
-        val batchIds = ds.iterator.map(d => org.apache.spark.unsafe.types
-          .UTF8String.fromString(t.documentId(d)).toUpperCase.toString).toSet
+        val batchIds = localIds.get
         t.map(ds.iterator).map { case (id, r) =>
-          val norm = org.apache.spark.unsafe.types.UTF8String.fromString(id)
-            .toUpperCase.toString
+          val norm = Executer.normDocId(id)
           if (!batchIds.contains(norm)) contractError(id)
           (norm, t.reduceKey(r), r)
         }.toSeq
@@ -1162,8 +1134,7 @@ class Executer[D, R <: Product: TypeTag](
             // never flagged; a violating id escapes only on a 64-bit
             // collision with some consumed id (~n·2⁻⁶⁴ per emit).
             def h64(s: String): Long = {
-              val norm = org.apache.spark.unsafe.types.UTF8String
-                .fromString(s).toUpperCase.toString
+              val norm = Executer.normDocId(s)
               (scala.util.hashing.MurmurHash3.stringHash(norm).toLong << 32) |
                 (norm.hashCode.toLong & 0xffffffffL)
             }
@@ -1198,6 +1169,12 @@ class Executer[D, R <: Product: TypeTag](
         .withColumn("parent", $"bucket" / lit(config.fanIn) cast "int")
         .withColumn("seq", lit(batchSeq))
         .select("parent", "bucket", "reduce_key", "doc_id", "seq", "payload")
+      // A local batch's map files are written on the driver under the
+      // schema the job spelling persists from `mapped` (partition column
+      // excluded), so both spellings' files are interchangeable.
+      val localMapSchema: Option[org.apache.spark.sql.types.StructType] =
+        localMapped.map(_ => org.apache.spark.sql.types.StructType(
+          mapped.schema.filterNot(_.name == "parent")))
 
       // Incoming ids come from documentId over the *documents*, not from
       // map output: a doc that now maps to zero entries must still
@@ -1265,10 +1242,10 @@ class Executer[D, R <: Product: TypeTag](
           // A driver-local batch on a declared-small store skips the
           // clustering shuffle + cache entirely: the map rows are
           // already on the driver, so both reduce levels are computed
-          // as plain Scala group-reduces and each table lands as one
-          // single-stage write (buildFromLocalMap). Same WAL-first
+          // as plain Scala group-reduces and both tables land as
+          // driver-written files (buildFromLocalMap). Same WAL-first
           // crash contract either way.
-          if (localSmall) { buildFromLocalMap(localMapped.get, mapped, batchSeq); jobs += 2 }
+          if (localSmall) { buildFromLocalMap(localMapped.get, localMapSchema.get, batchSeq); jobs += 2 }
           else { buildFromMapOutput(mapped); jobs += 2 }
           clearDirtyLog()
         }
@@ -1278,16 +1255,12 @@ class Executer[D, R <: Product: TypeTag](
           (System.nanoTime() - t0) / 1000000))
       } else {
         // ---- probe 1: the incoming ids (bounded collect) --------------
-        // Local batches decode their ids on the driver (no job);
-        // `UTF8String.toUpperCase` matches the SQL `upper()` the
-        // distributed probe applies (JDK-locale upper would diverge on
-        // e.g. dotted-I). Distributed batches keep the bounded collect.
+        // Local batches already hold their normalized ids (no job);
+        // `Executer.normDocId` matches the SQL `upper()` the distributed
+        // probe applies (JDK-locale upper would diverge on e.g.
+        // dotted-I). Distributed batches keep the bounded collect.
         val idsProbe: Array[String] =
-          if (localSmall)
-            localDocRows.get.iterator
-              .map(d => org.apache.spark.unsafe.types.UTF8String
-                .fromString(t.documentId(d)).toUpperCase.toString)
-              .toArray.distinct
+          if (localSmall) localIds.get.toArray
           else {
             jobs += 1
             // Same single job as the old distinct-collect, but grouped
@@ -1313,8 +1286,7 @@ class Executer[D, R <: Product: TypeTag](
         // per-doc directory lookup (`Executer.cs:245-250`).
         val incomingParents: Seq[Int] =
           if (idsSmall)
-            idsProbe.map(id =>
-              StableBucketHash.hash(id, config.buckets) / config.fanIn)
+            idsProbe.map(Executer.parentOf(_, config.fanIn))
               .distinct.sorted.toSeq
           else {
             jobs += 1
@@ -1360,7 +1332,7 @@ class Executer[D, R <: Product: TypeTag](
           // takes it to ~1/3). Such batches keep session width + AQE.
           def smallBatchWidth[A](f: => A): A =
             if (idsSmall)
-              withTinyShuffle(if (tinyBatch) 1 else 8, codegenOff = tinyBatch)(f)
+              withBatchShuffle(tinyBatch)(f)
             else f
           // The map-output append and the reduce-tree rewrite are
           // independent by construction: the tree job's level-0 input
@@ -1374,11 +1346,6 @@ class Executer[D, R <: Product: TypeTag](
           // and re-submitting the batch completes it.
           def startAppend(): () => Unit = {
             val session = spark
-            val mapDataSchema =
-              if (localSmall && DriverParquetEnabled)
-                org.apache.spark.sql.types.StructType(
-                  mapped.schema.filterNot(_.name == "parent"))
-              else null
             val fut = java.util.concurrent.CompletableFuture.supplyAsync { () =>
               // SQLConf.get in the job thread resolves via the active-
               // session thread-local; a fresh pool thread has none.
@@ -1386,25 +1353,26 @@ class Executer[D, R <: Product: TypeTag](
               // Driver-local batches write their per-parent files
               // directly (no job) and rename them in through the same
               // additive merge as the job spelling.
-              if (mapDataSchema != null)
-                appendMapDriverFiles(localMapped.get, batchSeq, mapDataSchema)
-              else {
-                // The append goes via staging: the merge's file renames
-                // are what tells the model EXACTLY which files this
-                // batch added — no listing diff that could adopt a
-                // crashed batch's orphans. The rename fan-out is pure
-                // filesystem work and merged files stay invisible until
-                // the model names them at publish, so it runs here,
-                // overlapping the tree rewrite, instead of serializing
-                // at join; only the model mutation stays on the writer
-                // thread. A crash between the renames and the publish
-                // leaves orphans compact() sweeps — the same contract
-                // as a crash before the renames.
-                mappedP.repartition($"parent")
-                  .sortWithinPartitions($"parent", $"reduce_key")
-                  .write.partitionBy("parent")
-                  .mode("overwrite").parquet(s"$mapResultsPath.staging")
-                mergeStagedDir(mapResultsPath)
+              localMapSchema match {
+                case Some(schema) =>
+                  appendMapDriverFiles(localMapped.get, batchSeq, schema)
+                case None =>
+                  // The append goes via staging: the merge's file renames
+                  // are what tells the model EXACTLY which files this
+                  // batch added — no listing diff that could adopt a
+                  // crashed batch's orphans. The rename fan-out is pure
+                  // filesystem work and merged files stay invisible until
+                  // the model names them at publish, so it runs here,
+                  // overlapping the tree rewrite, instead of serializing
+                  // at join; only the model mutation stays on the writer
+                  // thread. A crash between the renames and the publish
+                  // leaves orphans compact() sweeps — the same contract
+                  // as a crash before the renames.
+                  mappedP.repartition($"parent")
+                    .sortWithinPartitions($"parent", $"reduce_key")
+                    .write.partitionBy("parent")
+                    .mode("overwrite").parquet(s"$mapResultsPath.staging")
+                  mergeStagedDir(mapResultsPath)
               }
             }
             () => modelAddFiles(fut.join())
@@ -1422,20 +1390,21 @@ class Executer[D, R <: Product: TypeTag](
           // them without a second scan. The raw-row bound is tighter
           // than the old distinct-pair bound — overflow only routes to
           // the heavier distributed path, never changes results.
-          // Default spelling for local batches: ONE driver-side file
-          // read of the incoming parents' live map rows
-          // ([[readMapParentsDriver]] — the probe's whole input at
-          // ≤[[DriverMapReadMaxBytes]]) serves the stale probe with no
-          // Spark job AND, retained rows included, the pruned
-          // recompute's level-0 source below. Kill-switched /
-          // gate-tripped batches keep the bounded collect job.
+          // Local batches: ONE driver-side file read of the incoming
+          // parents' live map rows ([[readMapParentsDriver]] — the
+          // probe's whole input at ≤[[DriverMapReadMaxBytes]]) serves
+          // the stale probe with no Spark job AND, retained rows
+          // included, the pruned recompute's level-0 source below. A
+          // batch whose read gate trips (distributed tombstones, bytes
+          // past the ceiling, a read error) keeps the bounded collect
+          // job.
           var staleLocalRows: Option[Array[(String, Int, R)]] = None
           var liveParentRows: Option[Vector[(String, Int, String, Int, R)]] =
             None
           val (pairs, anyStale, probeOverflow) =
             if (localSmall) {
               val newPairs = localMapped.get.map { case (id, key, _) =>
-                (key, StableBucketHash.hash(id, config.buckets) / config.fanIn)
+                (key, Executer.parentOf(id, config.fanIn))
               }.distinct
               val driverProbe = readMapParentsDriver(incomingParents,
                 idsProbe.toSet)
@@ -1454,38 +1423,35 @@ class Executer[D, R <: Product: TypeTag](
                   if (!overflow && t.deltaReducible && t.singleOutput)
                     staleLocalRows = Some(staleRows)
                   (all, staleRows.nonEmpty, overflow)
+                case None if t.deltaReducible && t.singleOutput =>
+                  implicit val encKPR: Encoder[(String, Int, R)] =
+                    Encoders.tuple(Encoders.STRING, Encoders.scalaInt, encR)
+                  val rows = withBatchShuffle(tinyBatch)(
+                    stale.select($"reduce_key", $"parent", $"payload")
+                      .as[(String, Int, R)]
+                      .limit(DriverDirtyLimit + 1).collect())
+                  jobs += 1
+                  val all = (rows.iterator.map(r => (r._1, r._2))
+                    ++ newPairs.iterator).toSeq.distinct
+                  val overflow = rows.length > DriverDirtyLimit ||
+                    all.length > DriverDirtyLimit
+                  if (!overflow) staleLocalRows = Some(rows)
+                  (all, rows.nonEmpty, overflow)
                 case None =>
-              if (t.deltaReducible && t.singleOutput) {
-                implicit val encKPR: Encoder[(String, Int, R)] =
-                  Encoders.tuple(Encoders.STRING, Encoders.scalaInt, encR)
-                val rows = withTinyShuffle(if (tinyBatch) 1 else 8,
-                    codegenOff = tinyBatch)(
-                  stale.select($"reduce_key", $"parent", $"payload")
-                    .as[(String, Int, R)]
-                    .limit(DriverDirtyLimit + 1).collect())
-                jobs += 1
-                val all = (rows.iterator.map(r => (r._1, r._2))
-                  ++ newPairs.iterator).toSeq.distinct
-                val overflow = rows.length > DriverDirtyLimit ||
-                  all.length > DriverDirtyLimit
-                if (!overflow) staleLocalRows = Some(rows)
-                (all, rows.nonEmpty, overflow)
-              } else {
-              val staleRows = withTinyShuffle(if (tinyBatch) 1 else 8,
-                  codegenOff = tinyBatch)(
-                stale.select($"reduce_key", $"parent").distinct()
-                  .limit(DriverDirtyLimit + 1).collect())
-              jobs += 1
-              val all = (staleRows.iterator.map(r => (r.getString(0), r.getInt(1)))
-                ++ newPairs.iterator).toSeq.distinct
-              (all, staleRows.nonEmpty,
-                staleRows.length > DriverDirtyLimit || all.length > DriverDirtyLimit)
-              }
+                  val staleRows = withBatchShuffle(tinyBatch)(
+                    stale.select($"reduce_key", $"parent").distinct()
+                      .limit(DriverDirtyLimit + 1).collect())
+                  jobs += 1
+                  val all = (staleRows.iterator
+                    .map(r => (r.getString(0), r.getInt(1)))
+                    ++ newPairs.iterator).toSeq.distinct
+                  (all, staleRows.nonEmpty, staleRows.length > DriverDirtyLimit ||
+                    all.length > DriverDirtyLimit)
               }
             } else {
               val pairsProbe =
                 if (idsSmall)
-                  withTinyShuffle(if (tinyBatch) 1 else 8, codegenOff = tinyBatch)(
+                  withBatchShuffle(tinyBatch)(
                     dirtyDF.limit(DriverDirtyLimit + 1).collect())
                 else dirtyDF.limit(DriverDirtyLimit + 1).collect()
               jobs += 1
@@ -1560,17 +1526,16 @@ class Executer[D, R <: Product: TypeTag](
               if (!probeOverflow) writeDirtyLogLocal(pairs)
               else { writeDirtyLog(dirtyDF); jobs += 1 }
               // Driver merge, first half: gates + the bounded
-              // touched-state collect kicked async right after the WAL,
-              // so the collect's planning and run overlap the tombstone
-              // write and the append's driver prep below (it reads only
+              // touched-state read kicked async right after the WAL, so
+              // it overlaps the tombstone write and the append's driver
+              // prep below (it reads only
               // the reduce tree, which this batch mutates solely in the
               // final staged write).
               val mergeStart: Option[() => Boolean] =
                 staleLocalRows.flatMap(oldLoc =>
                   startRereduceDeltaDriver(oldLoc,
                     localMapped.get.map { case (id, key, r) =>
-                      (key, StableBucketHash.hash(id, config.buckets)
-                        / config.fanIn, r)
+                      (key, Executer.parentOf(id, config.fanIn), r)
                     }, pairs))
               if (anyStale) {
                 // Merge-on-read invalidation, same two spellings as the
@@ -1587,10 +1552,10 @@ class Executer[D, R <: Product: TypeTag](
                 else if (idsSmall)
                   existing.where($"doc_id".isin(idsProbe.toIndexedSeq: _*))
                 else existing.join(incomingIds, Seq("doc_id"), "left_semi")
-              // Driver merge, second half: join the overlapped collect
-              // and finish the plain-Scala merge + single-stage write.
-              // False (no state touched — the collect overflowed its
-              // cap) runs the distributed spelling as before.
+              // Driver merge, second half: join the overlapped read and
+              // finish the plain-Scala merge + driver-written tree.
+              // False (no state touched — the read overflowed its cap
+              // or failed) runs the distributed spelling as before.
               try {
                 val mergedLocally = mergeStart.exists(finish => finish())
                 if (!mergedLocally)
@@ -1736,8 +1701,7 @@ class Executer[D, R <: Product: TypeTag](
                   .filter(r => dp(r._2) && !idsSet(r._3))
                   .map(r => (r._1, r._2, r._5)) ++
                   localMapped.get.iterator.map { case (id, key, r) =>
-                    (key, StableBucketHash.hash(id, config.buckets)
-                      / config.fanIn, r)
+                    (key, Executer.parentOf(id, config.fanIn), r)
                   }).toVector
               }
             // Join the append before leaving the tiny-shuffle scope even
@@ -1889,31 +1853,6 @@ class Executer[D, R <: Product: TypeTag](
     } finally deltaPartials.unpersist()
   }
 
-  /** Driver-merge spelling of [[rereduceDelta]] for driver-local
-    * batches: the batch's old and new map rows are already on the
-    * driver (the pairs probe collected the stale rows WITH payloads),
-    * the touched partials/finals are ONE bounded pruned collect, the
-    * group merge is plain Scala over O(batch) rows, and the tree write
-    * becomes ONE single-stage job — the pruned untouched-key scans
-    * unioned with a LocalRelation of the merged rows, coalesced to one
-    * task. No exchange at all, no persist, versus the distributed
-    * spelling's 4 exchange stages whose fixed per-stage scheduling cost
-    * dominates a small update (measured: each stage of a tiny write
-    * job pays ~60–80ms regardless of data).
-    *
-    * Group semantics are IDENTICAL to [[rereduceDelta]]: the same
-    * reduce/negate applications over the same row multisets — partials
-    * merged per (key, parent) from stored-then-delta rows, finals per
-    * key from stored-then-delta-by-key rows, identity results dropped
-    * at both levels. Only intra-group input order can differ, which
-    * the delta contract (abelian group; DeltaUpdateSpec,
-    * ReReducibilityProps) makes immaterial.
-    *
-    * Scale posture: every driver-side structure is bounded — old rows
-    * and pairs by the probe's DriverDirtyLimit, the touched-state
-    * collect by its own limit, the one-task write by
-    * [[DriverMergeMaxDirs]] — and any trip returns false with NO state
-    * mutated, so the caller's distributed spelling runs unchanged. */
   /** Driver-side group reduce: the task's reduce() over each group in
     * encounter order (callers put stored rows before delta rows — the
     * distributed union's order; within a group the engine's contract is
@@ -1933,16 +1872,37 @@ class Executer[D, R <: Product: TypeTag](
     }.toVector
   }
 
-  /** First half of the driver merge: run the I/O-free gates and, if
-    * they pass, kick the bounded touched-state collect on a pool thread
-    * so it overlaps the caller's tombstone write and the append job's
-    * driver prep. The returned thunk joins the collect and completes
-    * the merge (or reports false for the distributed fallback when the
-    * collect overflowed its cap). None = a gate tripped, nothing
-    * started, caller runs the distributed spelling. The collect is
-    * read-only over the reduce tree, which this batch only mutates in
-    * the final staged write — so it cannot race the concurrent
-    * map-space writes (tombstones, append). */
+  /** Driver-merge spelling of [[rereduceDelta]] for driver-local
+    * batches: the batch's old and new map rows are already on the
+    * driver (the pairs probe fetched the stale rows WITH payloads), the
+    * touched partials/finals are ONE bounded driver-side read of the
+    * dirty directories, the group merge is plain Scala over O(batch)
+    * rows, and the tree write is driver-written parquet
+    * ([[writeTreeDriver]]) — no Spark job at all, versus the
+    * distributed spelling's 4 exchange stages whose fixed per-stage
+    * scheduling cost dominates a small update (measured: each stage of
+    * a tiny write job pays ~60–80ms regardless of data).
+    *
+    * Group semantics are IDENTICAL to [[rereduceDelta]]: the same
+    * reduce/negate applications over the same row multisets — partials
+    * merged per (key, parent) from stored-then-delta rows, finals per
+    * key from stored-then-delta-by-key rows, identity results dropped
+    * at both levels. Only intra-group input order can differ, which
+    * the delta contract (abelian group; DeltaUpdateSpec,
+    * ReReducibilityProps) makes immaterial.
+    *
+    * Two halves: this call runs the I/O-free gates and, if they pass,
+    * starts the read on a pool thread so it overlaps the caller's
+    * tombstone write and the append's driver prep. The returned thunk
+    * joins the read and completes the merge, or reports false when the
+    * read overflowed its cap or failed. None = a gate tripped, nothing
+    * started. Either way no state is mutated and the caller's
+    * distributed spelling runs unchanged. Every driver-side structure
+    * is bounded: old rows and pairs by the probe's DriverDirtyLimit,
+    * the read by [[DriverMergeMaxDirs]], [[DriverMergeMaxBytes]] and
+    * its row caps. The read covers only the reduce tree, which this
+    * batch mutates solely in the final staged write — so it cannot race
+    * the concurrent map-space writes (tombstones, append). */
   private def startRereduceDeltaDriver(
       oldLocal: Array[(String, Int, R)],
       newLocal: Seq[(String, Int, R)],
@@ -1959,52 +1919,28 @@ class Executer[D, R <: Product: TypeTag](
     if (treeFiles.map(_._3).sum > DriverMergeMaxBytes) return None
 
     val dirtyKeys = pairs.map(_._1).distinct
-    // One bounded fetch brings in the WHOLE dirty directories (both
-    // levels): the touched rows feed the merge, and the untouched
-    // (retained) rows let the tree rewrite skip re-scanning the
-    // directories it is about to replace — the write becomes pure
-    // driver-resident data. Touched rows keep their own 4×-pair cap (a
-    // wide-fan-out batch can touch |dirty keys| × fanIn partials); the
-    // total is capped by [[DriverMergeMaxRows]] on top of the byte gate
-    // above. Only a trip past either cap falls back.
-    // Default spelling: a plain driver-side read of the gate's own live
-    // file list (no job, no per-batch plan analysis). Kill-switched
-    // spelling ([[DriverReadEnabled]] off): one bounded collect job.
-    // Either way the fetch runs on a pool thread so it overlaps the
-    // caller's tombstone write and append.
+    // One bounded driver-side read of the gate's own live file list
+    // brings in the WHOLE dirty directories (both levels): the touched
+    // rows feed the merge, and the untouched (retained) rows let the
+    // tree rewrite skip re-scanning the directories it is about to
+    // replace — the write becomes pure driver-resident data. Touched
+    // rows keep their own 4×-pair cap (a wide-fan-out batch can touch
+    // |dirty keys| × fanIn partials); the total is capped by
+    // [[DriverMergeMaxRows]] on top of the byte gate above. Only a trip
+    // past either cap falls back.
     val touchedCap = 4 * DriverDirtyLimit
     val allCap = math.max(touchedCap, DriverMergeMaxRows)
     val session = spark
     val touchedFut = java.util.concurrent.CompletableFuture.supplyAsync {
       () =>
         org.apache.spark.sql.SparkSession.setActiveSession(session)
-        if (DriverReadEnabled)
-          try readTreeFilesDriver(treeFiles, allCap).map(_.toArray).orNull
-          catch { case scala.util.control.NonFatal(_) => null }
-        else {
-          val prunedPartials = readPartials()
-            .where($"parent".isin(dirtyParents.map(Integer.valueOf): _*))
-          val prunedFinals = readFinals()
-            .where($"fpart".isin(dirtyFparts.map(Integer.valueOf): _*))
-          implicit val encTree: Encoder[(String, R, Int, Int)] =
-            Encoders.tuple(
-              Encoders.STRING, encR, Encoders.scalaInt, Encoders.scalaInt)
-          val rows = tagLevel1(prunedPartials)
-            .unionByName(tagLevel2(prunedFinals))
-            .select($"reduce_key", $"payload", $"level", $"part")
-            .as[(String, R, Int, Int)]
-            .limit(allCap + 1).collect()
-          if (rows.length > allCap) null else rows
-        }
+        try readTreeFilesDriver(treeFiles, allCap)
+        catch { case scala.util.control.NonFatal(_) => None }
     }
-    Some(() => {
-      val collected = touchedFut.join()
-      if (collected == null) false
-      else {
+    Some(() => touchedFut.join().exists { fetched =>
       val dirtyKeySet = dirtyKeys.toSet
-      val (touched, untouched) = collected.partition(r => dirtyKeySet(r._1))
-      if (touched.length > touchedCap) false
-      else {
+      val (touched, untouched) = fetched.partition(r => dirtyKeySet(r._1))
+      touched.length <= touchedCap && {
         val delta0 =
           oldLocal.iterator.map { case (k, p, r) => ((k, p), t.negate(r)) } ++
             newLocal.iterator.map { case (k, p, r) => ((k, p), r) }
@@ -2025,19 +1961,16 @@ class Executer[D, R <: Product: TypeTag](
           mergedPartials, mergedFinals, untouched)
         true
       }
-      }
     })
   }
 
   /** Shared tail of the driver-merge paths: rewrite the dirty tree
     * directories entirely from driver-resident rows — the retained
-    * (untouched-key) rows arrived in the same bounded collect that
-    * fetched the touched state, so the rewrite re-scans nothing.
-    * Default spelling: driver-written parquet files straight into the
-    * staging layout, swapped in by the identical publication machinery —
-    * ZERO Spark jobs. Kill-switched spelling
-    * ([[DriverParquetEnabled]] off): one single-stage LocalRelation
-    * write job. */
+    * (untouched-key) rows arrived in the same bounded fetch as the
+    * touched state, so the rewrite re-scans nothing. Driver-written
+    * parquet files go straight into the staging layout and are swapped
+    * in by the same publication machinery as a job write — ZERO Spark
+    * jobs. */
   private def writeTreeDriver(
       dirtyParents: Seq[Int], dirtyFparts: Seq[Int],
       localPartials: Seq[((String, Int), R)],
@@ -2046,33 +1979,25 @@ class Executer[D, R <: Product: TypeTag](
     val localRows: Seq[(String, R, Int, Int)] =
       localPartials.map { case ((k, p), r) => (k, r, 1, p) } ++
         localFinals.map { case (k, r) => (k, r, 2, fpartOf(k)) }
-    val dirs = dirtyParents.map(p => s"level=1/part=$p") ++
-      dirtyFparts.map(fp => s"level=2/part=$fp")
-    val all = untouched ++ localRows
-    if (DriverParquetEnabled) stageTreeDriverFiles(all, dirs)
-    else {
-      implicit val encTree: Encoder[(String, R, Int, Int)] = Encoders.tuple(
-        Encoders.STRING, encR, Encoders.scalaInt, Encoders.scalaInt)
-      val treeOut = spark.createDataset(all.toSeq)
-        .toDF("reduce_key", "payload", "level", "part")
-        .coalesce(1)
-      stageAndOverwriteTree(treeOut, dirs, clustered = true)
-    }
+    replaceDirs("reduce_tree",
+      dirtyParents.map(p => s"level=1/part=$p") ++
+        dirtyFparts.map(fp => s"level=2/part=$fp"),
+      stageTreeDriverFiles(untouched ++ localRows))
   }
 
   /** Driver spelling of [[rereducePruned]]: the dirty keys' post-update
     * level-0 rows (in the dirty parents) and their level-1 partials (in
     * the OTHER parents) land in one bounded tagged-union collect, both
     * reduce levels run as plain Scala group-reduces, and the dirty
-    * directories are rewritten by the shared single-stage
-    * [[writeTreeDriver]] job — versus the distributed spelling's
+    * directories are rewritten by the shared job-free
+    * [[writeTreeDriver]] — versus the distributed spelling's
     * multi-exchange write whose fixed per-stage cost dominates a small
     * update. Recompute semantics are identical: dirty (key, parent)
     * partials rebuilt from ALL their surviving level-0 rows (sibling
     * inclusion), dirty keys' finals rebuilt from other-parent partials
     * plus the new ones, a key with no surviving rows simply produces no
     * rows. Bounded everywhere (pair count by the caller's probe, the
-    * collect by its cap, the one-task write by [[DriverMergeMaxDirs]]);
+    * collect by its cap, the rewrite by [[DriverMergeMaxDirs]]);
     * a trip returns false with no state mutated and the distributed
     * spelling runs unchanged. */
   private def rereducePrunedDriver(
@@ -2180,8 +2105,9 @@ class Executer[D, R <: Product: TypeTag](
     * (key, parent) pairs are known on the driver, so scans filter with
     * pushed-down predicates instead of joins. Semantics identical to
     * [[rereduce]] (sibling inclusion per parent, empty groups disappear,
-    * finals rebuilt per dirty key). */
-  /** @param level0Source the post-update map rows of the dirty parents
+    * finals rebuilt per dirty key).
+    *
+    * @param level0Source the post-update map rows of the dirty parents
     *   (either an in-memory plan over still-live file snapshots + cached
     *   map output, or a pruned re-read of the rewritten table). */
   private def rereducePruned(
@@ -2231,12 +2157,6 @@ class Executer[D, R <: Product: TypeTag](
       clustered)
   }
 
-  /** Incrementally rebuild level-1 partials for the dirty (key, parent)
-    * pairs, then finals for the dirty keys — the reference's two-pass
-    * reduce driver (`Executer.cs:37-43,47-85`) as two partition-pruned
-    * groupBy passes. Dirty level-1 parents are rebuilt from scratch from
-    * all their children (sibling inclusion, `Executer.cs:323-333`), never
-    * diffed. */
   /** Full (re)build of both reduce levels from the whole map_results
     * table — the initial-build path, and crash recovery for it. Both
     * levels land in ONE overwrite job (same shape as the incremental
@@ -2370,68 +2290,31 @@ class Executer[D, R <: Product: TypeTag](
   /** Driver spelling of [[buildFromMapOutput]] for driver-local batches:
     * the map rows are already on the driver, so both reduce levels are
     * computed as plain Scala group-reduces (the same contiguous runs the
-    * clustered streaming pass would form) and each table lands as ONE
-    * single-stage, single-task write from a LocalRelation — no shuffle,
-    * no cache, no clustering pass at all. The map write still overlaps
-    * the tree write through the same async pattern, and the crash
-    * contract is identical: the caller's FullRebuild WAL sentinel
-    * precedes both writes, each commits atomically, recovery replays
-    * rereduceAll over whatever map state committed. */
+    * clustered streaming pass would form) and both tables land as
+    * driver-written parquet files — a small first build runs with ZERO
+    * Spark jobs. The map write still overlaps the tree write through
+    * the same async pattern, and the crash contract is identical: the
+    * caller's FullRebuild WAL sentinel precedes both writes, each
+    * commits atomically, recovery replays rereduceAll over whatever map
+    * state committed. */
   private def buildFromLocalMap(
-      rows: Seq[(String, String, R)], mapOut: DataFrame,
+      rows: Seq[(String, String, R)],
+      mapDataSchema: org.apache.spark.sql.types.StructType,
       batchSeq: Int): Unit = {
-    // (key, parent, payload) triples for the driver-side reduces; the
-    // TABLE write (job spelling) reuses the caller's `mapped`
-    // LocalRelation plan (same derived columns the distributed build
-    // writes), coalesced to one task so the partitioned write stays
-    // single-stage. Default spelling: both tables land as
-    // driver-written parquet files — a small first build runs with
-    // ZERO Spark jobs (same files, same publication, WAL-first crash
-    // contract unchanged).
-    val triples = rows.map { case (id, key, r) =>
-      (key, StableBucketHash.hash(id, config.buckets) / config.fanIn, r)
-    }
-    val mapDataSchema =
-      if (DriverParquetEnabled)
-        org.apache.spark.sql.types.StructType(
-          mapOut.schema.filterNot(_.name == "parent"))
-      else null
-    val mapArranged =
-      if (DriverParquetEnabled) null
-      else mapOut.coalesce(1).sortWithinPartitions($"parent", $"reduce_key")
     val session = spark
     val fut = java.util.concurrent.CompletableFuture.supplyAsync { () =>
       org.apache.spark.sql.SparkSession.setActiveSession(session)
-      if (DriverParquetEnabled)
-        appendMapDriverFiles(rows, batchSeq, mapDataSchema)
-      else {
-        mapArranged.write.partitionBy("parent").mode("overwrite")
-          .parquet(s"$mapResultsPath.staging")
-        mergeStagedDir(mapResultsPath)
-      }
+      appendMapDriverFiles(rows, batchSeq, mapDataSchema)
     }
     try {
-      val partials = reduceGroupsLocal(
-        triples.iterator.map { case (k, p, r) => ((k, p), r) })
+      val partials = reduceGroupsLocal(rows.iterator.map { case (id, key, r) =>
+        ((key, Executer.parentOf(id, config.fanIn)), r)
+      })
       val finals = reduceGroupsLocal(
         partials.iterator.map { case ((k, _), r) => (k, r) })
-      val treeRows: Seq[(String, R, Int, Int)] =
+      replaceTable("reduce_tree", stageTreeDriverFiles(
         partials.map { case ((k, p), r) => (k, r, 1, p) } ++
-          finals.map { case (k, r) => (k, r, 2, fpartOf(k)) }
-      if (DriverParquetEnabled) {
-        val staging = s"$treePath.staging"
-        fs.delete(new Path(staging), true)
-        writeTreeDriverFiles(treeRows, staging)
-        replaceTable("reduce_tree", mergeStagedDir(treePath))
-      } else {
-        implicit val encTree: Encoder[(String, R, Int, Int)] = Encoders.tuple(
-          Encoders.STRING, encR, Encoders.scalaInt, Encoders.scalaInt)
-        writePartitioned(
-          spark.createDataset(treeRows)
-            .toDF("reduce_key", "payload", "level", "part")
-            .coalesce(1),
-          treePath, Seq("level", "part"), clustered = true)
-      }
+          finals.map { case (k, r) => (k, r, 2, fpartOf(k)) }))
     } finally replaceTable("map_results", fut.join())
   }
 
@@ -2498,6 +2381,12 @@ class Executer[D, R <: Product: TypeTag](
       .toDF("reduce_key", "parent", "payload")
   }
 
+  /** Incrementally rebuild level-1 partials for the dirty (key, parent)
+    * pairs, then finals for the dirty keys — the reference's two-pass
+    * reduce driver (`Executer.cs:37-43,47-85`) as two partition-pruned
+    * groupBy passes. Dirty level-1 parents are rebuilt from scratch from
+    * all their children (sibling inclusion, `Executer.cs:323-333`), never
+    * diffed. */
   private def rereduce(dirty: DataFrame,
       collectedParents: Option[Array[Int]] = None): Unit = {
     val dirtyParents = collectedParents.getOrElse(
@@ -2641,14 +2530,6 @@ class Executer[D, R <: Product: TypeTag](
     * generation after it. */
   def snapshotVersion(): Long = readCurrentVersion()
 
-  /** [[queryAll]] as of an earlier published generation — the manifest
-    * layer's time-travel read (SURVEY §14): a generation's file list is
-    * immutable, and its replaced files survive on disk for
-    * `manifestRetention` generations AND `manifestGraceMs` after
-    * retirement (longer if no further mutations land; `compact()`
-    * reclaims immediately). Reading a generation whose manifest or data
-    * files have been GC'd fails with a file-not-found error — never a
-    * silently wrong answer. */
   /** The CDC invalidation surface: DISTINCT reduce keys touched by any
     * mutation published in generations `(sinceVersion, current]` — the
     * set a downstream consumer holding results as of `sinceVersion`
@@ -2713,6 +2594,14 @@ class Executer[D, R <: Product: TypeTag](
       .distinct()
   }
 
+  /** [[queryAll]] as of an earlier published generation — the manifest
+    * layer's time-travel read (SURVEY §14): a generation's file list is
+    * immutable, and its replaced files survive on disk for
+    * `manifestRetention` generations AND `manifestGraceMs` after
+    * retirement (longer if no further mutations land; `compact()`
+    * reclaims immediately). Reading a generation whose manifest or data
+    * files have been GC'd fails with a file-not-found error — never a
+    * silently wrong answer. */
   def queryAllAt(version: Long): DataFrame = {
     configChecked
     require(version >= 0, s"snapshot generations are >= 0, got $version")
@@ -3067,7 +2956,7 @@ class Executer[D, R <: Product: TypeTag](
         StructField("reduce_key", StringType), StructField("bucket", IntegerType)))
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
-      val id = normId(docId)
+      val id = Executer.normDocId(docId)
       val parent = Executer.parentOf(id, config.fanIn)
       readMapResults()
         .where($"parent" === parent && $"doc_id" === id)
@@ -3201,16 +3090,16 @@ class Executer[D, R <: Product: TypeTag](
     recoverLocked()
     val t0 = System.nanoTime()
     var jobs = 0
-    val ids = docIds.map(normId).distinct
+    val ids = docIds.map(Executer.normDocId).distinct
     if (ids.nonEmpty && exists(mapResultsPath)) {
       val batchSeq = bumpSeq()
       val parents = ids
-        .map(id => StableBucketHash.hash(id, config.buckets) / config.fanIn)
+        .map(id => Executer.parentOf(id, config.fanIn))
         .distinct.sorted
       val existing = readMapResults()
         .where($"parent".isin(parents.map(Integer.valueOf): _*))
       val tiny = ids.length <= 64
-      val pairs = withTinyShuffle(if (tiny) 1 else 8, codegenOff = tiny) {
+      val pairs = withBatchShuffle(tiny) {
         existing.where($"doc_id".isin(ids: _*))
           .select($"reduce_key", $"parent").distinct().collect()
           .map(r => (r.getString(0), r.getInt(1))).toSeq
@@ -3219,7 +3108,7 @@ class Executer[D, R <: Product: TypeTag](
         // WAL first, then tombstones — same crash ordering as execute.
         writeDirtyLogLocal(pairs)
         addTombstonesLocal(ids, batchSeq)
-        withTinyShuffle(if (tiny) 1 else 8, codegenOff = tiny) {
+        withBatchShuffle(tiny) {
           val dirtyParents = pairs.map(_._2).distinct.sorted
           val level0 = existing
             .where($"parent".isin(dirtyParents.map(Integer.valueOf): _*))
@@ -3333,8 +3222,7 @@ class Executer[D, R <: Product: TypeTag](
   // same footer metadata (spark schema JSON), same codec and type
   // encodings as a write job's task — only the job around it is skipped.
   // Read-back equivalence is pinned by DriverWriteSpec and the
-  // ProbeDriverWrite diagnostic; [[DriverParquetEnabled]] restores the
-  // job spelling.
+  // ProbeDriverWrite diagnostic.
   // ---------------------------------------------------------------------
 
   /** prepareWrite snapshots the session's parquet write options into a
@@ -3405,107 +3293,93 @@ class Executer[D, R <: Product: TypeTag](
     fs.delete(new Path(staging), true)
     // One file per parent, rows sorted by reduce_key — the file set a
     // single-task partitioned write job produces.
-    val ser = org.apache.spark.sql.catalyst.encoders.encoderFor(
-      Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.STRING,
-        Encoders.scalaInt, encR)).createSerializer()
-    rows.groupBy { case (id, _, _) =>
-      StableBucketHash.hash(id, config.buckets) / config.fanIn
-    }.foreach { case (parent, rs) =>
-      writeParquetFileDriver(dataSchema, s"$staging/parent=$parent",
-        rs.sortBy(_._2).iterator.map { case (id, key, r) =>
-          ser((StableBucketHash.hash(id, config.buckets), key, id,
-            batchSeq, r))
-        })
+    val ser = mapWriteEnc.createSerializer()
+    rows.groupBy(r => Executer.parentOf(r._1, config.fanIn)).foreach {
+      case (parent, rs) =>
+        writeParquetFileDriver(dataSchema, s"$staging/parent=$parent",
+          rs.sortBy(_._2).iterator.map { case (id, key, r) =>
+            ser((StableBucketHash.hash(id, config.buckets), key, id,
+              batchSeq, r))
+          })
     }
     mergeStagedDir(mapResultsPath)
   }
 
-  /** Stage the given tree rows as driver-written parquet files (one per
-    * dirty directory, sorted by reduce_key for the same row-group stats
-    * the clustered job write produces), then publish them through the
-    * IDENTICAL machinery as the job spelling: additive merge + retire of
-    * the replaced dirs. */
+  /** Stage the given tree rows as driver-written parquet files — one
+    * per (level, part) directory, rows sorted by reduce_key: the file
+    * set the clustered single-task tree write job produces — and merge
+    * them in through the same additive [[mergeStagedDir]] as a job
+    * write. Returns the new store-relative paths for the caller to
+    * publish. */
   private def stageTreeDriverFiles(
-      rows: Iterable[(String, R, Int, Int)], dirs: Seq[String]): Unit = {
+      rows: Iterable[(String, R, Int, Int)]): Vector[String] = {
     val staging = s"$treePath.staging"
     fs.delete(new Path(staging), true)
-    writeTreeDriverFiles(rows, staging)
-    replaceDirs("reduce_tree", dirs, mergeStagedDir(treePath))
-  }
-
-  /** One driver-written parquet file per (level, part) directory under
-    * `root`, rows sorted by reduce_key — the file set the clustered
-    * single-task tree write job produces. */
-  private def writeTreeDriverFiles(
-      rows: Iterable[(String, R, Int, Int)], root: String): Unit = {
     val ser = treeWriteEnc.createSerializer()
     rows.groupBy(r => (r._3, r._4)).foreach { case ((level, part), rs) =>
       writeParquetFileDriver(treeWriteSchema,
-        s"$root/level=$level/part=$part",
-        rs.toArray.sortBy(_._1).iterator
-          .map(r => ser((r._1, r._2))))
+        s"$staging/level=$level/part=$part",
+        rs.toArray.sortBy(_._1).iterator.map(r => ser((r._1, r._2))))
     }
+    mergeStagedDir(treePath)
   }
 
-  /** Kill switch for the driver-side tree READ (the delta merge's
-    * touched-state fetch as a plain file read instead of a Spark
-    * collect job). `0` restores the collect-job spelling. */
-  private val DriverReadEnabled =
-    sys.env.get("SPARK_GRAFT_DRIVER_READ")
-      .orElse(sys.props.get("graft.driverRead"))
-      .forall(_ != "0")
+  /** Spark's own parquet reader function per data schema — the exact
+    * row-mode reader a scan task runs (same read support, same per-file
+    * datetime-rebase resolution), built once per schema like the write
+    * side's [[pqFactory]]. */
+  private val pqReadFns = new java.util.concurrent.ConcurrentHashMap[
+    StructType,
+    org.apache.spark.sql.execution.datasources.PartitionedFile =>
+      Iterator[org.apache.spark.sql.catalyst.InternalRow]]()
 
-  /** Spark's own parquet reader function over the tree's data schema —
-    * the exact row-mode reader a scan task runs (same read support,
-    * same per-file datetime-rebase resolution), built once. Driving it
-    * on the driver thread turns a ≤[[DriverMergeMaxBytes]] dirty-
-    * directory fetch into a plain file read: no job, no per-batch plan
-    * analysis. */
-  private lazy val treeDriverReadFn = {
-    val fmt = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat()
-    fmt.buildReaderWithPartitionValues(
-      spark, treeWriteSchema, new StructType(), treeWriteSchema, Nil,
-      Map(org.apache.spark.sql.execution.datasources.FileFormat
-        .OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
+  /** Every row of one live parquet data file under `schema`, read on
+    * the driver thread — no job, no per-batch plan analysis. The file
+    * is always drained to exhaustion: its reader closes only at the end,
+    * and with no TaskContext there is no completion hook to do it. */
+  private def foreachRowDriver(schema: StructType, p: Path, len: Long)(
+      f: org.apache.spark.sql.catalyst.InternalRow => Unit): Unit = {
+    val read = pqReadFns.computeIfAbsent(schema, s =>
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat().buildReaderWithPartitionValues(
+          spark, s, new StructType(), s, Nil,
+          Map(org.apache.spark.sql.execution.datasources.FileFormat
+            .OPTION_RETURNING_BATCH -> "false"),
+          spark.sessionState.newHadoopConf()))
+    read(new org.apache.spark.sql.execution.datasources.PartitionedFile(
+      org.apache.spark.sql.catalyst.InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPath(p), 0L, len,
+      Array.empty[String], 0L, len,
+      scala.collection.immutable.Map.empty)).foreach(f)
   }
+
   private lazy val treeRowDeser =
     treeWriteEnc.resolveAndBind().createDeserializer()
 
   /** All rows of the given live tree files, read on the driver thread.
-    * None past `cap` rows — every file is still drained to exhaustion
-    * (the row iterator closes its reader only at the end; with no
-    * TaskContext there is no completion hook to do it for us). */
+    * None past `cap` rows. */
   private def readTreeFilesDriver(
       files: Seq[((Int, Int), Path, Long)], cap: Int)
       : Option[Vector[(String, R, Int, Int)]] = {
     val out = Vector.newBuilder[(String, R, Int, Int)]
     var n = 0
-    var over = false
     files.foreach { case ((level, part), p, len) =>
-      val pf = new org.apache.spark.sql.execution.datasources.PartitionedFile(
-        org.apache.spark.sql.catalyst.InternalRow.empty,
-        org.apache.spark.paths.SparkPath.fromPath(p), 0L, len,
-        Array.empty[String], 0L, len,
-        scala.collection.immutable.Map.empty)
-      val it = treeDriverReadFn(pf)
-      while (it.hasNext) {
-        val row = it.next()
-        if (!over) {
+      foreachRowDriver(treeWriteSchema, p, len) { row =>
+        if (n <= cap) {
           val (k, r) = treeRowDeser(row)
           out += ((k, r, level, part))
           n += 1
-          if (n > cap) over = true
         }
       }
     }
-    if (over) None else Some(out.result())
+    if (n > cap) None else Some(out.result())
   }
 
-  /** The map table's written data schema (partition column excluded) —
-    * what [[writeMapDriverFiles]] persists and what a partitioned write
-    * job's task persists — for the driver-side probe read. */
+  /** The map table's row codec without its partition column —
+    * (bucket, reduce_key, doc_id, seq, payload) — shared by the driver
+    * write's serializer and the driver-side probe read, whose schema is
+    * the written files' columns and types whichever spelling wrote
+    * them. */
   private lazy val mapWriteEnc =
     org.apache.spark.sql.catalyst.encoders.encoderFor(
       Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.STRING,
@@ -3514,19 +3388,6 @@ class Executer[D, R <: Product: TypeTag](
     mapWriteEnc.schema.fields
       .zip(Seq("bucket", "reduce_key", "doc_id", "seq", "payload"))
       .map { case (f, n) => f.copy(name = n) })
-
-  /** Spark's own parquet reader function over the map table's data
-    * schema — the map-side sibling of [[treeDriverReadFn]]. */
-  private lazy val mapDriverReadFn = {
-    val fmt = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat()
-    fmt.buildReaderWithPartitionValues(
-      spark, mapDriverDataSchema, new StructType(), mapDriverDataSchema,
-      Nil,
-      Map(org.apache.spark.sql.execution.datasources.FileFormat
-        .OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
-  }
   private lazy val mapRowDeser =
     mapWriteEnc.resolveAndBind().createDeserializer()
 
@@ -3551,14 +3412,13 @@ class Executer[D, R <: Product: TypeTag](
     *     probe on a 456k-row store profitable: ~90 ms of streaming
     *     decode vs a 200–350 ms collect job).
     *
-    * None when a whole-read gate trips — kill switch, distributed
-    * tombstones present (their parquet overlay stays on the job path),
-    * live bytes past [[DriverMapReadMaxBytes]], or a read error — and
-    * the caller runs the probe job unchanged. */
+    * None when a whole-read gate trips — distributed tombstones
+    * present (their parquet overlay stays on the job path), live bytes
+    * past [[DriverMapReadMaxBytes]], or a read error — and the caller
+    * runs the probe job unchanged. */
   private def readMapParentsDriver(parents: Seq[Int], idsSet: Set[String])
       : Option[(Vector[(String, Int, R)],
         Option[Vector[(String, Int, String, Int, R)]])] = {
-    if (!DriverReadEnabled) return None
     val snap = snapshotNow()
     if (tombDistNonEmpty(snap)) return None
     val files = liveMapFiles(parents, snap)
@@ -3571,15 +3431,7 @@ class Executer[D, R <: Product: TypeTag](
       var nAll = 0
       var allOver = false
       files.foreach { case (parent, p, len) =>
-        val pf =
-          new org.apache.spark.sql.execution.datasources.PartitionedFile(
-            org.apache.spark.sql.catalyst.InternalRow.empty,
-            org.apache.spark.paths.SparkPath.fromPath(p), 0L, len,
-            Array.empty[String], 0L, len,
-            scala.collection.immutable.Map.empty)
-        val it = mapDriverReadFn(pf)
-        while (it.hasNext) {
-          val row = it.next()
+        foreachRowDriver(mapDriverDataSchema, p, len) { row =>
           val (_, key, doc, seq, payload) = mapRowDeser(row)
           val dead = tomb.get(doc).exists(ts => seq < ts)
           if (!dead) {
@@ -3837,8 +3689,7 @@ class Executer[D, R <: Product: TypeTag](
     val local = tombLocalEntries(snap)
     val hasDist = tombDistNonEmpty(snap)
     if (snap.tombLocal.isEmpty && !hasDist) return
-    val localParents = local.map(t =>
-      StableBucketHash.hash(t._1, config.buckets) / config.fanIn)
+    val localParents = local.map(t => Executer.parentOf(t._1, config.fanIn))
     val distParents =
       if (hasDist)
         relFor(tombDistPath, tombSchema, snap)
@@ -3996,21 +3847,6 @@ class Executer[D, R <: Product: TypeTag](
       try in.readLong() finally in.close()
     }
 
-  /** Crash recovery: if a dirty log survives from an interrupted execute,
-    * re-run the re-reduce for it (idempotent — level-1 parents are rebuilt
-    * from scratch, §2.3.3/§2.3.4 of SURVEY.md). A [[FullRebuild]]
-    * sentinel replays the whole-build reduce. */
-  /** Consolidate fragmented `map_results` partitions. The pure-insert
-    * fast path appends one file per batch per touched partition (that is
-    * what makes inserts O(batch) — no read-rewrite), so a long
-    * append-mostly workload fragments the map table; reads stay correct
-    * but pay per-file open costs and lose row-group-skip efficiency
-    * (each small file is its own row group). `compact()` rewrites every
-    * partition holding more than `maxFilesPerPartition` data files into
-    * one file, through the same staged swap as incremental maintenance —
-    * an offline ops utility (driver lists ≤ fanIn directories; the data
-    * rewrite itself is a distributed job), safe to run between batches
-    * under the writer lease. */
   /** Migrate the store to a different tree layout (fanIn / finalParts)
     * by rebuilding from the PERSISTED map output — the user map is never
     * re-run and the source corpus is never touched, which is the point:
@@ -4064,6 +3900,17 @@ class Executer[D, R <: Product: TypeTag](
     dst
   }
 
+  /** Consolidate fragmented `map_results` partitions. The pure-insert
+    * fast path appends one file per batch per touched partition (that is
+    * what makes inserts O(batch) — no read-rewrite), so a long
+    * append-mostly workload fragments the map table; reads stay correct
+    * but pay per-file open costs and lose row-group-skip efficiency
+    * (each small file is its own row group). `compact()` rewrites every
+    * partition holding more than `maxFilesPerPartition` data files into
+    * one file, through the same staged swap as incremental maintenance —
+    * an offline ops utility (driver lists ≤ fanIn directories; the data
+    * rewrite itself is a distributed job), safe to run between batches
+    * under the writer lease. */
   def compact(maxFilesPerPartition: Int = 8): Unit = withLease {
     recoverLocked()
     // Fold tombstones first: dead rows are dropped from their partitions
@@ -4229,6 +4076,10 @@ class Executer[D, R <: Product: TypeTag](
       readDirtyLog().select("reduce_key", "parent").distinct().count()
     else 0L
 
+  /** Crash recovery: if a dirty log survives from an interrupted execute,
+    * re-run the re-reduce for it (idempotent — level-1 parents are rebuilt
+    * from scratch, §2.3.3/§2.3.4 of SURVEY.md). A [[FullRebuild]]
+    * sentinel replays the whole-build reduce. */
   def recover(): Unit = withLease(recoverLocked())
 
   private def recoverLocked(): Unit = {

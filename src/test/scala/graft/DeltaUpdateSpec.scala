@@ -174,12 +174,12 @@ class DeltaUpdateSpec extends AnyFunSuite {
 
   test("driver-merge and distributed delta spellings produce identical " +
       "state over the same churn schedule") {
-    // The driver-merge spelling (rereduceDeltaDriver) short-circuits
-    // driver-local batches: bounded collects + a plain-Scala group
-    // merge + one single-stage tree write. Pin its equivalence to the
-    // distributed spelling by running the SAME schedule with the merge
-    // force-disabled via its dirty-directory gate.
-    def run(store: String): Map[String, Long] = {
+    // The driver-merge spelling (startRereduceDeltaDriver) serves
+    // driver-local batches: a bounded driver-side read + a plain-Scala
+    // group merge + driver-written tree files. Pin its equivalence to
+    // the distributed spelling by submitting the SAME schedule as
+    // non-narrow `.repartition(2)` batches, which stay distributed.
+    def run(store: String, distributed: Boolean): Map[String, Long] = {
       val ex = new Executer(DeltaCountByState, store, cfg)
       val rnd = new scala.util.Random(7)
       for (_ <- 0 until 4) {
@@ -187,17 +187,14 @@ class DeltaUpdateSpec extends AnyFunSuite {
           val st = if (rnd.nextInt(8) == 0) "SKIP" else s"S${rnd.nextInt(6)}"
           Person(s"d$i", st)
         }
-        ex.execute(spark.createDataset(batch))
+        val ds = spark.createDataset(batch)
+        ex.execute(if (distributed) ds.repartition(2) else ds)
       }
       assert(ex.lastStats.get.mode == "delta")
       allCounts(ex)
     }
-    val merged = run(TestTmp.dir("graft-delta-dm-on"))
-    val old = sys.props.put("graft.driverMergeMaxDirs", "0")
-    val unmerged =
-      try run(TestTmp.dir("graft-delta-dm-off"))
-      finally old.fold(sys.props.remove("graft.driverMergeMaxDirs"))(
-        v => sys.props.put("graft.driverMergeMaxDirs", v))
+    val merged = run(TestTmp.dir("graft-delta-dm-on"), distributed = false)
+    val unmerged = run(TestTmp.dir("graft-delta-dm-off"), distributed = true)
     assert(merged == unmerged)
   }
 

@@ -18,32 +18,30 @@ object PlainCountByState extends MapReduceTask[Person, StatePop] {
   override def singleOutput: Boolean = true
 }
 
-/** The driver-direct parquet spelling of the tiny maintenance writes
-  * (round 16): the SAME schedule must produce the SAME maintained state
-  * AND the same logical tree-table content whether the files are
-  * written by Spark write jobs (`graft.driverParquet=0`) or directly on
-  * the driver through Spark's parquet OutputWriter (default). Also pins
-  * file-level interchangeability: a store written by one spelling is
-  * read and updated by the other. */
+/** The two spellings of a maintenance batch, chosen by its input: a
+  * local batch (createDataset rows) runs on the driver — driver-side
+  * map, probe read and tree merge, files written through Spark's
+  * parquet OutputWriter on the driver thread — while the same rows
+  * submitted as a non-narrow `.repartition(2)` batch run the job
+  * spelling (job-written map and tree files, collect probes). The SAME
+  * schedule must produce the SAME maintained state AND the same logical
+  * tree-table content either way, and a store written by one spelling
+  * is read and updated by the other. A local batch on a store holding
+  * distributed tombstones keeps its stale probe on the collect job;
+  * that spelling must match a fresh build of the final documents. */
 class DriverWriteSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
 
-  private def withProp[A](key: String, on: Boolean)(f: => A): A = {
-    val old = sys.props.get(key)
-    sys.props(key) = if (on) "1" else "0"
-    try f finally old match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
-  }
+  private def submit(ex: Executer[Person, _], b: Seq[Person],
+      distributed: Boolean): Unit =
+    ex.execute(
+      if (distributed) spark.createDataset(b).repartition(2)
+      else spark.createDataset(b))
 
-  private def withFlag[A](on: Boolean)(f: => A): A =
-    withProp("graft.driverParquet", on)(f)
-
-  private def schedule(seed: Int): Seq[Seq[Person]] = {
+  private def schedule(seed: Int, batches: Int): Seq[Seq[Person]] = {
     val rnd = new scala.util.Random(seed)
-    (0 until 5).map { _ =>
+    (0 until batches).map { _ =>
       rnd.shuffle((0 until 80).toList).take(30).map { i =>
         val st = if (rnd.nextInt(8) == 0) "SKIP" else s"S${rnd.nextInt(7)}"
         Person(s"d$i", st)
@@ -51,51 +49,54 @@ class DriverWriteSpec extends AnyFunSuite {
     }
   }
 
+  private def state(ex: Executer[Person, _]): Seq[String] =
+    ex.queryAll().collect().map(_.toString).sorted.toSeq
+
   private def runSchedule[RT <: Product](
       task: MapReduceTask[Person, RT], cfg: ExecuterConfig, store: String,
-      on: Boolean)(implicit tt: scala.reflect.runtime.universe.TypeTag[RT])
-      : (Seq[String], Seq[String]) = withFlag(on) {
+      distributed: Boolean)(
+      implicit tt: scala.reflect.runtime.universe.TypeTag[RT])
+      : (Seq[String], Seq[String]) = {
     val ex = new Executer(task, store, cfg)
-    schedule(7).foreach(b => ex.execute(spark.createDataset(b)))
-    val state = ex.queryAll().collect().map(_.toString).sorted.toSeq
+    schedule(7, 3).foreach(b => submit(ex, b, distributed))
     val tree = spark.read.parquet(s"$store/reduce_tree")
       .selectExpr("reduce_key", "payload.*", "level", "part")
       .collect().map(_.toString).sorted.toSeq
-    (state, tree)
+    (state(ex), tree)
   }
 
   test("delta-maintained store: driver-written files ≡ job-written files " +
       "(state and logical tree content), manifest layout") {
     val cfg = ExecuterConfig(fanIn = 8, finalParts = 4)
-    val (sOn, tOn) =
-      runSchedule(DeltaCountByState, cfg, TestTmp.dir("graft-dwon"), on = true)
-    val (sOff, tOff) =
-      runSchedule(DeltaCountByState, cfg, TestTmp.dir("graft-dwoff"), on = false)
-    assert(sOn == sOff, "maintained state diverged between write spellings")
-    assert(tOn == tOff, "tree-table content diverged between write spellings")
-    assert(sOn.nonEmpty && tOn.nonEmpty)
+    val (sLocal, tLocal) = runSchedule(DeltaCountByState, cfg,
+      TestTmp.dir("graft-dwlocal"), distributed = false)
+    val (sDist, tDist) = runSchedule(DeltaCountByState, cfg,
+      TestTmp.dir("graft-dwdist"), distributed = true)
+    assert(sLocal == sDist, "maintained state diverged between write spellings")
+    assert(tLocal == tDist, "tree-table content diverged between write spellings")
+    assert(sLocal.nonEmpty && tLocal.nonEmpty)
   }
 
   test("recompute-maintained store: driver-written ≡ job-written") {
     val cfg = ExecuterConfig(fanIn = 8, finalParts = 4)
-    val (sOn, tOn) =
-      runSchedule(PlainCountByState, cfg, TestTmp.dir("graft-dwonL"), on = true)
-    val (sOff, tOff) =
-      runSchedule(PlainCountByState, cfg, TestTmp.dir("graft-dwoffL"), on = false)
-    assert(sOn == sOff, "maintained state diverged between write spellings")
-    assert(tOn == tOff, "tree-table content diverged between write spellings")
-    assert(sOn.nonEmpty && tOn.nonEmpty)
+    val (sLocal, tLocal) = runSchedule(PlainCountByState, cfg,
+      TestTmp.dir("graft-dwlocalL"), distributed = false)
+    val (sDist, tDist) = runSchedule(PlainCountByState, cfg,
+      TestTmp.dir("graft-dwdistL"), distributed = true)
+    assert(sLocal == sDist, "maintained state diverged between write spellings")
+    assert(tLocal == tDist, "tree-table content diverged between write spellings")
+    assert(sLocal.nonEmpty && tLocal.nonEmpty)
   }
 
   test("spellings interoperate on one store: built by jobs, updated " +
       "driver-direct, then updated by jobs again") {
     val cfg = ExecuterConfig(fanIn = 8, finalParts = 4)
     val store = TestTmp.dir("graft-dwmix")
-    val batches = schedule(11)
+    val batches = schedule(11, 5)
     val model = scala.collection.mutable.Map[String, String]()
-    def apply(b: Seq[Person], on: Boolean): Unit = withFlag(on) {
+    def apply(b: Seq[Person], distributed: Boolean): Unit = {
       val ex = new Executer(DeltaCountByState, store, cfg)
-      ex.execute(spark.createDataset(b))
+      submit(ex, b, distributed)
       b.foreach(p => model(p.id) = p.state)
       val expected = model.values.filter(_ != "SKIP")
         .groupBy(identity).map { case (s, xs) => s -> xs.size.toLong }
@@ -103,34 +104,56 @@ class DriverWriteSpec extends AnyFunSuite {
         .map { case (_, s, c) => s -> c }.toMap
       assert(got == expected)
     }
-    apply(batches(0), on = false) // job-built store
-    apply(batches(1), on = true)  // driver-direct update reads job files
-    apply(batches(2), on = false) // job update reads driver-written files
-    apply(batches(3), on = true)
-    apply(batches(4), on = true)
+    apply(batches(0), distributed = true)  // job-built store
+    apply(batches(1), distributed = false) // driver-direct update reads job files
+    apply(batches(2), distributed = true)  // job update reads driver-written files
+    apply(batches(3), distributed = false)
+    apply(batches(4), distributed = false)
   }
 
-  test("the delta merge's driver-side tree read ≡ the collect-job " +
-      "spelling (state and logical tree content)") {
-    val cfg = ExecuterConfig(fanIn = 8, finalParts = 4)
-    val (sOn, tOn) = withProp("graft.driverRead", on = true)(
-      runSchedule(DeltaCountByState, cfg, TestTmp.dir("graft-dron"), on = true))
-    val (sOff, tOff) = withProp("graft.driverRead", on = false)(
-      runSchedule(DeltaCountByState, cfg, TestTmp.dir("graft-droff"), on = true))
-    assert(sOn == sOff, "maintained state diverged between read spellings")
-    assert(tOn == tOff, "tree-table content diverged between read spellings")
-    assert(sOn.nonEmpty && tOn.nonEmpty)
+  /** With `driverDirtyLimit = 8`, an 8-doc local build is followed by
+    * a 12-doc resubmit that runs distributed, so its tombstones land as
+    * a parquet append. Every later 4-doc local batch then finds the
+    * driver-side probe read gated off by those tombstones and runs its
+    * stale probe as the bounded collect job (4 stale rows + 4 new pairs
+    * stay within the limit, so the batch stays on the small-pairs
+    * path). The maintained state must equal a fresh build of the final
+    * documents. */
+  private def collectProbeMatchesFreshBuild[RT <: Product](
+      task: MapReduceTask[Person, RT], tag: String)(
+      implicit tt: scala.reflect.runtime.universe.TypeTag[RT]): Unit = {
+    val store = TestTmp.dir(s"graft-cp$tag")
+    val ex = new Executer(task, store,
+      ExecuterConfig(fanIn = 8, finalParts = 4, driverDirtyLimit = 8))
+    val rnd = new scala.util.Random(13)
+    val model = scala.collection.mutable.LinkedHashMap[String, Person]()
+    def run(b: Seq[Person]): Unit = {
+      ex.execute(spark.createDataset(b))
+      b.foreach(p => model(p.id) = p)
+    }
+    def batch(n: Int): Seq[Person] =
+      rnd.shuffle((0 until 16).toList).take(n).map { i =>
+        Person(s"d$i", if (rnd.nextInt(8) == 0) "SKIP" else s"S${rnd.nextInt(5)}")
+      }
+    run((0 until 8).map(i => Person(s"d$i", s"S${i % 5}")))
+    run(batch(12)) // at least 4 of its 12 ids are already stored
+    assert(new java.io.File(s"$store/tombstones").exists(),
+      "the resubmit must leave distributed tombstones")
+    for (_ <- 0 until 3) run(batch(4))
+    val fresh = new Executer(task, TestTmp.dir(s"graft-cpf$tag"),
+      ExecuterConfig(fanIn = 8, finalParts = 4))
+    fresh.execute(spark.createDataset(model.values.toSeq))
+    assert(state(ex) == state(fresh))
+    assert(state(ex).nonEmpty)
   }
 
-  test("the probe's driver-side map read + fully-driver pruned recompute " +
-      "≡ the collect-job spellings (non-delta task)") {
-    val cfg = ExecuterConfig(fanIn = 8, finalParts = 4)
-    val (sOn, tOn) = withProp("graft.driverRead", on = true)(
-      runSchedule(PlainCountByState, cfg, TestTmp.dir("graft-pron"), on = true))
-    val (sOff, tOff) = withProp("graft.driverRead", on = false)(
-      runSchedule(PlainCountByState, cfg, TestTmp.dir("graft-proff"), on = true))
-    assert(sOn == sOff, "maintained state diverged between read spellings")
-    assert(tOn == tOff, "tree-table content diverged between read spellings")
-    assert(sOn.nonEmpty && tOn.nonEmpty)
+  test("collect-job probe on a store with distributed tombstones " +
+      "≡ a fresh build (delta task)") {
+    collectProbeMatchesFreshBuild(DeltaCountByState, "d")
+  }
+
+  test("collect-job probe + pruned recompute on a store with distributed " +
+      "tombstones ≡ a fresh build (non-delta task)") {
+    collectProbeMatchesFreshBuild(PlainCountByState, "p")
   }
 }
