@@ -6,7 +6,9 @@ import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.functions.StableBucketHash
 
@@ -130,6 +132,101 @@ object Executer {
       org.apache.spark.sql.types.StringType, 42L).toInt
     val m = h % finalParts
     if (m < 0) m + finalParts else m
+  }
+
+  /** Spark's own parquet reader function per (session, data schema) —
+    * the exact row-mode reader a scan task runs (same read support, same
+    * per-file datetime-rebase resolution), built once like the write
+    * side's `pqFactory`. Bounded by eviction. */
+  private val pqReadFns = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, StructType),
+    org.apache.spark.sql.execution.datasources.PartitionedFile =>
+      Iterator[InternalRow]]()
+
+  /** Every row of one live parquet data file under `schema`, read on
+    * the driver thread — no job, no per-call plan analysis. ONE reader
+    * shared by the engine's maintenance reads and every driver key read
+    * ([[readKeysDriver]], so also the external reader). The file is
+    * always drained to exhaustion: its reader closes only at the end,
+    * and with no TaskContext there is no completion hook to do it. */
+  private[graft] def foreachRowDriver(spark: SparkSession, schema: StructType,
+      p: Path, len: Long)(f: InternalRow => Unit): Unit = {
+    if (pqReadFns.size > 64) pqReadFns.clear()
+    val read = pqReadFns.computeIfAbsent((spark, schema), _ =>
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat().buildReaderWithPartitionValues(
+          spark, schema, new StructType(), schema, Nil,
+          Map(org.apache.spark.sql.execution.datasources.FileFormat
+            .OPTION_RETURNING_BATCH -> "false"),
+          spark.sessionState.newHadoopConf()))
+    read(new org.apache.spark.sql.execution.datasources.PartitionedFile(
+      InternalRow.empty, org.apache.spark.paths.SparkPath.fromPath(p),
+      0L, len, Array.empty[String], 0L, len,
+      scala.collection.immutable.Map.empty)).foreach(f)
+  }
+
+  /** The live final-results files (store-relative) that can hold any of
+    * `keys` in generation `snap`: the level-2 files of the keys' fparts
+    * ([[fpartHash]]), so at most |keys| of the `finalParts` partitions.
+    * `finalParts` None (a store predating `_config`) keeps every level-2
+    * file — correct, just unpruned. */
+  private[graft] def finalFilesOf(snap: Snapshot, finalParts: Option[Int],
+      keys: Seq[String]): Vector[String] = {
+    val level2 = snap.live.getOrElse("reduce_tree", Vector.empty)
+      .filter(_.startsWith("reduce_tree/level=2/"))
+    if (keys.isEmpty) Vector.empty
+    else finalParts match {
+      case None => level2
+      case Some(n) =>
+        val dirs = keys.iterator
+          .map(k => s"reduce_tree/level=2/part=${fpartHash(k, n)}/").toSet
+        level2.filter(f => dirs(f.substring(0, f.lastIndexOf('/') + 1)))
+    }
+  }
+
+  /** `t` with every field, element and value nullable — the schema a
+    * Spark parquet scan reports for its files (file sources always read
+    * nullable), so a driver read keeps the Spark plan's exact types. */
+  private[graft] def readNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = readNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(readNullable(a.elementType), true)
+    case m: MapType =>
+      MapType(readNullable(m.keyType), readNullable(m.valueType), true)
+    case other => other
+  }
+
+  /** The final rows of `keys` in the given live level-2 files (from
+    * [[finalFilesOf]]), read on the driver thread: `schema` is the
+    * files' (reduce_key, payload) data schema; each row's `reduce_key`
+    * is compared as a `UTF8String` before the row is decoded, and only
+    * matching rows are kept. Returns a `LocalRelation`-backed frame of
+    * (reduce_key, payload) — its `collect` runs no Spark job — plus the
+    * files it opened. None when the files' summed bytes pass
+    * [[DriverTreeReadMaxBytes]]: the caller runs its Spark plan. Each
+    * file is statted first, so a reclaimed generation fails loudly
+    * here, before any row is read. */
+  private[graft] def readKeysDriver(spark: SparkSession, fs: FileSystem,
+      root: Path, files: Seq[String], keys: Seq[String],
+      schema: StructType): Option[(DataFrame, Seq[Path])] = {
+    val statted = files.map { rel =>
+      val p = new Path(root, rel)
+      (p, fs.getFileStatus(p).getLen)
+    }
+    if (statted.iterator.map(_._2).sum > DriverTreeReadMaxBytes) None
+    else {
+      val want = keys.iterator
+        .map(org.apache.spark.unsafe.types.UTF8String.fromString).toSet
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(schema)
+      val rows = new java.util.ArrayList[Row]()
+      statted.foreach { case (p, len) =>
+        foreachRowDriver(spark, schema, p, len) { r =>
+          if (want(r.getUTF8String(0))) rows.add(toRow(r).asInstanceOf[Row])
+        }
+      }
+      Some((spark.createDataFrame(rows, schema), statted.map(_._1)))
+    }
   }
 
   /** First path segment of a store-relative file path = its table. */
@@ -1245,7 +1342,7 @@ class Executer[D, R <: Product: TypeTag](
           // as plain Scala group-reduces and both tables land as
           // driver-written files (buildFromLocalMap). Same WAL-first
           // crash contract either way.
-          if (localSmall) { buildFromLocalMap(localMapped.get, localMapSchema.get, batchSeq); jobs += 2 }
+          if (localSmall) buildFromLocalMap(localMapped.get, localMapSchema.get, batchSeq)
           else { buildFromMapOutput(mapped); jobs += 2 }
           clearDirtyLog()
         }
@@ -2490,39 +2587,59 @@ class Executer[D, R <: Product: TypeTag](
   // ---------------------------------------------------------------------
 
   /** Final reduced values for one key; empty if absent
-    * (`Executer.cs:373-375`). Prunes to a single `fpart` partition. */
+    * (`Executer.cs:373-375`). Reads only the key's `fpart` partition of
+    * the generation published at call time, and reads it at call time:
+    * the rows are fetched on the driver into a local result whose
+    * `collect` runs no Spark job ([[Executer.readKeysDriver]]). A
+    * partition past the driver-read gate is served by the pruned Spark
+    * plan over that same generation instead. */
   def query(key: String): Dataset[R] = {
     configChecked
-    if (!exists(treePath)) spark.emptyDataset[R]
-    else readFinals()
-      .where($"fpart" === fpartOf(key) && $"reduce_key" === key)
-      .select("payload.*").as[R]
+    keysAt(snapshotNow(), Seq(key)).select("payload.*").as[R]
   }
 
-  /** Final reduced values for SEVERAL keys in one partition-pruned scan
-    * (the multi-key generalization of [[query]]): reads at most
-    * |distinct fparts of keys| ≤ |keys| of the `finalParts` partitions,
-    * where a [[queryAll]] fallback would scan them all. Returned as
-    * (reduce_key, payload fields) rows — several keys' values
-    * interleave, so the key column disambiguates; absent keys simply
-    * contribute no rows. */
+  /** Final reduced values for SEVERAL keys (the multi-key
+    * generalization of [[query]]): reads at most |distinct fparts of
+    * keys| ≤ |keys| of the `finalParts` partitions, where a [[queryAll]]
+    * fallback would scan them all — read at call time from the
+    * generation published then, exactly like [[query]] (driver read,
+    * or the pruned Spark plan past the gate). Returned as (reduce_key,
+    * payload fields) rows — several keys' values interleave, so the key
+    * column disambiguates; absent keys simply contribute no rows. */
   def queryKeys(keys: Seq[String]): DataFrame = {
     configChecked
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val outCols = $"reduce_key" +:
-      encR.schema.fieldNames.toSeq.map(f => col(s"payload.$f"))
-    if (keys.isEmpty || !exists(treePath)) {
-      val schema = StructType(
-        StructField("reduce_key", StringType) +: encR.schema.fields)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    } else {
-      val fparts = keys.map(fpartOf).distinct
-      readFinals()
-        .where($"fpart".isin(fparts.map(Integer.valueOf): _*) &&
-          $"reduce_key".isin(keys: _*))
-        .select(outCols: _*)
-    }
+    keysAt(snapshotNow(), keys).select($"reduce_key" +:
+      encR.schema.fieldNames.toSeq.map(f => col(s"payload.$f")): _*)
   }
+
+  /** The (reduce_key, payload) rows of `keys` in generation `snap`: the
+    * driver read of the keys' final partitions, or [[keysPlan]] when
+    * they pass the driver-read gate. */
+  private def keysAt(snap: Snapshot, keys: Seq[String]): DataFrame =
+    keysDriver(snap, keys).map(_._1).getOrElse(keysPlan(snap, keys))
+
+  /** The driver spelling of [[keysAt]], with the files it opened; None
+    * past the driver-read gate. */
+  private[graft] def keysDriver(snap: Snapshot, keys: Seq[String])
+      : Option[(DataFrame, Seq[Path])] =
+    Executer.readKeysDriver(spark, fs, new Path(storePath),
+      Executer.finalFilesOf(snap, Some(config.finalParts), keys), keys,
+      treeDataSchema)
+
+  /** The Spark-plan spelling of [[keysAt]]: a scan of `snap`'s final
+    * table pruned to the keys' fparts, the key predicate pushed down.
+    * Serves key sets whose partitions pass the driver-read gate. */
+  private[graft] def keysPlan(snap: Snapshot, keys: Seq[String]): DataFrame =
+    relFor(treePath, treeReadSchema, snap)
+      .where($"level" === 2 &&
+        $"part".isin(keys.map(fpartOf).distinct.map(Integer.valueOf): _*) &&
+        $"reduce_key".isin(keys: _*))
+      .select($"reduce_key", $"payload")
+
+  /** The generation a read at `version` resolves: the caller's view
+    * ([[snapshotNow]]) for −1, else that published generation. */
+  private[graft] def snapshotAt(version: Long): Snapshot =
+    if (version < 0) snapshotNow() else manifestAt(version)
 
   /** The currently-published snapshot generation, or −1 while nothing
     * is published. Pair with [[queryAllAt]] for stable time-travel
@@ -2543,7 +2660,11 @@ class Executer[D, R <: Product: TypeTag](
     * final keys. `compact()` prunes records older than
     * `manifestRetention` generations — asking past the pruning horizon
     * fails loudly, never silently under-reports; so does a store with
-    * no published generation yet. */
+    * no published generation yet. The records are read at call time,
+    * for the generations published then; a window whose every
+    * generation has only a local record is de-duplicated on the driver
+    * into a local result whose `collect` runs no Spark job, and any
+    * distributed record in the window is scanned by a distinct job. */
   def changedKeysSince(sinceVersion: Long): DataFrame = {
     configChecked
     val cur = readCurrentVersion()
@@ -2577,7 +2698,13 @@ class Executer[D, R <: Product: TypeTag](
         s"compact(); cannot answer since=$sinceVersion — refetch everything")
     val vs = (sinceVersion + 1) to cur
     val localKeys = vs.flatMap(readChangedLocal)
-    val localDF = spark.createDataset(localKeys.toSeq)(Encoders.STRING)
+    // A window of local records only (every driver-known batch) is
+    // de-duplicated on the driver: a local result, no distinct() job.
+    val dirs = vs.map(changedDistPath).filter(exists)
+    if (dirs.isEmpty)
+      return spark.createDataset(localKeys.distinct)(Encoders.STRING)
+        .toDF("reduce_key")
+    val localDF = spark.createDataset(localKeys)(Encoders.STRING)
       .toDF("reduce_key")
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val schema = StructType(Seq(StructField("reduce_key", StringType)))
@@ -2587,10 +2714,7 @@ class Executer[D, R <: Product: TypeTag](
     // driver-side analysis for a reader that may span hundreds of
     // generations at scale. The dirs are flat same-schema parquet, so a
     // single relation is semantically identical under the distinct.
-    val dirs = vs.map(changedDistPath).filter(exists)
-    (if (dirs.isEmpty) localDF
-     else localDF.unionByName(
-       spark.read.schema(schema).parquet(dirs: _*)))
+    localDF.unionByName(spark.read.schema(schema).parquet(dirs: _*))
       .distinct()
   }
 
@@ -2712,15 +2836,13 @@ class Executer[D, R <: Product: TypeTag](
   /** [[query]] as of an earlier published generation — the point-read
     * sibling of [[queryAllAt]]: the same immutable-snapshot semantics,
     * pruned to the key's single final partition exactly like a live
-    * point read (the snapshot's file list still carries partition
-    * paths, so the `part` filter prunes before any IO). */
+    * point read, and read at call time like one (driver read, or the
+    * pruned Spark plan past the gate). A generation whose manifest or
+    * data files were reclaimed fails loudly here, at the call. */
   def queryAt(key: String, version: Long): Dataset[R] = {
     configChecked
     require(version >= 0, s"snapshot generations are >= 0, got $version")
-    relFor(treePath, treeReadSchema, manifestAt(version))
-      .where($"level" === 2 && $"part" === fpartOf(key) &&
-        $"reduce_key" === key)
-      .select("payload.*").as[R]
+    keysAt(manifestAt(version), Seq(key)).select("payload.*").as[R]
   }
 
   /** Register generation `version` of this store as temp view `name` —
@@ -3275,6 +3397,15 @@ class Executer[D, R <: Product: TypeTag](
   private lazy val treeWriteSchema = StructType(
     treeWriteEnc.schema.fields.zip(Seq("reduce_key", "payload"))
       .map { case (f, n) => f.copy(name = n) })
+  /** [[treeWriteSchema]] as a parquet scan reports it (all nullable):
+    * the schema of the driver key reads, so their results carry the
+    * Spark plan's exact types. */
+  private lazy val treeDataSchema =
+    Executer.readNullable(treeWriteSchema).asInstanceOf[StructType]
+  /** The tree files' key column alone: a key-only driver read decodes
+    * no payload. */
+  private lazy val keyOnlySchema =
+    StructType(Seq(StructField("reduce_key", StringType)))
 
   /** Driver spelling of the map-output write for driver-local batches:
     * the rows are already on the driver, so the per-parent files are
@@ -3324,35 +3455,6 @@ class Executer[D, R <: Product: TypeTag](
     mergeStagedDir(treePath)
   }
 
-  /** Spark's own parquet reader function per data schema — the exact
-    * row-mode reader a scan task runs (same read support, same per-file
-    * datetime-rebase resolution), built once per schema like the write
-    * side's [[pqFactory]]. */
-  private val pqReadFns = new java.util.concurrent.ConcurrentHashMap[
-    StructType,
-    org.apache.spark.sql.execution.datasources.PartitionedFile =>
-      Iterator[org.apache.spark.sql.catalyst.InternalRow]]()
-
-  /** Every row of one live parquet data file under `schema`, read on
-    * the driver thread — no job, no per-batch plan analysis. The file
-    * is always drained to exhaustion: its reader closes only at the end,
-    * and with no TaskContext there is no completion hook to do it. */
-  private def foreachRowDriver(schema: StructType, p: Path, len: Long)(
-      f: org.apache.spark.sql.catalyst.InternalRow => Unit): Unit = {
-    val read = pqReadFns.computeIfAbsent(schema, s =>
-      new org.apache.spark.sql.execution.datasources.parquet
-        .ParquetFileFormat().buildReaderWithPartitionValues(
-          spark, s, new StructType(), s, Nil,
-          Map(org.apache.spark.sql.execution.datasources.FileFormat
-            .OPTION_RETURNING_BATCH -> "false"),
-          spark.sessionState.newHadoopConf()))
-    read(new org.apache.spark.sql.execution.datasources.PartitionedFile(
-      org.apache.spark.sql.catalyst.InternalRow.empty,
-      org.apache.spark.paths.SparkPath.fromPath(p), 0L, len,
-      Array.empty[String], 0L, len,
-      scala.collection.immutable.Map.empty)).foreach(f)
-  }
-
   private lazy val treeRowDeser =
     treeWriteEnc.resolveAndBind().createDeserializer()
 
@@ -3364,7 +3466,7 @@ class Executer[D, R <: Product: TypeTag](
     val out = Vector.newBuilder[(String, R, Int, Int)]
     var n = 0
     files.foreach { case ((level, part), p, len) =>
-      foreachRowDriver(treeWriteSchema, p, len) { row =>
+      Executer.foreachRowDriver(spark, treeWriteSchema, p, len) { row =>
         if (n <= cap) {
           val (k, r) = treeRowDeser(row)
           out += ((k, r, level, part))
@@ -3431,7 +3533,7 @@ class Executer[D, R <: Product: TypeTag](
       var nAll = 0
       var allOver = false
       files.foreach { case (parent, p, len) =>
-        foreachRowDriver(mapDriverDataSchema, p, len) { row =>
+        Executer.foreachRowDriver(spark, mapDriverDataSchema, p, len) { row =>
           val (_, key, doc, seq, payload) = mapRowDeser(row)
           val dead = tomb.get(doc).exists(ts => seq < ts)
           if (!dead) {
@@ -3802,19 +3904,38 @@ class Executer[D, R <: Product: TypeTag](
     val v = pending.version + 1
     if (v < 0) return
     def sentinelRecord(): Unit = {
-      val newKeys =
-        if (exists(treePath)) readFinals().select("reduce_key").distinct()
-        else spark.emptyDataFrame.withColumn("reduce_key", lit(""))
-          .where(lit(false))
-      val all =
-        if (exists(changedRebuildStaging))
-          newKeys.unionByName(
-            spark.read.schema(newKeys.schema).parquet(changedRebuildStaging))
-            .distinct()
-        else newKeys
-      all.write.mode("overwrite").parquet(changedDistPath(v))
-      if (exists(changedRebuildStaging))
-        fs.delete(new Path(changedRebuildStaging), true)
+      // No pre-rebuild keys staged (a first build) and a driver-small
+      // final table: the keys are read on the driver into a local
+      // record, so a local build runs no job at all.
+      val finals =
+        if (exists(changedRebuildStaging)) None
+        else Some(liveTreeFilesWhere((l, _) => l == 2))
+          .filter(_.iterator.map(_._3).sum <= DriverTreeReadMaxBytes)
+      finals match {
+        case Some(files) =>
+          val keys = scala.collection.mutable.LinkedHashSet.empty[String]
+          files.foreach { case (_, p, len) =>
+            Executer.foreachRowDriver(spark, keyOnlySchema, p, len) { r =>
+              keys += r.getUTF8String(0).toString
+            }
+          }
+          writeLocalAtomic(changedLocalPath(v)) { out =>
+            out.writeInt(keys.size); keys.foreach(writeStr(out, _))
+          }
+        case None =>
+          val newKeys =
+            if (exists(treePath)) readFinals().select("reduce_key").distinct()
+            else spark.emptyDataFrame.withColumn("reduce_key", lit(""))
+              .where(lit(false))
+          val all =
+            if (exists(changedRebuildStaging))
+              newKeys.unionByName(spark.read.schema(newKeys.schema)
+                .parquet(changedRebuildStaging)).distinct()
+            else newKeys
+          all.write.mode("overwrite").parquet(changedDistPath(v))
+          if (exists(changedRebuildStaging))
+            fs.delete(new Path(changedRebuildStaging), true)
+      }
     }
     if (exists(dirtyLocalPath)) {
       val pairs = readDirtyLogLocal()

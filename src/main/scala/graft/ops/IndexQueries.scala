@@ -602,7 +602,7 @@ object IndexQueries {
     * q41b (the retained pre-update generation): both only READ once
     * built, so oracle isolation holds, and the sweep pays the build
     * exactly once. Returns (executer, pre-update snapshot version). */
-  private def ordersByPriorityUpdated(
+  private[graft] def ordersByPriorityUpdated(
       s: SparkSession, dir: String): (Executer[OrderDoc, PriorityAgg], Long) = {
     implicit val spark: SparkSession = s
     import s.implicits._

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 import graft.core.Executer
 
@@ -30,7 +30,8 @@ import graft.core.Executer
   * the head.
   *
   * Reads final results ([[finals]]/[[pointQuery]]/[[keysQuery]] — the
-  * reference's whole query surface, `MapReduce/Executer.cs:370-377`)
+  * reference's whole query surface, `MapReduce/Executer.cs:370-377`;
+  * the key reads fetch their rows on the driver at call time)
   * and, since r15, by-key provenance ([[contributors]]), which carries
   * the merge-on-read tombstone overlay externally via the shared
   * tombstone codec — so a reader fleet wanting provenance no longer
@@ -143,73 +144,123 @@ object StoreReader {
 
   /** One key's final value — the reference's entire query surface
     * (`MapReduce/Executer.cs:370-377`) as an engine-free read that
-    * prunes EXACTLY like the engine's own `query`: the key's partition
-    * comes from the shared hash ([[graft.core.Executer.fpartHash]])
-    * with `finalParts` read from the store's persisted `_config`, and
-    * only that partition's files enter the plan — 1/finalParts of the
-    * table scanned at any store size, row-group stats pruning the rest.
-    * A store predating `_config` falls back to the full file list
-    * (still correct, just unpruned). */
+    * prunes EXACTLY like the engine's own `query`: [[keysQuery]] of the
+    * one key. */
   def pointQuery(spark: SparkSession, storePath: String, key: String,
-      version: Long = -1L): DataFrame = {
+      version: Long = -1L): DataFrame =
+    keysQuery(spark, storePath, Seq(key), version)
+
+  /** Several keys' final values — the multi-key generalization of
+    * [[pointQuery]] (the engine's `queryKeys`), as `reduce_key` + the
+    * reduce output's columns. Reads at most |distinct fparts of keys| ≤
+    * |keys| of the finalParts partitions: a key's partition comes from
+    * the shared hash ([[graft.core.Executer.fpartHash]]) with
+    * `finalParts` read from the store's persisted `_config`, so
+    * 1/finalParts of the table per key at any store size (a store
+    * predating `_config` reads every final file — correct, unpruned).
+    * The rows are read at call time, on the driver, from the generation
+    * resolved then ([[graft.core.Executer.readKeysDriver]]): the result
+    * is local, and its `collect` runs no Spark job. The payload schema
+    * comes from ONE parquet footer, never an inference job — a miss
+    * (every requested partition empty: provably no rows) opens that
+    * footer and no data file. Partitions past the driver-read gate are
+    * served by the pruned Spark plan over the same generation instead.
+    * Rows interleave across keys; absent keys contribute none. */
+  def keysQuery(spark: SparkSession, storePath: String, keys: Seq[String],
+      version: Long = -1L): DataFrame =
+    keysRead(spark, storePath, keys, version).df
+
+  /** A [[keysQuery]] result with what it read: the one file whose
+    * footer gave the schema, and the data files opened (empty when the
+    * Spark plan served the read). */
+  private[graft] final case class KeysRead(df: DataFrame,
+      footer: Option[Path], opened: Seq[Path])
+
+  /** [[keysQuery]], reporting the files it read. */
+  private[graft] def keysRead(spark: SparkSession, storePath: String,
+      keys: Seq[String], version: Long): KeysRead = {
     val (fs, root) = fsFor(spark, storePath)
-    liveTreeFiles(fs, root, version) match {
-      case Some((files, _)) if files.nonEmpty =>
-        val cfg = new Path(root, "_config")
-        val pruned =
-          if (!fs.exists(cfg)) files
-          else {
-            val in = new java.io.DataInputStream(fs.open(cfg))
-            val finalParts = try { in.readInt(); in.readInt() }
-              finally in.close()
-            val fpart = Executer.fpartHash(key, finalParts)
-            files.filter(_.startsWith(s"reduce_tree/level=2/part=$fpart/"))
-          }
-        // An empty pruned list means the key's partition holds no files
-        // (provably no rows: same key → same fpart on write). Keep the
-        // payload schema from ONE live file at limit(0) footer cost —
-        // planning the full list here would make a miss-heavy workload
-        // pay full-listing plans per miss at 100 TB.
-        if (pruned.nonEmpty)
-          readFiles(spark, root, pruned).where(col("reduce_key") === key)
-        else readFiles(spark, root, files.take(1)).limit(0)
-      case Some((_, tree)) =>
-        emptyWithSchema(spark, root, tree).where(col("reduce_key") === key)
-      case None => emptyFinals(spark)
+    snapOf(fs, root, version) match {
+      case None => KeysRead(emptyFinals(spark), None, Nil)
+      case Some(snap) =>
+        val files = Executer.finalFilesOf(snap, layoutOf(fs, root).map(_._2), keys)
+        val schemaFile = schemaFileOf(snap, files).map(new Path(root, _))
+        val driver = for {
+          schema <- schemaFile.flatMap(footerSchema(spark, _))
+          (df, opened) <-
+            Executer.readKeysDriver(spark, fs, root, files, keys, schema)
+        } yield KeysRead(df.select(col("reduce_key") +:
+            schema("payload").dataType.asInstanceOf[StructType].fieldNames
+              .toSeq.map(f => col(s"payload.$f")): _*), schemaFile, opened)
+        driver.getOrElse(
+          KeysRead(keysPlan(spark, root, snap, files, keys), schemaFile, Nil))
     }
   }
 
-  /** Several keys' final values in one pruned scan — the multi-key
-    * generalization of [[pointQuery]] (the engine's `queryKeys`): the
-    * plan reads at most |distinct fparts of keys| ≤ |keys| of the
-    * finalParts partitions. Rows interleave across keys; the
-    * `reduce_key` column disambiguates, absent keys contribute none. */
-  def keysQuery(spark: SparkSession, storePath: String, keys: Seq[String],
-      version: Long = -1L): DataFrame = {
+  /** The Spark-plan spelling of [[keysQuery]] — what its driver read
+    * falls back to past the gate: a scan planned over the keys' final
+    * files with the schema inferred from them. */
+  private[graft] def keysQueryPlan(spark: SparkSession, storePath: String,
+      keys: Seq[String], version: Long = -1L): DataFrame = {
     val (fs, root) = fsFor(spark, storePath)
-    liveTreeFiles(fs, root, version) match {
-      case Some((files, _)) if files.nonEmpty && keys.nonEmpty =>
-        val cfg = new Path(root, "_config")
-        val pruned =
-          if (!fs.exists(cfg)) files
-          else {
-            val in = new java.io.DataInputStream(fs.open(cfg))
-            val finalParts = try { in.readInt(); in.readInt() }
-              finally in.close()
-            val fparts = keys.map(Executer.fpartHash(_, finalParts)).toSet
-            files.filter(f => fparts.exists(p =>
-              f.startsWith(s"reduce_tree/level=2/part=$p/")))
-          }
-        // Same miss-path discipline as pointQuery: every requested
-        // key's partition empty → provably no rows, schema from one
-        // live file at footer cost, never the full listing.
-        if (pruned.nonEmpty)
-          readFiles(spark, root, pruned)
-            .where(col("reduce_key").isin(keys: _*))
-        else readFiles(spark, root, files.take(1)).limit(0)
-      case Some((_, tree)) =>
-        emptyWithSchema(spark, root, tree)
+    snapOf(fs, root, version) match {
       case None => emptyFinals(spark)
+      case Some(snap) => keysPlan(spark, root, snap,
+        Executer.finalFilesOf(snap, layoutOf(fs, root).map(_._2), keys), keys)
+    }
+  }
+
+  /** [[keysQueryPlan]] over a resolved generation and its key files. A
+    * miss (no file: provably no rows, same key → same fpart on write)
+    * plans ONE schema file at limit(0) footer cost, never the full
+    * listing. */
+  private def keysPlan(spark: SparkSession, root: Path,
+      snap: graft.core.Snapshot, files: Vector[String],
+      keys: Seq[String]): DataFrame =
+    if (files.nonEmpty)
+      readFiles(spark, root, files).where(col("reduce_key").isin(keys: _*))
+    else emptyWithSchema(spark, root, schemaFileOf(snap, files).toVector)
+
+  /** One live file carrying the (reduce_key, payload) pair, for a key
+    * read's schema: a hit's own file first, else any final file, else —
+    * every key deleted — a level-1 partial or a map_results file. None
+    * for a FULLY drained generation, whose payload schema exists
+    * nowhere on disk an external reader may trust. */
+  private def schemaFileOf(snap: graft.core.Snapshot,
+      files: Vector[String]): Option[String] = {
+    val tree = snap.live.getOrElse("reduce_tree", Vector.empty)
+    files.headOption
+      .orElse(tree.find(_.startsWith("reduce_tree/level=2/")))
+      .orElse(tree.headOption)
+      .orElse(snap.live.getOrElse("map_results", Vector.empty).headOption)
+  }
+
+  /** The store's persisted (fanIn, finalParts) layout (`_config`);
+    * None on a store predating it. */
+  private def layoutOf(fs: FileSystem, root: Path): Option[(Int, Int)] = {
+    val cfg = new Path(root, "_config")
+    if (!fs.exists(cfg)) None
+    else {
+      val in = new java.io.DataInputStream(fs.open(cfg))
+      Some(try (in.readInt(), in.readInt()) finally in.close())
+    }
+  }
+
+  /** The (reduce_key, payload) data schema of a Spark-written parquet
+    * file, from the Spark schema JSON in its footer — as a parquet scan
+    * reports it (all nullable). None when the footer carries no Spark
+    * schema: the caller's Spark plan infers one. */
+  private def footerSchema(spark: SparkSession, p: Path): Option[StructType] = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
+        spark.sparkContext.hadoopConfiguration))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      finally reader.close()
+    Option(json).map { j =>
+      val all = DataType.fromJson(j).asInstanceOf[StructType]
+      Executer.readNullable(StructType(
+        Seq(all("reduce_key"), all("payload")))).asInstanceOf[StructType]
     }
   }
 
@@ -318,15 +369,12 @@ object StoreReader {
         if (files.isEmpty) empty
         else {
           val id = Executer.normDocId(docId)
-          val cfg = new Path(root, "_config")
-          val pruned =
-            if (!fs.exists(cfg)) files
-            else {
-              val in = new java.io.DataInputStream(fs.open(cfg))
-              val fanIn = try in.readInt() finally in.close()
+          val pruned = layoutOf(fs, root) match {
+            case None => files
+            case Some((fanIn, _)) =>
               val parent = Executer.parentOf(id, fanIn)
               files.filter(_.startsWith(s"map_results/parent=$parent/"))
-            }
+          }
           if (pruned.isEmpty) empty
           else {
             val rows = spark.read
@@ -366,7 +414,9 @@ object StoreReader {
     * bound has complete records behind it, and records for published
     * generations are immutable. Asking below the pruning horizon fails
     * loudly ([[changedHorizon]] lets a poller decide first); a fresh
-    * store answers empty for since = −1. */
+    * store answers empty for since = −1. The records are read at call
+    * time; a window whose every generation has only a local record is
+    * answered as a local result whose `collect` runs no Spark job. */
   def changedKeysSince(spark: SparkSession, storePath: String,
       sinceVersion: Long, version: Long = -1L): DataFrame = {
     val (fs, root) = fsFor(spark, storePath)
@@ -409,15 +459,15 @@ object StoreReader {
           s"changed-keys records were pruned concurrently (horizon now " +
             s"$h2); cannot answer since=$sinceVersion — refetch everything")
         import spark.implicits._
-        val localDf = localKeys.toDF("reduce_key")
+        // Local records only: de-duplicated on the driver, no job.
+        if (distDirs.isEmpty) localKeys.distinct.toDF("reduce_key")
         // One multi-path scan, not a unionByName fold: a per-directory
         // fold costs one scan node + file index per polled generation
         // in driver-side analysis (the engine-side changedKeysIn
         // spelling, same reasoning).
-        (if (distDirs.isEmpty) localDf
-         else localDf.unionByName(spark.read.schema("reduce_key STRING")
-           .parquet(distDirs.map(_.toString): _*)))
-          .distinct()
+        else localKeys.toDF("reduce_key").unionByName(
+          spark.read.schema("reduce_key STRING")
+            .parquet(distDirs.map(_.toString): _*)).distinct()
     }
   }
 

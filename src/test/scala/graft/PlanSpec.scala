@@ -127,7 +127,16 @@ class PlanSpec extends AnyFunSuite {
     val ex = new graft.core.Executer(PeopleCountSingle, store)
     ex.execute(spark.createDataset(Seq(
       Person("a", "CA"), Person("b", "CA"), Person("c", "TX"))))
-    val p = ex.query("CA").queryExecution.executedPlan.toString
+    // The driver read opens only the key's fpart; the Spark plan it
+    // falls back to past the gate partition-prunes the reduce tree.
+    val head = ex.snapshotAt(-1L)
+    def opened(keys: Seq[String]): Set[String] =
+      ex.keysDriver(head, keys).get._2.map(f =>
+        f.getParent.getParent.getName + "/" + f.getParent.getName).toSet
+    assert(opened(Seq("CA")) ==
+      Set(s"level=2/part=${graft.core.Executer.fpartHash("CA", 64)}"),
+      s"point query opened ${opened(Seq("CA"))}")
+    val p = ex.keysPlan(head, Seq("CA")).queryExecution.executedPlan.toString
     val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(pf.contains("level") && pf.contains("part"),
       s"point query does not partition-prune the reduce tree: $pf")
@@ -141,10 +150,14 @@ class PlanSpec extends AnyFunSuite {
     assert(ex.contributionsOf("b").select("reduce_key").collect()
       .map(_.getString(0)).toSeq == Seq("CA"))
 
-    // Multi-key read prunes to the keys' fparts (an `part IN (...)`
-    // partition filter), never a full final-table scan.
+    // Multi-key read opens at most the keys' fparts; its fallback plan
+    // prunes to them (a `part IN (...)` partition filter), never a full
+    // final-table scan.
     val qk = ex.queryKeys(Seq("CA", "TX"))
-    val p3 = qk.queryExecution.executedPlan.toString
+    val fp = Seq("CA", "TX").map(k => s"level=2/part=${graft.core.Executer.fpartHash(k, 64)}")
+    assert(opened(Seq("CA", "TX")).subsetOf(fp.toSet),
+      s"queryKeys opened ${opened(Seq("CA", "TX"))}, wanted within $fp")
+    val p3 = ex.keysPlan(head, Seq("CA", "TX")).queryExecution.executedPlan.toString
     val pf3 = p3.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(pf3.contains("level") && pf3.contains("part"),
       s"queryKeys does not partition-prune the reduce tree: $pf3")
@@ -309,9 +322,20 @@ class PlanSpec extends AnyFunSuite {
     // generation's file list (VERDICT r14 #3) — at any store size the
     // plan reads ≤ |keys|/finalParts of the finals, never a full scan.
     val df = SparkEntry.queries("q114_external_read")(spark, dir)
-    val parts = df.inputFiles.map(f =>
+    assert(df.count() > 0)
+    val (ex, v) = graft.ops.IndexQueries.ordersByPriorityUpdated(spark, dir)
+    val keys = Seq("1-URGENT", "3-MEDIUM")
+    def parts(files: Seq[String]): Set[String] = files.map(f =>
       f.split("/").find(_.startsWith("part=")).getOrElse("?")).toSet
-    assert(parts.nonEmpty && parts.size <= 2,
-      s"q114 read partitions $parts; wanted <=2 (two keys)")
+    for (gen <- Seq(-1L, v)) {
+      val opened = parts(graft.sources.StoreReader
+        .keysRead(spark, ex.storePath, keys, gen).opened.map(_.toString))
+      assert(opened.nonEmpty && opened.size <= 2,
+        s"q114 at $gen opened partitions $opened; wanted <=2 (two keys)")
+      val planned = parts(graft.sources.StoreReader
+        .keysQueryPlan(spark, ex.storePath, keys, gen).inputFiles.toSeq)
+      assert(planned.nonEmpty && planned.size <= 2,
+        s"q114 fallback at $gen plans partitions $planned; wanted <=2")
+    }
   }
 }

@@ -31,6 +31,9 @@ class StoreReaderSpec extends AnyFunSuite {
   private def engineState(ex: Executer[Person, StatePop]): Map[String, Long] =
     m(ex.queryAll().as[(String, String, Long)].collect())
 
+  private def partsOf(files: Seq[String]): Set[String] = files.map(f =>
+    f.split("/").find(_.startsWith("part=")).getOrElse("?")).toSet
+
   private def externalState(store: String): Map[String, Long] =
     StoreReader.finals(spark, store).as[(String, String, Long)].collect()
       .map { case (_, s, c) => s -> c }.toMap
@@ -83,10 +86,15 @@ class StoreReaderSpec extends AnyFunSuite {
         .map { case (_, s, c) => (s, c) } ==
         ex.query(key).collect().toSeq.map(r => (r.state, r.count)),
         s"external point read of $key diverges from the engine")
-      // The pruning claim: every file in the plan is the key's fpart.
-      val parts = ext.inputFiles.map(f =>
-        f.split("/").find(_.startsWith("part=")).getOrElse("?")).toSet
-      assert(parts.size == 1, s"point query of $key read partitions $parts")
+      // The pruning claim: every file the read opens is the key's fpart
+      // (and so is every file its fallback plan scans).
+      val parts = partsOf(StoreReader.keysRead(spark, store, Seq(key), -1L)
+        .opened.map(_.toString))
+      assert(parts == Set(s"part=${Executer.fpartHash(key, 2)}"),
+        s"point query of $key read partitions $parts")
+      val planned = partsOf(
+        StoreReader.keysQueryPlan(spark, store, Seq(key)).inputFiles.toSeq)
+      assert(planned.size == 1, s"point query of $key plans partitions $planned")
     }
     // Absent key: empty result, payload schema intact.
     val none = StoreReader.pointQuery(spark, store, "ZZ")
@@ -99,9 +107,10 @@ class StoreReaderSpec extends AnyFunSuite {
     val multi = StoreReader.keysQuery(spark, store, keys)
     assert(m(multi.as[(String, String, Long)].collect()) ==
       m(ex.queryKeys(keys).as[(String, String, Long)].collect()))
-    val mparts = multi.inputFiles.map(f =>
-      f.split("/").find(_.startsWith("part=")).getOrElse("?")).toSet
-    assert(mparts.size <= 2, s"keysQuery read partitions $mparts")
+    val mparts = partsOf(StoreReader.keysRead(spark, store, keys, -1L)
+      .opened.map(_.toString))
+    assert(mparts.nonEmpty && mparts.size <= 2,
+      s"keysQuery read partitions $mparts")
   }
 
   test("miss-path point/keys queries plan ONE schema file, never the " +
@@ -122,19 +131,25 @@ class StoreReaderSpec extends AnyFunSuite {
     assert(miss.collect().isEmpty)
     assert(miss.columns.toSeq == Seq("reduce_key", "state", "count"),
       "miss-path read must keep the payload schema")
-    assert(miss.inputFiles.length <= 1,
-      s"miss-path planned ${miss.inputFiles.length} files; wanted <=1 " +
+    val missRead = StoreReader.keysRead(spark, store, Seq(missKey), -1L)
+    assert(missRead.footer.isDefined && missRead.opened.isEmpty,
+      s"miss-path read footer ${missRead.footer} and opened " +
+        s"${missRead.opened}; wanted one footer and no data file")
+    // Its fallback plan holds at most one schema-salvage file.
+    val missPlan = StoreReader.keysQueryPlan(spark, store, Seq(missKey))
+    assert(missPlan.collect().isEmpty)
+    assert(missPlan.columns.toSeq == Seq("reduce_key", "state", "count"))
+    assert(missPlan.inputFiles.length <= 1,
+      s"miss-path planned ${missPlan.inputFiles.length} files; wanted <=1 " +
         "(one schema-salvage file)")
     val missAll = StoreReader.keysQuery(spark, store, Seq(missKey))
     assert(missAll.collect().isEmpty)
     assert(missAll.columns.toSeq == Seq("reduce_key", "state", "count"))
-    assert(missAll.inputFiles.length <= 1,
-      s"all-miss keysQuery planned ${missAll.inputFiles.length} files")
-    // A hit among misses still prunes to the hit's partition only.
+    // A hit among misses still opens the hit's partition only.
     val mixed = StoreReader.keysQuery(spark, store, Seq("CA", missKey))
     assert(m(mixed.as[(String, String, Long)].collect()) == Map("CA" -> 12L))
-    val parts = mixed.inputFiles.map(f =>
-      f.split("/").find(_.startsWith("part=")).getOrElse("?")).toSet
+    val parts = partsOf(StoreReader.keysRead(spark, store,
+      Seq("CA", missKey), -1L).opened.map(_.toString))
     assert(parts == Set(s"part=$caPart"), s"mixed keysQuery read $parts")
   }
 

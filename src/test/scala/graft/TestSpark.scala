@@ -31,3 +31,41 @@ object TestSpark {
       TestTmp.dir("graft-warehouse"))
     .getOrCreate()
 }
+
+/** Spark jobs a block starts, counted by a `SparkListener` — the
+  * listener's count, not the engine's own. Only jobs submitted from
+  * the calling thread (and threads it spawns) count: they carry a
+  * unique local property. Listener events arrive asynchronously, so a
+  * one-task fence job runs after the block, and the count is read once
+  * its start event is seen (the bus delivers in order). */
+object SparkJobs {
+  def count[A](spark: SparkSession)(f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty(key)).foreach { t =>
+          if (t == tag) n.incrementAndGet()
+          else if (t == s"$tag-fence") fenced.countDown()
+        }
+    }
+    sc.addSparkListener(l)
+    val prev = sc.getLocalProperty(key)
+    try {
+      sc.setLocalProperty(key, tag)
+      val r = f
+      sc.setLocalProperty(key, s"$tag-fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener fence job never seen")
+      (r, n.get)
+    } finally {
+      sc.setLocalProperty(key, prev)
+      sc.removeSparkListener(l)
+    }
+  }
+}
