@@ -146,7 +146,7 @@ object Executer {
   /** Every row of one live parquet data file under `schema`, read on
     * the driver thread — no job, no per-call plan analysis. ONE reader
     * shared by the engine's maintenance reads and every driver key read
-    * ([[readKeysDriver]], so also the external reader). The file is
+    * ([[StoreSnapshot.keysRead]], so also the external reader). The file is
     * always drained to exhaustion: its reader closes only at the end,
     * and with no TaskContext there is no completion hook to do it. */
   private[graft] def foreachRowDriver(spark: SparkSession, schema: StructType,
@@ -165,25 +165,6 @@ object Executer {
       scala.collection.immutable.Map.empty)).foreach(f)
   }
 
-  /** The live final-results files (store-relative) that can hold any of
-    * `keys` in generation `snap`: the level-2 files of the keys' fparts
-    * ([[fpartHash]]), so at most |keys| of the `finalParts` partitions.
-    * `finalParts` None (a store predating `_config`) keeps every level-2
-    * file — correct, just unpruned. */
-  private[graft] def finalFilesOf(snap: Snapshot, finalParts: Option[Int],
-      keys: Seq[String]): Vector[String] = {
-    val level2 = snap.live.getOrElse("reduce_tree", Vector.empty)
-      .filter(_.startsWith("reduce_tree/level=2/"))
-    if (keys.isEmpty) Vector.empty
-    else finalParts match {
-      case None => level2
-      case Some(n) =>
-        val dirs = keys.iterator
-          .map(k => s"reduce_tree/level=2/part=${fpartHash(k, n)}/").toSet
-        level2.filter(f => dirs(f.substring(0, f.lastIndexOf('/') + 1)))
-    }
-  }
-
   /** `t` with every field, element and value nullable — the schema a
     * Spark parquet scan reports for its files (file sources always read
     * nullable), so a driver read keeps the Spark plan's exact types. */
@@ -194,39 +175,6 @@ object Executer {
     case m: MapType =>
       MapType(readNullable(m.keyType), readNullable(m.valueType), true)
     case other => other
-  }
-
-  /** The final rows of `keys` in the given live level-2 files (from
-    * [[finalFilesOf]]), read on the driver thread: `schema` is the
-    * files' (reduce_key, payload) data schema; each row's `reduce_key`
-    * is compared as a `UTF8String` before the row is decoded, and only
-    * matching rows are kept. Returns a `LocalRelation`-backed frame of
-    * (reduce_key, payload) — its `collect` runs no Spark job — plus the
-    * files it opened. None when the files' summed bytes pass
-    * [[DriverTreeReadMaxBytes]]: the caller runs its Spark plan. Each
-    * file is statted first, so a reclaimed generation fails loudly
-    * here, before any row is read. */
-  private[graft] def readKeysDriver(spark: SparkSession, fs: FileSystem,
-      root: Path, files: Seq[String], keys: Seq[String],
-      schema: StructType): Option[(DataFrame, Seq[Path])] = {
-    val statted = files.map { rel =>
-      val p = new Path(root, rel)
-      (p, fs.getFileStatus(p).getLen)
-    }
-    if (statted.iterator.map(_._2).sum > DriverTreeReadMaxBytes) None
-    else {
-      val want = keys.iterator
-        .map(org.apache.spark.unsafe.types.UTF8String.fromString).toSet
-      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToScalaConverter(schema)
-      val rows = new java.util.ArrayList[Row]()
-      statted.foreach { case (p, len) =>
-        foreachRowDriver(spark, schema, p, len) { r =>
-          if (want(r.getUTF8String(0))) rows.add(toRow(r).asInstanceOf[Row])
-        }
-      }
-      Some((spark.createDataFrame(rows, schema), statted.map(_._1)))
-    }
   }
 
   /** First path segment of a store-relative file path = its table. */
@@ -284,20 +232,17 @@ object Executer {
   }
 
   /** The driver-local changed-keys record codec, decode side (count +
-    * length-prefixed keys) — shared by the engine's
-    * [[Executer!.readChangedLocal]] and the external CDC poll
-    * ([[graft.sources.StoreReader.changedKeysSince]]). Encode side: the
-    * pre-publish archive in `publishModel`/`sentinelRecord`. */
+    * length-prefixed keys), read only by [[StoreSnapshot.changedKeys]].
+    * Encode side: the pre-publish archive in `archiveChangedKeys`. */
   private[graft] def decodeKeyList(
       in: java.io.DataInputStream): Seq[String] = {
     val n = in.readInt()
     (0 until n).map(_ => decodeStr(in))
   }
 
-  /** The manifest binary codec, decode side — ONE definition shared by
-    * the engine's [[Executer!.readManifest]] and the external
-    * lock-free reader ([[graft.sources.StoreReader]]), so the two can
-    * never drift on the wire format. Encode side: `writeManifest`. */
+  /** The manifest binary codec, decode side, read only by
+    * [[StoreSnapshot.manifest]] — so the engine and the external reader
+    * can never drift on the wire format. Encode side: `writeManifest`. */
   private[graft] def decodeManifest(in: java.io.DataInputStream): Snapshot = {
     val ver = in.readLong()
     val tl = in.readUTF()
@@ -630,6 +575,7 @@ class Executer[D, R <: Product: TypeTag](
   // generation plus an atomically-renamed pointer to the current one.
   private val manifestsPath = s"$storePath/_manifests"
   private val currentPath = s"$storePath/_current"
+  private val storeRoot = new Path(storePath)
   private val tombDirPath = s"$storePath/_tomb"
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[Executer[_, _]])
@@ -743,11 +689,7 @@ class Executer[D, R <: Product: TypeTag](
   @volatile private var writerThread: Long = -1L
 
   private def readCurrentVersion(): Long =
-    if (!exists(currentPath)) -1L
-    else {
-      val in = new java.io.DataInputStream(stateFs.open(new Path(currentPath)))
-      try in.readLong() finally in.close()
-    }
+    StoreSnapshot.currentVersion(stateFs, storeRoot)
 
   private def manifestFile(v: Long): String = s"$manifestsPath/m$v"
 
@@ -765,11 +707,6 @@ class Executer[D, R <: Product: TypeTag](
       }
     }
 
-  private def readManifest(v: Long): Snapshot = {
-    val in = new java.io.DataInputStream(stateFs.open(new Path(manifestFile(v))))
-    try Executer.decodeManifest(in) finally in.close()
-  }
-
   /** Parsed manifests by version — immutable once written, so the cache
     * never staleness-checks; bounded by eviction. */
   private val manifestCache =
@@ -779,7 +716,7 @@ class Executer[D, R <: Product: TypeTag](
     val hit = manifestCache.get(v)
     if (hit != null) hit
     else {
-      val s = readManifest(v)
+      val s = StoreSnapshot.manifest(stateFs, storeRoot, v)
       if (manifestCache.size > 16) manifestCache.clear()
       manifestCache.put(v, s)
       s
@@ -2590,12 +2527,12 @@ class Executer[D, R <: Product: TypeTag](
     * (`Executer.cs:373-375`). Reads only the key's `fpart` partition of
     * the generation published at call time, and reads it at call time:
     * the rows are fetched on the driver into a local result whose
-    * `collect` runs no Spark job ([[Executer.readKeysDriver]]). A
+    * `collect` runs no Spark job ([[StoreSnapshot.keysRead]]). A
     * partition past the driver-read gate is served by the pruned Spark
     * plan over that same generation instead. */
   def query(key: String): Dataset[R] = {
     configChecked
-    keysAt(snapshotNow(), Seq(key)).select("payload.*").as[R]
+    snapshotAt(-1L).keysRead(Seq(key)).df.select("payload.*").as[R]
   }
 
   /** Final reduced values for SEVERAL keys (the multi-key
@@ -2608,38 +2545,27 @@ class Executer[D, R <: Product: TypeTag](
     * column disambiguates; absent keys simply contribute no rows. */
   def queryKeys(keys: Seq[String]): DataFrame = {
     configChecked
-    keysAt(snapshotNow(), keys).select($"reduce_key" +:
+    snapshotAt(-1L).keysRead(keys).df.select($"reduce_key" +:
       encR.schema.fieldNames.toSeq.map(f => col(s"payload.$f")): _*)
   }
 
-  /** The (reduce_key, payload) rows of `keys` in generation `snap`: the
-    * driver read of the keys' final partitions, or [[keysPlan]] when
-    * they pass the driver-read gate. */
-  private def keysAt(snap: Snapshot, keys: Seq[String]): DataFrame =
-    keysDriver(snap, keys).map(_._1).getOrElse(keysPlan(snap, keys))
-
-  /** The driver spelling of [[keysAt]], with the files it opened; None
-    * past the driver-read gate. */
-  private[graft] def keysDriver(snap: Snapshot, keys: Seq[String])
-      : Option[(DataFrame, Seq[Path])] =
-    Executer.readKeysDriver(spark, fs, new Path(storePath),
-      Executer.finalFilesOf(snap, Some(config.finalParts), keys), keys,
-      treeDataSchema)
-
-  /** The Spark-plan spelling of [[keysAt]]: a scan of `snap`'s final
-    * table pruned to the keys' fparts, the key predicate pushed down.
-    * Serves key sets whose partitions pass the driver-read gate. */
-  private[graft] def keysPlan(snap: Snapshot, keys: Seq[String]): DataFrame =
-    relFor(treePath, treeReadSchema, snap)
-      .where($"level" === 2 &&
-        $"part".isin(keys.map(fpartOf).distinct.map(Integer.valueOf): _*) &&
-        $"reduce_key".isin(keys: _*))
-      .select($"reduce_key", $"payload")
+  /** Generation `snap` through the shared read layer, with what the
+    * engine knows: its `finalParts`, its task's data schema, and its
+    * manifest cache for other generations — no `_config` or footer
+    * read. */
+  private def readAt(snap: Snapshot): StoreSnapshot =
+    new StoreSnapshot(spark, stateFs, storeRoot, snap, Some(config.finalParts),
+      Some(treeDataSchema), manifestAt)
 
   /** The generation a read at `version` resolves: the caller's view
     * ([[snapshotNow]]) for −1, else that published generation. */
-  private[graft] def snapshotAt(version: Long): Snapshot =
-    if (version < 0) snapshotNow() else manifestAt(version)
+  private[graft] def snapshotAt(version: Long): StoreSnapshot =
+    readAt(if (version < 0) snapshotNow() else manifestAt(version))
+
+  /** The published generation, for the CDC reads that need one. */
+  private def publishedRead(what: String): StoreSnapshot =
+    readAt(publishedSnapshot().getOrElse(throw new UnsupportedOperationException(
+      s"$what: the store has no published generation yet")))
 
   /** The currently-published snapshot generation, or −1 while nothing
     * is published. Pair with [[queryAllAt]] for stable time-travel
@@ -2659,18 +2585,16 @@ class Executer[D, R <: Product: TypeTag](
     * (its deletion must invalidate); a rebuilt store records old ∪ new
     * final keys. `compact()` prunes records older than
     * `manifestRetention` generations — asking past the pruning horizon
-    * fails loudly, never silently under-reports; so does a store with
-    * no published generation yet. The records are read at call time,
-    * for the generations published then; a window whose every
-    * generation has only a local record is de-duplicated on the driver
-    * into a local result whose `collect` runs no Spark job, and any
-    * distributed record in the window is scanned by a distinct job. */
+    * fails loudly, never silently under-reports, also when the pruning
+    * races the poll; so does a store with no published generation yet.
+    * The records are read at call time by the shared read layer
+    * ([[StoreSnapshot.changedKeys]]); a window whose every generation
+    * has only a local record is a local result whose `collect` runs no
+    * Spark job, and any distributed record in the window is scanned by
+    * a distinct job. */
   def changedKeysSince(sinceVersion: Long): DataFrame = {
     configChecked
-    val cur = readCurrentVersion()
-    if (cur < 0) throw new UnsupportedOperationException(
-      "changedKeysSince: the store has no published generation yet")
-    changedKeysIn(sinceVersion, cur)
+    publishedRead("changedKeysSince").changedKeys(sinceVersion)
   }
 
   /** The oldest base generation [[changedKeysSince]]/[[diffSince]] can
@@ -2682,40 +2606,7 @@ class Executer[D, R <: Product: TypeTag](
     * failure. */
   def changedHorizonVersion(): Long = {
     configChecked
-    changedHorizon()
-  }
-
-  /** [[changedKeysSince]] with the upper generation PINNED by the caller
-    * — so a read path that snapshots the store at entry ([[diffSince]])
-    * derives its key set from exactly the generations its images cover,
-    * never from a generation a concurrent writer published mid-read. */
-  private def changedKeysIn(sinceVersion: Long, cur: Long): DataFrame = {
-    require(sinceVersion >= -1 && sinceVersion <= cur,
-      s"sinceVersion must be in [-1, $cur], got $sinceVersion")
-    val h = changedHorizon()
-    if (sinceVersion < h) throw new IllegalStateException(
-      s"changed-keys records up to generation $h have been pruned by " +
-        s"compact(); cannot answer since=$sinceVersion — refetch everything")
-    val vs = (sinceVersion + 1) to cur
-    val localKeys = vs.flatMap(readChangedLocal)
-    // A window of local records only (every driver-known batch) is
-    // de-duplicated on the driver: a local result, no distinct() job.
-    val dirs = vs.map(changedDistPath).filter(exists)
-    if (dirs.isEmpty)
-      return spark.createDataset(localKeys.distinct)(Encoders.STRING)
-        .toDF("reduce_key")
-    val localDF = spark.createDataset(localKeys)(Encoders.STRING)
-      .toDF("reduce_key")
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val schema = StructType(Seq(StructField("reduce_key", StringType)))
-    // ONE multi-path scan over every generation's distributed record:
-    // folding unionByName per directory built a plan with one scan node
-    // (and one file index) per generation — O(polled generations)
-    // driver-side analysis for a reader that may span hundreds of
-    // generations at scale. The dirs are flat same-schema parquet, so a
-    // single relation is semantically identical under the distinct.
-    localDF.unionByName(spark.read.schema(schema).parquet(dirs: _*))
-      .distinct()
+    StoreSnapshot.horizon(stateFs, storeRoot)
   }
 
   /** [[queryAll]] as of an earlier published generation — the manifest
@@ -2750,87 +2641,32 @@ class Executer[D, R <: Product: TypeTag](
     * `(sinceVersion, current]` — so a key whose documents were
     * resubmitted with identical payloads still appears, as an 'update'
     * whose old and new images are equal (the consumer's idempotent
-    * apply makes it a no-op). Both sides are snapshot reads (the old
-    * side time-travels to `sinceVersion`, within the same GC-retention
-    * contract as [[queryAllAt]]); the join is pruned to the changed
-    * keys — O(churn) rows move, never O(keys). */
+    * apply makes it a no-op). The current generation is pinned at
+    * entry, and the feed is the shared read layer's
+    * ([[StoreSnapshot.diffSince]], the same code as
+    * [[graft.sources.StoreReader.diffSince]]): the window's keys, read
+    * at both generations by key reads and paired by key on the driver.
+    * The rows are read at call time into a local result, O(churn) of
+    * them on the driver; a window of local records read on the driver
+    * runs no Spark job. The old side time-travels to `sinceVersion`
+    * within the same GC-retention contract as [[queryAllAt]]; a
+    * reclaimed `sinceVersion` manifest is refused with an
+    * IllegalStateException. Requires a `singleOutput` task: images are
+    * paired by reduce_key. */
   def diffSince(sinceVersion: Long): DataFrame = {
     configChecked
     require(sinceVersion >= 0,
       s"diffSince needs a published base generation, got $sinceVersion")
-    // The full_outer join below pairs old and new images BY KEY — sound
-    // only when a key has exactly one output row per side. A
-    // multi-output task (singleOutput=false is a legal shape) would pair
-    // arbitrary old/new rows with no error; fail loudly instead
-    // (ADVICE r10). Such consumers use changedKeysSince + queryKeys.
+    // A multi-output task (singleOutput=false is a legal shape) has no
+    // by-key pairing of its images; fail loudly up front (ADVICE r10).
     require(task.singleOutput,
       "diffSince requires a singleOutput task: the before/after images " +
         "are keyed by reduce_key, which is only unambiguous when each " +
         "key has one output row — use changedKeysSince + queryKeys for " +
         "multi-output stores")
-    // Pin BOTH generations at entry (ADVICE r10): the key set, the
-    // before side, and the after side must all resolve the same pair of
-    // manifests, or a concurrent writer could mix keys from one
-    // generation with after-images from a later one.
-    val cur = readCurrentVersion()
-    if (cur < 0) throw new UnsupportedOperationException(
-      "diffSince: the store has no published generation yet")
-    val keysDF = changedKeysIn(sinceVersion, cur) // distinct reduce_key
-    val fields = encR.schema.fieldNames.toSeq
-    // Prune both snapshot reads to the changed keys' final partitions —
-    // the same one-job-per-poll shape as [[queryKeys]]: when the churn
-    // fits the driver (the normal poll; the bound every CDC consumer
-    // already lives under), both sides read |distinct fparts| ≤ |keys|
-    // partitions with pushed-down key predicates; a poll with more
-    // churn than fits the driver falls back to semi-joins against the
-    // key set (O(keys-scan) IO — at that churn a full resync is the
-    // better consumer strategy anyway, see [[CdcConsumer]]).
-    val keysProbe = keysDF.limit(DriverDirtyLimit + 1).collect()
-      .map(_.getString(0))
-    val driverSmall = keysProbe.length <= DriverDirtyLimit
-    def pruned(df: DataFrame, partCol: String): DataFrame =
-      if (driverSmall) {
-        val fparts = keysProbe.map(fpartOf).distinct.toSeq
-        df.where(col(partCol).isin(fparts.map(Integer.valueOf): _*) &&
-          $"reduce_key".isin(keysProbe.toSeq: _*))
-      } else df.join(keysDF, Seq("reduce_key"), "left_semi")
-    // A zero-churn window needs NO old images: resolve the before side
-    // from the CURRENT manifest instead of time-travelling to a
-    // generation compact() may have reclaimed. Non-empty churn DOES
-    // need them, and they must come from DISK-resolvable state: this
-    // instance's manifest cache can outlive a compact() that reclaimed
-    // m<since>, which would make the poll's outcome depend on WHICH
-    // process asks (the writer answers from cache, a fresh handle
-    // throws FileNotFound). Refuse deterministically instead — the
-    // same loud-refusal class as the changed-records horizon (both
-    // found by StoreReaderChurnProps).
-    val snapB =
-      if (keysProbe.isEmpty) manifestAt(cur)
-      else {
-        if (!exists(manifestFile(sinceVersion)))
-          throw new IllegalStateException(
-            s"diffSince: generation $sinceVersion's manifest was " +
-              "reclaimed by compact() — old images unavailable; consume " +
-              "changedKeysSince + queryKeys, or full-resync from finals")
-        manifestAt(sinceVersion)
-      }
-    val before = pruned(
-        relFor(treePath, treeReadSchema, snapB).where($"level" === 2), "part")
-      .select((col("reduce_key") +: fields.map(f =>
-        col(s"payload.$f") as s"old_$f")) :+ lit(true).as("_was"): _*)
-    // After side reads the manifest captured at entry, not the live
-    // pointer — same snapshot discipline as the before side.
-    val snapA = manifestAt(cur)
-    val after = pruned(
-        relFor(treePath, treeReadSchema, snapA).where($"level" === 2), "part")
-      .select((col("reduce_key") +: fields.map(f =>
-        col(s"payload.$f") as s"new_$f")) :+ lit(true).as("_is"): _*)
-    before.join(after, Seq("reduce_key"), "full_outer")
-      .withColumn("change_type",
-        when(col("_was").isNull, lit("insert"))
-          .when(col("_is").isNull, lit("delete"))
-          .otherwise(lit("update")))
-      .drop("_was", "_is")
+    val head = publishedRead("diffSince")
+    head.diffSince(sinceVersion,
+      head.changedKeys(sinceVersion).collect().map(_.getString(0)).toSeq)
   }
 
   /** [[query]] as of an earlier published generation — the point-read
@@ -2842,7 +2678,7 @@ class Executer[D, R <: Product: TypeTag](
   def queryAt(key: String, version: Long): Dataset[R] = {
     configChecked
     require(version >= 0, s"snapshot generations are >= 0, got $version")
-    keysAt(manifestAt(version), Seq(key)).select("payload.*").as[R]
+    snapshotAt(version).keysRead(Seq(key)).df.select("payload.*").as[R]
   }
 
   /** Register generation `version` of this store as temp view `name` —
@@ -2917,7 +2753,7 @@ class Executer[D, R <: Product: TypeTag](
       // The invalidation record: every key touched between the target
       // and now — computed BEFORE the flip, from the same records a CDC
       // consumer reads (throws past the compact() horizon).
-      val changed = changedKeysIn(targetVersion, cur)
+      val changed = readAt(pending).changedKeys(targetVersion)
       val newV = cur + 1
       val keysProbe = changed.limit(DriverDirtyLimit + 1).collect()
         .map(_.getString(0))
@@ -3035,15 +2871,12 @@ class Executer[D, R <: Product: TypeTag](
   }
 
   /** The whole index as a DataFrame — strictly more capable than the
-    * reference's point read: range scans, joins, further aggregation. */
+    * reference's point read: range scans, joins, further aggregation.
+    * A generation with no tree files (nothing built or published yet)
+    * reads as the typed empty frame. */
   def queryAll(): DataFrame = {
     configChecked
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    if (!exists(treePath)) {
-      val schema = StructType(
-        StructField("reduce_key", StringType) +: encR.schema.fields)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    } else readFinals().select($"reduce_key" +: encR.schema.fieldNames.toSeq
+    readFinals().select($"reduce_key" +: encR.schema.fieldNames.toSeq
       .map(f => col(s"payload.$f")): _*)
   }
 
@@ -3056,13 +2889,7 @@ class Executer[D, R <: Product: TypeTag](
     * as [[delete]], documented there). */
   def contributors(key: String): DataFrame = {
     configChecked
-    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-    if (!exists(mapResultsPath)) {
-      val schema = StructType(Seq(
-        StructField("doc_id", StringType), StructField("bucket", IntegerType)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    } else readMapResults().where($"reduce_key" === key)
-      .select("doc_id", "bucket")
+    readMapResults().where($"reduce_key" === key).select("doc_id", "bucket")
   }
 
   /** Reverse provenance: every (reduce key, bucket) a document feeds —
@@ -3072,18 +2899,11 @@ class Executer[D, R <: Product: TypeTag](
     * its id, so the scan reads 1/fanIn of the table regardless of size. */
   def contributionsOf(docId: String): DataFrame = {
     configChecked
-    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-    if (!exists(mapResultsPath)) {
-      val schema = StructType(Seq(
-        StructField("reduce_key", StringType), StructField("bucket", IntegerType)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    } else {
-      val id = Executer.normDocId(docId)
-      val parent = Executer.parentOf(id, config.fanIn)
-      readMapResults()
-        .where($"parent" === parent && $"doc_id" === id)
-        .select("reduce_key", "bucket")
-    }
+    val id = Executer.normDocId(docId)
+    readMapResults()
+      .where($"parent" === Executer.parentOf(id, config.fanIn) &&
+        $"doc_id" === id)
+      .select("reduce_key", "bucket")
   }
 
   /** True while the store's current generation holds no live map data
@@ -3102,11 +2922,7 @@ class Executer[D, R <: Product: TypeTag](
     * `map_results`; the caller bounds any collect. */
   def documentIds(): DataFrame = {
     configChecked
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    if (!exists(mapResultsPath))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("doc_id", StringType))))
-    else readMapResults().select("doc_id").distinct()
+    readMapResults().select("doc_id").distinct()
   }
 
   // ---------------------------------------------------------------------
@@ -3135,22 +2951,12 @@ class Executer[D, R <: Product: TypeTag](
   }
 
   private def refreshViews(): Unit = registeredViews.foreach { n =>
-    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
     queryAll().createOrReplaceTempView(n)
-    (if (exists(treePath))
-      readFinals().select($"fpart" +: $"reduce_key" +:
+    readFinals().select($"fpart" +: $"reduce_key" +:
         encR.schema.fieldNames.toSeq.map(f => col(s"payload.$f")): _*)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(StructField("fpart", IntegerType) +:
-        StructField("reduce_key", StringType) +: encR.schema.fields))
-    ).createOrReplaceTempView(s"${n}_finals")
-    (if (exists(mapResultsPath))
-      readMapResults().select("reduce_key", "doc_id", "bucket")
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("reduce_key", StringType),
-        StructField("doc_id", StringType),
-        StructField("bucket", IntegerType))))
-    ).createOrReplaceTempView(s"${n}_provenance")
+      .createOrReplaceTempView(s"${n}_finals")
+    readMapResults().select("reduce_key", "doc_id", "bucket")
+      .createOrReplaceTempView(s"${n}_provenance")
   }
 
   /** Drop all stored state for one reduce key — the reference's public
@@ -3953,21 +3759,6 @@ class Executer[D, R <: Product: TypeTag](
     }
   }
 
-  private def readChangedLocal(v: Long): Seq[String] = {
-    if (!exists(changedLocalPath(v))) return Nil
-    val in = new java.io.DataInputStream(
-      stateFs.open(new Path(changedLocalPath(v))))
-    try Executer.decodeKeyList(in) finally in.close()
-  }
-
-  private def changedHorizon(): Long =
-    if (!exists(changedHorizonPath)) -1L
-    else {
-      val in = new java.io.DataInputStream(
-        stateFs.open(new Path(changedHorizonPath)))
-      try in.readLong() finally in.close()
-    }
-
   /** Migrate the store to a different tree layout (fanIn / finalParts)
     * by rebuilding from the PERSISTED map output — the user map is never
     * re-run and the source corpus is never touched, which is the point:
@@ -4096,7 +3887,8 @@ class Executer[D, R <: Product: TypeTag](
     // baselines older than what survives — the same contract as
     // time-traveling to a GC'd generation.
     val cutoff = pending.version - config.manifestRetention
-    if (cutoff > changedHorizon() && exists(changedDirPath)) {
+    if (cutoff > StoreSnapshot.horizon(stateFs, storeRoot) &&
+        exists(changedDirPath)) {
       // Horizon BEFORE the deletes (code-review r8): a crash between
       // the two then refuses queries it could still have answered —
       // conservative — instead of silently reading pruned generations

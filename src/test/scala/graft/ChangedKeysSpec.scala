@@ -209,10 +209,73 @@ class ChangedKeysSpec extends AnyFunSuite {
     intercept[IllegalStateException] { ex.changedKeysSince(v0) }
   }
 
+  test("a compact() racing the poll is refused on both surfaces, never " +
+      "under-reported") {
+    val store = TestTmp.dir("graft-chg-race")
+    val ex = new Executer(PeopleCountByState, store, cfg)
+    ex.execute(spark.createDataset(Seq(Person("a", "CA"))))
+    val v0 = ex.snapshotVersion()
+    ex.execute(spark.createDataset(Seq(Person("a", "TX"))))
+    ex.execute(spark.createDataset(Seq(Person("b", "WA"))))
+    assert(changed(ex, v0) == Set("CA", "TX", "WA"))
+    // The same store through a filesystem that prunes generation v0+1's
+    // record between the poll's horizon check and its listing.
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${RacyHorizonFileSystem.Scheme}.impl",
+      classOf[RacyHorizonFileSystem].getName)
+    val racy = s"${RacyHorizonFileSystem.Scheme}://$store"
+    val reader = new Executer(PeopleCountByState, racy, cfg)
+    val polls = Seq[(String, () => Any)](
+      "engine" -> (() => reader.changedKeysSince(v0).collect()),
+      "external" ->
+        (() => graft.sources.StoreReader.changedKeysSince(spark, racy, v0)
+          .collect()))
+    for ((surface, poll) <- polls) {
+      new java.io.File(s"$store/changed/_horizon").delete()
+      RacyHorizonFileSystem.arm(s"$store/changed/c${v0 + 1}", v0 + 1)
+      val e = intercept[IllegalStateException](poll())
+      assert(e.getMessage.contains("pruned concurrently"), s"$surface: $e")
+      assert(RacyHorizonFileSystem.fired, s"$surface: the race never ran")
+    }
+  }
+
   test("legacy stores refuse: generations are a manifest construct") {
     val store = LegacyStore.build("graft-chg-legacy")
     LegacyStore.assertRefused(store) {
       new Executer(PeopleCountByState, store, cfg).changedKeysSince(-1L)
     }
   }
+}
+
+/** A local filesystem under its own scheme that acts out a `compact()`
+  * racing a changed-keys poll. Armed with a record path and the horizon
+  * that prunes it, the first `exists` of that record writes
+  * `changed/_horizon` — `compact()` writes the horizon before deleting
+  * records — and answers false, as if the record were already deleted.
+  * Registered under `fs.<Scheme>.impl`, the seam
+  * [[graft.core.NoChmodLocalFileSystem]] uses for `file`. */
+class RacyHorizonFileSystem extends graft.core.NoChmodLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${RacyHorizonFileSystem.Scheme}:///")
+
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean = {
+    val armed = RacyHorizonFileSystem.armed.get
+    armed match {
+      case Some((record, horizon)) if p.toUri.getPath == record &&
+          RacyHorizonFileSystem.armed.compareAndSet(armed, None) =>
+        val out = new java.io.DataOutputStream(new java.io.FileOutputStream(
+          new java.io.File(new java.io.File(record).getParentFile, "_horizon")))
+        try out.writeLong(horizon) finally out.close()
+        false
+      case _ => super.exists(p)
+    }
+  }
+}
+
+object RacyHorizonFileSystem {
+  val Scheme = "racyhorizon"
+  private[graft] val armed =
+    new java.util.concurrent.atomic.AtomicReference[Option[(String, Long)]](None)
+  def arm(record: String, horizon: Long): Unit = armed.set(Some((record, horizon)))
+  def fired: Boolean = armed.get.isEmpty
 }

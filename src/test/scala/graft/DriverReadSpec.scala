@@ -23,12 +23,12 @@ object CityCountByState extends MapReduceTask[Resident, CityPop] {
 }
 
 /** Key reads are served on the driver from the keys' final partitions
-  * ([[Executer.readKeysDriver]]): no Spark job per read, the Spark plan
-  * kept only past the driver-read gate. Pins: each read and a
-  * local-only changed-keys poll runs 0 listener-counted jobs; a local
-  * first build runs none and says so in `lastStats`; a reclaimed
-  * generation fails loudly in both spellings. [[DriverReadProps]] pins
-  * driver ≡ Spark plan under churn. */
+  * ([[graft.core.StoreSnapshot.keysRead]]): no Spark job per read, the
+  * Spark plan kept only past the driver-read gate. Pins: each read, a
+  * local-only changed-keys poll and a before/after diff over one run 0
+  * listener-counted jobs; a local first build runs none and says so in
+  * `lastStats`; a reclaimed generation fails loudly in both spellings.
+  * [[DriverReadProps]] pins driver ≡ Spark plan under churn. */
 class DriverReadSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
@@ -50,7 +50,8 @@ class DriverReadSpec extends AnyFunSuite {
 
   test("key reads and a local-only changed-keys poll run 0 Spark jobs") {
     val store = TestTmp.dir("graft-dread-zero")
-    val ex = new Executer(PeopleCountByState, store, cfg)
+    // singleOutput, so diffSince (paired by key) serves this store too.
+    val ex = new Executer(PeopleCountSingle, store, cfg)
     ex.execute(spark.createDataset(Seq(
       Person("a", "CA"), Person("b", "TX"), Person("c", "CA"))))
     val v0 = ex.snapshotVersion()
@@ -70,7 +71,12 @@ class DriverReadSpec extends AnyFunSuite {
       "keysQuery pinned" ->
         (() => StoreReader.keysQuery(spark, store, Seq("CA", "TX"), v0).collect()),
       "external changedKeysSince" ->
-        (() => StoreReader.changedKeysSince(spark, store, v0).collect()))
+        (() => StoreReader.changedKeysSince(spark, store, v0).collect()),
+      // Local records and driver key reads at both generations, paired
+      // by key on the driver.
+      "diffSince" -> (() => ex.diffSince(v0).collect()),
+      "external diffSince" ->
+        (() => StoreReader.diffSince(spark, store, v0).collect()))
     for ((name, read) <- reads) {
       val n = jobs(read())
       assert(n == 0, s"$name ran $n Spark jobs")
@@ -82,6 +88,13 @@ class DriverReadSpec extends AnyFunSuite {
       Set("CA", "NV"))
     assert(StoreReader.changedKeysSince(spark, store, v0).as[String]
       .collect().toSet == Set("CA", "NV"))
+    def feed(df: DataFrame) = df
+      .select($"reduce_key", $"change_type", $"old_count", $"new_count")
+      .as[(String, String, Option[Long], Option[Long])].collect().toSet
+    val want = Set(("CA", "update", Some(2L), Some(1L)),
+      ("NV", "insert", None, Some(1L)))
+    assert(feed(ex.diffSince(v0)) == want)
+    assert(feed(StoreReader.diffSince(spark, store, v0)) == want)
   }
 
   test("a reclaimed generation fails loudly in both spellings") {
@@ -101,14 +114,14 @@ class DriverReadSpec extends AnyFunSuite {
     val fresh = new Executer(PeopleCountByState, store, cfg)
     loud("queryAt")(fresh.queryAt("CA", v0).collect())
     loud("query plan at v0")(
-      fresh.keysPlan(fresh.snapshotAt(v0), Seq("CA")).collect())
+      fresh.snapshotAt(v0).keysPlan(Seq("CA")).collect())
     // The writer still caches v0's manifest; its data files are gone.
     loud("queryAt, cached manifest")(ex.queryAt("CA", v0).collect())
     loud("query plan at v0, cached manifest")(
-      ex.keysPlan(ex.snapshotAt(v0), Seq("CA")).collect())
+      ex.snapshotAt(v0).keysPlan(Seq("CA")).collect())
     loud("pointQuery")(StoreReader.pointQuery(spark, store, "CA", v0).collect())
     loud("pointQuery plan")(
-      StoreReader.keysQueryPlan(spark, store, Seq("CA"), v0).collect())
+      StoreReader.snapshot(spark, store, v0).get.keysPlan(Seq("CA")).collect())
   }
 }
 
@@ -190,9 +203,12 @@ object DriverReadProps extends Properties("DriverRead") {
       val keys = states :+ "ZZ-absent"
       val head = ex.snapshotAt(-1L)
       val old = pinnable.head
+      def flat(plan: DataFrame) = plan.select("reduce_key", "payload.*")
       def enginePlan(v: Long, ks: Seq[String]) =
-        ex.keysPlan(ex.snapshotAt(v), ks).select("reduce_key", "payload.*")
-      val served = keys.forall(k => ex.keysDriver(head, Seq(k)).isDefined)
+        flat(ex.snapshotAt(v).keysPlan(ks))
+      def externalPlan(v: Long, ks: Seq[String]) =
+        flat(StoreReader.snapshot(spark, store, v).get.keysPlan(ks))
+      val served = keys.forall(k => head.keysRead(Seq(k)).opened.isDefined)
       val queryOk = keys.forall(k => same(ex.query(k).toDF(),
         enginePlan(-1L, Seq(k)).drop("reduce_key")))
       val keysOk = same(ex.queryKeys(keys), enginePlan(-1L, keys)) &&
@@ -201,9 +217,9 @@ object DriverReadProps extends Properties("DriverRead") {
         enginePlan(old, Seq(k)).drop("reduce_key")))
       val extOk = Seq(-1L, old).forall { v =>
         keys.forall(k => same(StoreReader.pointQuery(spark, store, k, v),
-            StoreReader.keysQueryPlan(spark, store, Seq(k), v))) &&
+            externalPlan(v, Seq(k)))) &&
           same(StoreReader.keysQuery(spark, store, keys, v),
-            StoreReader.keysQueryPlan(spark, store, keys, v))
+            externalPlan(v, keys))
       }
       val ok = served && queryOk && keysOk && atOk && extOk
       if (!ok) println(s"DRIVER READ DIVERGENCE: schedule=$sched " +

@@ -128,18 +128,22 @@ class PlanSpec extends AnyFunSuite {
     ex.execute(spark.createDataset(Seq(
       Person("a", "CA"), Person("b", "CA"), Person("c", "TX"))))
     // The driver read opens only the key's fpart; the Spark plan it
-    // falls back to past the gate partition-prunes the reduce tree.
+    // falls back to past the gate scans only that fpart's files.
+    def dirOf(f: String): String = {
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getParent.getParent.getName + "/" + p.getParent.getName
+    }
+    def opened(snap: graft.core.StoreSnapshot, keys: Seq[String]) =
+      snap.keysRead(keys).opened.get.map(f => dirOf(f.toString)).toSet
+    def planned(snap: graft.core.StoreSnapshot, keys: Seq[String]) =
+      snap.keysPlan(keys).inputFiles.map(dirOf).toSet
+    def fparts(keys: Seq[String]) = keys.map(k =>
+      s"level=2/part=${graft.core.Executer.fpartHash(k, 64)}").toSet
     val head = ex.snapshotAt(-1L)
-    def opened(keys: Seq[String]): Set[String] =
-      ex.keysDriver(head, keys).get._2.map(f =>
-        f.getParent.getParent.getName + "/" + f.getParent.getName).toSet
-    assert(opened(Seq("CA")) ==
-      Set(s"level=2/part=${graft.core.Executer.fpartHash("CA", 64)}"),
-      s"point query opened ${opened(Seq("CA"))}")
-    val p = ex.keysPlan(head, Seq("CA")).queryExecution.executedPlan.toString
-    val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("level") && pf.contains("part"),
-      s"point query does not partition-prune the reduce tree: $pf")
+    assert(opened(head, Seq("CA")) == fparts(Seq("CA")),
+      s"point query opened ${opened(head, Seq("CA"))}")
+    assert(planned(head, Seq("CA")) == fparts(Seq("CA")),
+      s"point query plan scans ${planned(head, Seq("CA"))}")
 
     // Reverse provenance prunes map_results to the doc's single parent
     // partition (parent is a pure function of the doc id).
@@ -151,33 +155,33 @@ class PlanSpec extends AnyFunSuite {
       .map(_.getString(0)).toSeq == Seq("CA"))
 
     // Multi-key read opens at most the keys' fparts; its fallback plan
-    // prunes to them (a `part IN (...)` partition filter), never a full
-    // final-table scan.
+    // scans only their files, never a full final-table scan.
     val qk = ex.queryKeys(Seq("CA", "TX"))
-    val fp = Seq("CA", "TX").map(k => s"level=2/part=${graft.core.Executer.fpartHash(k, 64)}")
-    assert(opened(Seq("CA", "TX")).subsetOf(fp.toSet),
-      s"queryKeys opened ${opened(Seq("CA", "TX"))}, wanted within $fp")
-    val p3 = ex.keysPlan(head, Seq("CA", "TX")).queryExecution.executedPlan.toString
-    val pf3 = p3.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf3.contains("level") && pf3.contains("part"),
-      s"queryKeys does not partition-prune the reduce tree: $pf3")
+    val fp = fparts(Seq("CA", "TX"))
+    assert(opened(head, Seq("CA", "TX")).subsetOf(fp),
+      s"queryKeys opened ${opened(head, Seq("CA", "TX"))}, wanted within $fp")
+    assert(planned(head, Seq("CA", "TX")).subsetOf(fp),
+      s"queryKeys plan scans ${planned(head, Seq("CA", "TX"))}, wanted within $fp")
     assert(qk.collect().map(r => (r.getString(0), r.getLong(2))).toSet ==
       Set(("CA", 2L), ("TX", 1L)))
     // Absent keys contribute no rows; empty key set returns empty.
     assert(ex.queryKeys(Seq("CA", "ZZ")).count() == 1L)
     assert(ex.queryKeys(Nil).count() == 0L)
 
-    // The before/after change feed prunes BOTH snapshot reads to the
-    // changed keys' fparts — a diff poll reads O(churn) partitions,
-    // never a full final-table scan on either side.
+    // The before/after change feed reads BOTH sides with these key
+    // reads, at `v` and at the head: each opens (and its fallback plan
+    // scans) only the changed keys' fparts — a diff poll reads O(churn)
+    // partitions, never a full final-table scan on either side.
     val v = ex.snapshotVersion()
     ex.execute(spark.createDataset(Seq(Person("c", "NV"))))
     val diff = ex.diffSince(v)
-    val p4 = diff.queryExecution.executedPlan.toString
-    val pfs = p4.linesIterator.filter(_.contains("PartitionFilters")).toSeq
-    assert(pfs.size >= 2 && pfs.forall(l =>
-        l.contains("level") && l.contains("part")),
-      s"diffSince does not partition-prune both sides: $pfs")
+    val changed = Seq("TX", "NV")
+    for (snap <- Seq(ex.snapshotAt(v), ex.snapshotAt(-1L))) {
+      assert(opened(snap, changed).subsetOf(fparts(changed)),
+        s"diffSince side at ${snap.version} opened ${opened(snap, changed)}")
+      assert(planned(snap, changed).subsetOf(fparts(changed)),
+        s"diffSince side at ${snap.version} plans ${planned(snap, changed)}")
+    }
     assert(diff.select($"reduce_key", $"change_type").as[(String, String)]
       .collect().toSet == Set(("TX", "delete"), ("NV", "insert")))
   }
@@ -328,12 +332,11 @@ class PlanSpec extends AnyFunSuite {
     def parts(files: Seq[String]): Set[String] = files.map(f =>
       f.split("/").find(_.startsWith("part=")).getOrElse("?")).toSet
     for (gen <- Seq(-1L, v)) {
-      val opened = parts(graft.sources.StoreReader
-        .keysRead(spark, ex.storePath, keys, gen).opened.map(_.toString))
+      val snap = graft.sources.StoreReader.snapshot(spark, ex.storePath, gen).get
+      val opened = parts(snap.keysRead(keys).opened.get.map(_.toString))
       assert(opened.nonEmpty && opened.size <= 2,
         s"q114 at $gen opened partitions $opened; wanted <=2 (two keys)")
-      val planned = parts(graft.sources.StoreReader
-        .keysQueryPlan(spark, ex.storePath, keys, gen).inputFiles.toSeq)
+      val planned = parts(snap.keysPlan(keys).inputFiles.toSeq)
       assert(planned.nonEmpty && planned.size <= 2,
         s"q114 fallback at $gen plans partitions $planned; wanted <=2")
     }

@@ -11,8 +11,11 @@ import graft.sources.StoreReader
   * updates, document purges, full-key deletes, and `compact()`; after
   * every schedule each external read — `finals` (head AND pinned),
   * `pointQuery`, `keysQuery`, `contributors` (through the merge-on-
-  * read tombstone overlay), `changedKeysSince`, and `diffSince` — is
-  * compared against the engine's own spelling on the same store.
+  * read tombstone overlay), and `changedKeysSince` — is compared
+  * against the engine's own spelling on the same store. `diffSince`
+  * runs the same shared code on both surfaces, so both are compared
+  * against an in-test reference instead: a full outer join of the
+  * engine's `queryAllAt` at both generations over the changed keys.
   * StoreReaderSpec pins directed matrices; this property says the two
   * surfaces agree at EVERY reachable state a few hundred random
   * operations can produce, including post-compact horizon refusals
@@ -127,6 +130,32 @@ object StoreReaderChurnProps extends Properties("StoreReaderChurn") {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.mkString("|")).toSet
 
+  /** The before/after feed `(since, v]` built independently of the
+    * shared diff: the window's changed keys, and the engine's full-table
+    * `queryAllAt` at both generations restricted to them, full-outer
+    * joined; a zero-churn window images nothing at `since`. The
+    * refusals the contract names: `since`'s manifest reclaimed on disk
+    * (with churn to image), or the records' horizon, both
+    * IllegalStateException. */
+  private def referenceDiff(since: Long,
+      v: Long): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import spark.implicits._
+    val keys = ex.changedKeysSince(since).as[String].collect().toSeq
+    if (keys.nonEmpty && !new java.io.File(s"$store/_manifests/m$since").exists)
+      throw new IllegalStateException(s"generation $since was reclaimed")
+    def side(gen: Long, prefix: String, flag: String) = {
+      val df = ex.queryAllAt(gen).where(col("reduce_key").isin(keys: _*))
+      df.select((col("reduce_key") +: df.columns.toSeq.tail.map(c =>
+        col(c).as(s"${prefix}_$c"))) :+ lit(true).as(flag): _*)
+    }
+    side(if (keys.isEmpty) v else since, "old", "_was").join(side(v, "new", "_is"), Seq("reduce_key"),
+        "full_outer")
+      .withColumn("change_type", when(col("_was").isNull, "insert")
+        .when(col("_is").isNull, "delete").otherwise("update"))
+      .drop("_was", "_is")
+  }
+
   property("every external read ≡ the engine's own spelling, at every " +
       "reachable state") = Prop.forAll(genSchedule) { sched =>
     sched.foreach(run)
@@ -177,9 +206,11 @@ object StoreReaderChurnProps extends Properties("StoreReaderChurn") {
     val ckX = outcome(StoreReader.changedKeysSince(spark, store, since))
     val dfE = outcome(ex.diffSince(sinceD))
     val dfX = outcome(StoreReader.diffSince(spark, store, sinceD))
-    val cdcOk = since >= -1 && since <= v && ckE == ckX && dfE == dfX
+    val dfR = outcome(referenceDiff(sinceD, v))
+    val cdcOk = since >= -1 && since <= v && ckE == ckX && dfE == dfR &&
+      dfX == dfR
     if (!cdcOk) println(s"CDC DETAIL: since=$since sinceD=$sinceD " +
-      s"ckE=$ckE ckX=$ckX dfE=$dfE dfX=$dfX")
+      s"ckE=$ckE ckX=$ckX dfE=$dfE dfX=$dfX reference=$dfR")
     val refusalOk = h <= 0 || {
       val engineThrew =
         try { ex.changedKeysSince(h - 1); false }

@@ -34,6 +34,10 @@ class StoreReaderSpec extends AnyFunSuite {
   private def partsOf(files: Seq[String]): Set[String] = files.map(f =>
     f.split("/").find(_.startsWith("part=")).getOrElse("?")).toSet
 
+  /** The shared read layer at `version`, as the external reader sees it. */
+  private def snap(store: String, version: Long = -1L) =
+    StoreReader.snapshot(spark, store, version).get
+
   private def externalState(store: String): Map[String, Long] =
     StoreReader.finals(spark, store).as[(String, String, Long)].collect()
       .map { case (_, s, c) => s -> c }.toMap
@@ -88,12 +92,11 @@ class StoreReaderSpec extends AnyFunSuite {
         s"external point read of $key diverges from the engine")
       // The pruning claim: every file the read opens is the key's fpart
       // (and so is every file its fallback plan scans).
-      val parts = partsOf(StoreReader.keysRead(spark, store, Seq(key), -1L)
-        .opened.map(_.toString))
+      val parts = partsOf(snap(store).keysRead(Seq(key))
+        .opened.get.map(_.toString))
       assert(parts == Set(s"part=${Executer.fpartHash(key, 2)}"),
         s"point query of $key read partitions $parts")
-      val planned = partsOf(
-        StoreReader.keysQueryPlan(spark, store, Seq(key)).inputFiles.toSeq)
+      val planned = partsOf(snap(store).keysPlan(Seq(key)).inputFiles.toSeq)
       assert(planned.size == 1, s"point query of $key plans partitions $planned")
     }
     // Absent key: empty result, payload schema intact.
@@ -107,8 +110,7 @@ class StoreReaderSpec extends AnyFunSuite {
     val multi = StoreReader.keysQuery(spark, store, keys)
     assert(m(multi.as[(String, String, Long)].collect()) ==
       m(ex.queryKeys(keys).as[(String, String, Long)].collect()))
-    val mparts = partsOf(StoreReader.keysRead(spark, store, keys, -1L)
-      .opened.map(_.toString))
+    val mparts = partsOf(snap(store).keysRead(keys).opened.get.map(_.toString))
     assert(mparts.nonEmpty && mparts.size <= 2,
       s"keysQuery read partitions $mparts")
   }
@@ -131,12 +133,13 @@ class StoreReaderSpec extends AnyFunSuite {
     assert(miss.collect().isEmpty)
     assert(miss.columns.toSeq == Seq("reduce_key", "state", "count"),
       "miss-path read must keep the payload schema")
-    val missRead = StoreReader.keysRead(spark, store, Seq(missKey), -1L)
-    assert(missRead.footer.isDefined && missRead.opened.isEmpty,
+    val missRead = snap(store).keysRead(Seq(missKey))
+    assert(missRead.footer.isDefined && missRead.opened.contains(Nil),
       s"miss-path read footer ${missRead.footer} and opened " +
         s"${missRead.opened}; wanted one footer and no data file")
     // Its fallback plan holds at most one schema-salvage file.
-    val missPlan = StoreReader.keysQueryPlan(spark, store, Seq(missKey))
+    val missPlan = snap(store).keysPlan(Seq(missKey))
+      .select("reduce_key", "payload.*")
     assert(missPlan.collect().isEmpty)
     assert(missPlan.columns.toSeq == Seq("reduce_key", "state", "count"))
     assert(missPlan.inputFiles.length <= 1,
@@ -148,8 +151,8 @@ class StoreReaderSpec extends AnyFunSuite {
     // A hit among misses still opens the hit's partition only.
     val mixed = StoreReader.keysQuery(spark, store, Seq("CA", missKey))
     assert(m(mixed.as[(String, String, Long)].collect()) == Map("CA" -> 12L))
-    val parts = partsOf(StoreReader.keysRead(spark, store,
-      Seq("CA", missKey), -1L).opened.map(_.toString))
+    val parts = partsOf(snap(store).keysRead(Seq("CA", missKey))
+      .opened.get.map(_.toString))
     assert(parts == Set(s"part=$caPart"), s"mixed keysQuery read $parts")
   }
 
