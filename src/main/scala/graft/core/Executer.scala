@@ -306,7 +306,11 @@ object Executer {
     * re-scanning them). [[DriverMergeMaxBytes]] already bounds the same
     * content to ~1 MB of parquet; this caps pathological row counts
     * (thousands of near-empty rows per KB) independently. Overflow
-    * falls back to the distributed spelling, results unchanged. */
+    * falls back to the distributed spelling, results unchanged. The
+    * driver map read ([[Executer!.readMapParentsDriver]]) caps the
+    * parents' rows it keeps for the pruned recompute at the same
+    * count: past it, it decodes only the incoming docs' own rows and the
+    * recompute reads its level-0 rows with a job. */
   private[core] final val DriverMergeMaxRows = 1 << 18
 
   /** Byte ceiling on the LIVE map_results content of the incoming
@@ -319,10 +323,11 @@ object Executer {
     * (~1/fanIn of the table). Measured (ProbeMapRead, map-shaped
     * parents, min of 5): the driver read decodes ~9 MB/100 ms and the
     * probe collect job costs 200–350 ms flat, so the read wins up to
-    * ~25 MB; 16 MB keeps a 2× margin. Row density is guarded separately
-    * (the read drops its retained rows past [[DriverMergeMaxRows]]).
-    * Batches whose parents sum past this ceiling keep the pushed-down
-    * probe job unchanged. */
+    * ~25 MB; 16 MB keeps a 2× margin. The read streams every row of the
+    * parents but decodes only the rows it returns: the incoming docs'
+    * own, plus — for a recompute task, up to [[DriverMergeMaxRows]] of
+    * them — the parents' other live rows. Batches whose parents sum past
+    * this ceiling keep the pushed-down probe job unchanged. */
   private[core] final val DriverMapReadMaxBytes = 16L << 20
 
   /** Byte ceiling on the reduce-tree content the fully-driver pruned
@@ -622,7 +627,6 @@ class Executer[D, R <: Product: TypeTag](
       // an empty one on a store with nothing published) that every write
       // step below mutates in memory and publishPending() lands.
       pending = publishedSnapshot().getOrElse(Executer.Unpublished)
-      pendingRev += 1
       pendingDirty = false
       writerThread = Thread.currentThread().getId
       val r = f
@@ -678,7 +682,6 @@ class Executer[D, R <: Product: TypeTag](
     * holds the lease. Mutated in memory by each write step; published by
     * [[publishPending]]. */
   @volatile private var pending: Snapshot = _
-  private var pendingRev: Long = 0L // bumps per model mutation → plan-cache key
   private var pendingDirty = false
   // The thread currently mutating under the lease: only ITS reads may
   // resolve the half-applied `pending` generation (the writer must see
@@ -747,7 +750,7 @@ class Executer[D, R <: Product: TypeTag](
       acc.updated(t, acc.getOrElse(t, Vector.empty) ++ fs)
     }
     pending = pending.copy(live = live)
-    pendingRev += 1; pendingDirty = true
+    pendingDirty = true
   }
 
   /** Retire every live file under one partition directory (store-relative,
@@ -775,13 +778,12 @@ class Executer[D, R <: Product: TypeTag](
       live = keepLive,
       retired = pending.retired ++
         dead.map(Retired(_, pending.version + 1, now)))
-    pendingRev += 1
   }
 
   private def modelSetTombLocal(ref: Option[String]): Unit = {
     val old = pending.tombLocal
     pending = pending.copy(tombLocal = ref)
-    pendingRev += 1; pendingDirty = true
+    pendingDirty = true
     old.filter(o => !ref.contains(o)).foreach(o =>
       retirePaths(Seq(o), keepLive = pending.live))
   }
@@ -815,7 +817,6 @@ class Executer[D, R <: Product: TypeTag](
       }
     }
     pending = next
-    pendingRev += 1
     pendingDirty = false
     manifestCache.put(v, next)
   }
@@ -1153,7 +1154,13 @@ class Executer[D, R <: Product: TypeTag](
           (norm, t.reduceKey(r), r)
         }.toSeq
       }
-      val mappedBase: DataFrame = localMapped match {
+      // The batch's Spark plans below (`mappedBase`/`mapped`, the id
+      // projections, `existing` and everything derived from them) are
+      // lazy: the distributed spelling builds each right before the
+      // action that needs it, while a driver-resident batch builds one
+      // only when a gate trips and a fallback runs it — its common path
+      // analyzes no plan at all.
+      lazy val mappedBase: DataFrame = localMapped match {
         case Some(rows) =>
           spark.createDataset(rows)(encKR).toDF("doc_id", "reduce_key", "payload")
         case None => docsP
@@ -1195,20 +1202,7 @@ class Executer[D, R <: Product: TypeTag](
           }
           .toDF("doc_id", "reduce_key", "payload")
       }
-      val mapped: DataFrame = mappedBase
-        .withColumn("doc_id", upper($"doc_id")) // no-op for local rows: one spelling
-        .withColumn(
-          "bucket",
-          StableBucketHash.stableBucket($"doc_id", config.buckets))
-        .withColumn("parent", $"bucket" / lit(config.fanIn) cast "int")
-        .withColumn("seq", lit(batchSeq))
-        .select("parent", "bucket", "reduce_key", "doc_id", "seq", "payload")
-      // A local batch's map files are written on the driver under the
-      // schema the job spelling persists from `mapped` (partition column
-      // excluded), so both spellings' files are interchangeable.
-      val localMapSchema: Option[org.apache.spark.sql.types.StructType] =
-        localMapped.map(_ => org.apache.spark.sql.types.StructType(
-          mapped.schema.filterNot(_.name == "parent")))
+      lazy val mapped: DataFrame = mapColumns(mappedBase, batchSeq)
 
       // Incoming ids come from documentId over the *documents*, not from
       // map output: a doc that now maps to zero entries must still
@@ -1216,10 +1210,10 @@ class Executer[D, R <: Product: TypeTag](
       // ONE spelling of the id projection (normalization included) —
       // the dup probes below derive from it, so the ids the guards
       // check are by construction the ids the engine stores.
-      val incomingIdsRaw = docsP
+      lazy val incomingIdsRaw = docsP
         .map(d => t.documentId(d)).toDF("doc_id")
         .select(upper($"doc_id") as "doc_id")
-      val incomingIds = incomingIdsRaw.distinct()
+      lazy val incomingIds = incomingIdsRaw.distinct()
 
       if (pending.live.getOrElse("map_results", Vector.empty).isEmpty) {
         // The duplicate-id contract holds on the initial build too
@@ -1279,7 +1273,7 @@ class Executer[D, R <: Product: TypeTag](
           // as plain Scala group-reduces and both tables land as
           // driver-written files (buildFromLocalMap). Same WAL-first
           // crash contract either way.
-          if (localSmall) buildFromLocalMap(localMapped.get, localMapSchema.get, batchSeq)
+          if (localSmall) buildFromLocalMap(localMapped.get, batchSeq)
           else { buildFromMapOutput(mapped); jobs += 2 }
           clearDirtyLog()
         }
@@ -1329,7 +1323,14 @@ class Executer[D, R <: Product: TypeTag](
                 / lit(config.fanIn)).cast("int") as "parent")
               .distinct().as[Int].collect().sorted.toSeq
           }
-        val existing = readMapResults()
+        // The PRE-batch generation, captured now: every read of the
+        // incoming parents' prior rows below (the driver probe read and,
+        // on a fallback, `existing`) resolves THIS snapshot, so a plan
+        // first built after this batch's tombstones and append have
+        // landed in the pending generation still sees the rows they
+        // replace — never the batch's own writes.
+        val preBatch = snapshotNow()
+        lazy val existing = readMapResultsAt(preBatch)
           .where($"parent".isin(incomingParents.map(Integer.valueOf): _*))
 
         // ---- probe 2: the dirty (key, parent) set ---------------------
@@ -1341,12 +1342,12 @@ class Executer[D, R <: Product: TypeTag](
         // runs exactly once per batch. The provenance flag (pair seen on
         // a stale row vs only on new map output) picks the append fast
         // path below.
-        val mappedP = if (localSmall) mapped else mapped.persist()
+        lazy val mappedP = if (localSmall) mapped else mapped.persist()
         def maintain(): Unit = {
-          val stale =
+          lazy val stale =
             if (idsSmall) existing.where($"doc_id".isin(idsProbe.toIndexedSeq: _*))
             else existing.join(incomingIds, Seq("doc_id"), "left_semi")
-          val dirtyDF = stale
+          lazy val dirtyDF = stale
             .select($"reduce_key", $"parent", lit(true) as "is_stale")
             .union(mappedP.select($"reduce_key", $"parent", lit(false) as "is_stale"))
             .distinct()
@@ -1369,9 +1370,10 @@ class Executer[D, R <: Product: TypeTag](
               withBatchShuffle(tinyBatch)(f)
             else f
           // The map-output append and the reduce-tree rewrite are
-          // independent by construction: the tree job's level-0 input
-          // is the PRE-append file snapshot (`existing`) plus the
-          // block-cached new map output, never the appended files. So
+          // independent by construction: the tree rewrite's level-0
+          // input is the pre-batch snapshot's rows (`preBatch`, read on
+          // the driver or, on a fallback, through `existing`) plus the
+          // new map output, never the appended files. So
           // the append runs as a concurrent action and the update's
           // wall clock pays max(append, tree-rewrite) instead of their
           // sum. Crash contract is unchanged: a failure of either
@@ -1387,9 +1389,8 @@ class Executer[D, R <: Product: TypeTag](
               // Driver-local batches write their per-parent files
               // directly (no job) and rename them in through the same
               // additive merge as the job spelling.
-              localMapSchema match {
-                case Some(schema) =>
-                  appendMapDriverFiles(localMapped.get, batchSeq, schema)
+              localMapped match {
+                case Some(rows) => appendMapDriverFiles(rows, batchSeq)
                 case None =>
                   // The append goes via staging: the merge's file renames
                   // are what tells the model EXACTLY which files this
@@ -1440,8 +1441,11 @@ class Executer[D, R <: Product: TypeTag](
               val newPairs = localMapped.get.map { case (id, key, _) =>
                 (key, Executer.parentOf(id, config.fanIn))
               }.distinct
-              val driverProbe = readMapParentsDriver(incomingParents,
-                idsProbe.toSet)
+              // A delta task never reads the parents' other rows: its
+              // merge needs only the incoming docs' own.
+              val driverProbe = readMapParentsDriver(preBatch,
+                incomingParents, idsProbe.toSet,
+                allRows = !(t.deltaReducible && t.singleOutput))
               liveParentRows = driverProbe.flatMap(_._2)
               driverProbe match {
                 case Some((staleVec, _)) =>
@@ -1578,10 +1582,12 @@ class Executer[D, R <: Product: TypeTag](
                 else { addTombstonesDist(incomingIds, batchSeq); jobs += 1 }
               }
               val appendJoin = startAppend(); jobs += 1
-              // The incoming docs' live pre-batch rows — `existing`'s
-              // plan predates this batch's tombstones and append, so no
-              // read-back races the concurrent writes.
-              val oldRows =
+              // The incoming docs' live pre-batch rows, built only when
+              // the distributed merge below runs: `existing` reads the
+              // captured pre-batch snapshot, so the plan never sees this
+              // batch's tombstones or append, even though it is built
+              // after both have landed in the pending generation.
+              lazy val oldRows =
                 if (!anyStale) existing.limit(0)
                 else if (idsSmall)
                   existing.where($"doc_id".isin(idsProbe.toIndexedSeq: _*))
@@ -1676,56 +1682,54 @@ class Executer[D, R <: Product: TypeTag](
             // the store filesystem (no Spark job, no commit protocol).
             writeDirtyLogLocal(pairs)
 
-            // The post-update map rows of the dirty parents, as an
-            // in-memory plan over the PRE-update file snapshot plus the
-            // cached new map output — rereducePruned reduces from this
-            // instead of re-reading (and re-listing) the just-rewritten
-            // table.
-            var appendJoin: () => Unit = () => ()
-            var level0Source: DataFrame = null
-            if (!anyStale) {
-              // Pure insert: nothing to invalidate — the new rows become
-              // additional files in their partition directories. No
-              // read-rewrite of existing state at all.
-              appendJoin = startAppend(); jobs += 1
-              level0Source = existing
-                .where($"parent".isin(dirtyParents.map(Integer.valueOf): _*))
-                .unionByName(mappedP)
-            } else {
-              // Merge-on-read invalidation (the reference's per-doc file
-              // delete, `Executer.cs:253-258`, at O(batch) write cost):
-              // tombstone the incoming ids — their pre-batch rows die at
-              // read time — and APPEND the new map output, instead of
-              // rewriting every dirty parent partition in full. Both land
-              // in the pending generation only, so a crash between them
-              // leaves the batch invisible.
-              if (idsSmall) addTombstonesLocal(idsProbe.toIndexedSeq, batchSeq)
-              else {
-                // Incoming ids exceed the driver limit even though the
-                // dirty pair set collapsed (many docs, few keys): write
-                // the tombstones distributed instead — still O(batch).
-                addTombstonesDist(incomingIds, batchSeq); jobs += 1
+            val appendJoin: () => Unit =
+              if (!anyStale) {
+                // Pure insert: nothing to invalidate — the new rows become
+                // additional files in their partition directories. No
+                // read-rewrite of existing state at all.
+                startAppend()
+              } else {
+                // Merge-on-read invalidation (the reference's per-doc file
+                // delete, `Executer.cs:253-258`, at O(batch) write cost):
+                // tombstone the incoming ids — their pre-batch rows die at
+                // read time — and APPEND the new map output, instead of
+                // rewriting every dirty parent partition in full. Both land
+                // in the pending generation only, so a crash between them
+                // leaves the batch invisible.
+                if (idsSmall) addTombstonesLocal(idsProbe.toIndexedSeq, batchSeq)
+                else {
+                  // Incoming ids exceed the driver limit even though the
+                  // dirty pair set collapsed (many docs, few keys): write
+                  // the tombstones distributed instead — still O(batch).
+                  addTombstonesDist(incomingIds, batchSeq); jobs += 1
+                }
+                startAppend()
               }
-              appendJoin = startAppend(); jobs += 1
-              // The appended files are invisible to `existing` (its file
-              // snapshot predates the append) and the new tombstones are
-              // not in its plan — so the post-update view is exactly the
-              // old snapshot minus incoming docs, plus the cached map
-              // output. No read-back of the just-written files at all.
+            jobs += 1
+            // The post-update map rows of the dirty parents, as a plan
+            // over the pre-batch snapshot plus the new map output —
+            // rereducePruned reduces from this instead of re-reading the
+            // just-appended table, and builds it only when its driver
+            // spelling falls back. `existing` resolves `preBatch`, so the
+            // appended files and the new tombstones are outside it: the
+            // post-update view is exactly the old snapshot minus the
+            // incoming docs (vacuous for a pure insert), plus the map
+            // output. No read-back of the just-written files at all.
+            lazy val level0Source: DataFrame = {
               val retained = existing
                 .where($"parent".isin(dirtyParents.map(Integer.valueOf): _*))
               val retainedMinusIncoming =
-                if (idsSmall)
+                if (!anyStale) retained
+                else if (idsSmall)
                   retained.where(!$"doc_id".isin(idsProbe.toIndexedSeq: _*))
                 else retained.join(incomingIds, Seq("doc_id"), "left_anti")
-              level0Source = retainedMinusIncoming.unionByName(mappedP)
+              retainedMinusIncoming.unionByName(mappedP)
             }
             // The driver-resident spelling of level0Source, when the
-            // probe's driver read succeeded: the SAME pre-batch live
-            // rows (read before the tombstones and the append), dirty
-            // parents only, minus the incoming docs, plus the local map
-            // output — exactly `retainedMinusIncoming ∪ mappedP`. (For
-            // a pure insert the minus-incoming filter is vacuous: no
+            // probe's driver read succeeded: the SAME live rows of
+            // `preBatch`, dirty parents only, minus the incoming docs,
+            // plus the local map output — exactly `level0Source`'s rows.
+            // (For a pure insert the minus-incoming filter is vacuous: no
             // stale rows means no live rows carry an incoming id.)
             val level0Local: Option[Seq[(String, Int, R)]] =
               liveParentRows.map { live =>
@@ -1782,7 +1786,9 @@ class Executer[D, R <: Product: TypeTag](
         // batches whose dirty pair set still collapsed); the distributed
         // branch keeps the session's AQE planning on WIDE stores and
         // narrows on small-shaped ones (see distributedWidth).
-        try maintain() finally mappedP.unpersist()
+        // Only a distributed batch persisted its map output; a local
+        // batch's `mappedP` may never have been built.
+        try maintain() finally if (!localSmall) mappedP.unpersist()
         // Bound the merge-on-read overhead: past `tombstoneLimit` live
         // tombstones, fold them into the data files now (amortized — the
         // fold is itself O(tombstoned partitions), and resets the clock).
@@ -2035,7 +2041,7 @@ class Executer[D, R <: Product: TypeTag](
     * a trip returns false with no state mutated and the distributed
     * spelling runs unchanged. */
   private def rereducePrunedDriver(
-      pairs: Seq[(String, Int)], level0Source: DataFrame,
+      pairs: Seq[(String, Int)], level0Source: => DataFrame,
       level0Local: Option[Seq[(String, Int, R)]] = None): Boolean = {
     val dirtyParents = pairs.map(_._2).distinct.sorted
     val dirtyKeys = pairs.map(_._1).distinct.sorted
@@ -2142,14 +2148,17 @@ class Executer[D, R <: Product: TypeTag](
     * finals rebuilt per dirty key).
     *
     * @param level0Source the post-update map rows of the dirty parents
-    *   (either an in-memory plan over still-live file snapshots + cached
-    *   map output, or a pruned re-read of the rewritten table). */
+    *   (either a plan over a pre-batch file snapshot + the new map
+    *   output, or a pruned re-read of the table), built at most once and
+    *   only if a Spark spelling runs: a batch served by
+    *   `level0Local` never analyzes it. */
   private def rereducePruned(
-      pairs: Seq[(String, Int)], level0Source: DataFrame,
+      pairs: Seq[(String, Int)], level0Source: => DataFrame,
       clustered: Boolean = true,
       level0Local: Option[Seq[(String, Int, R)]] = None): Unit = {
     if (pairs.isEmpty) return
-    if (rereducePrunedDriver(pairs, level0Source, level0Local)) return
+    lazy val source = level0Source
+    if (rereducePrunedDriver(pairs, source, level0Local)) return
     val dirtyParents = pairs.map(_._2).distinct.sorted
     val dirtyKeys = pairs.map(_._1).distinct.sorted
     // Superset pruning: rebuild (key ∈ dirtyKeys) × (parent ∈
@@ -2161,7 +2170,7 @@ class Executer[D, R <: Product: TypeTag](
     // recursion (observed StackOverflowError at ~600 pairs).
     val keyPred = $"reduce_key".isin(dirtyKeys: _*)
 
-    val level0 = level0Source.where(keyPred)
+    val level0 = source.where(keyPred)
     val newPartials = reduceByKeyParentSmall(level0)
       .select("parent", "reduce_key", "payload")
     val partialsOut = readPartials()
@@ -2332,13 +2341,11 @@ class Executer[D, R <: Product: TypeTag](
     * commits atomically, recovery replays rereduceAll over whatever map
     * state committed. */
   private def buildFromLocalMap(
-      rows: Seq[(String, String, R)],
-      mapDataSchema: org.apache.spark.sql.types.StructType,
-      batchSeq: Int): Unit = {
+      rows: Seq[(String, String, R)], batchSeq: Int): Unit = {
     val session = spark
     val fut = java.util.concurrent.CompletableFuture.supplyAsync { () =>
       org.apache.spark.sql.SparkSession.setActiveSession(session)
-      appendMapDriverFiles(rows, batchSeq, mapDataSchema)
+      appendMapDriverFiles(rows, batchSeq)
     }
     try {
       val partials = reduceGroupsLocal(rows.iterator.map { case (id, key, r) =>
@@ -2776,7 +2783,7 @@ class Executer[D, R <: Product: TypeTag](
         tombLocal = target.tombLocal,
         retired = pending.retired.filterNot(r => targetLiveSet(r.path)) ++
           reRetired)
-      pendingRev += 1; pendingDirty = true
+      pendingDirty = true
       newV
     }
   }
@@ -2863,7 +2870,7 @@ class Executer[D, R <: Product: TypeTag](
       dst.pending = dst.pending.copy(
         live = target.live, tombLocal = target.tombLocal,
         retired = Vector.empty)
-      dst.pendingRev += 1; dst.pendingDirty = true
+      dst.pendingDirty = true
       dst.readFinals().select("reduce_key").distinct()
         .write.mode("overwrite").parquet(dst.changedDistPath(0L))
     }
@@ -3077,17 +3084,15 @@ class Executer[D, R <: Product: TypeTag](
   // Building a parquet relation analyzes its file list into a fresh file
   // index every call, and a 1-doc update issues several independent state
   // reads (map_results once, reduce_tree three times inside
-  // rereducePruned, tombstones). Plans are cached by (table path,
-  // snapshot identity): a published manifest's file list is immutable,
-  // so its plan never goes stale, and pending-generation plans are keyed
-  // by the model revision instead. Plans captured BEFORE a mutation (e.g.
-  // the pre-append `existing` snapshot in execute) keep their own file
-  // list. Pinned by StaleListingSpec.
+  // rereducePruned, tombstones). Plans are cached by (table path, live
+  // file list) — exactly what a relation is built from. Data files are
+  // immutable and never change path, so a cached plan never goes stale,
+  // and a snapshot captured BEFORE a mutation (e.g. `execute`'s pre-batch
+  // snapshot, whose `existing` plan may be built only after the batch's
+  // append) resolves its own file list whenever it is read. Pinned by
+  // StaleListingSpec.
   private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def snapKey(s: Snapshot): String =
-    if (pending eq s) s"p$pendingRev" else s"v${s.version}"
+    new java.util.concurrent.ConcurrentHashMap[(String, Vector[String]), DataFrame]()
 
   /** The table relation under a resolved snapshot. Explicit file list +
     * basePath keeps partition-column derivation — and with it partition
@@ -3096,7 +3101,7 @@ class Executer[D, R <: Product: TypeTag](
       snap: Snapshot): DataFrame = {
     val table = new Path(path).getName
     val files = snap.live.getOrElse(table, Vector.empty)
-    val key = s"$path#${snapKey(snap)}"
+    val key = (path, files)
     val hit = relCache.get(key)
     if (hit != null) hit
     else {
@@ -3111,14 +3116,15 @@ class Executer[D, R <: Product: TypeTag](
     }
   }
 
-  private def readMapResults(): DataFrame = {
-    // One snapshot resolution for BOTH the data files and the tombstone
-    // overlay: resolving them separately could mix generations (old map
-    // files + newer tombstones ⇒ docs transiently vanish).
-    val snap = snapshotNow()
+  private def readMapResults(): DataFrame = readMapResultsAt(snapshotNow())
+
+  /** The live map rows of one resolved snapshot. One snapshot for BOTH
+    * the data files and the tombstone overlay: resolving them separately
+    * could mix generations (old map files + newer tombstones ⇒ docs
+    * transiently vanish). */
+  private def readMapResultsAt(snap: Snapshot): DataFrame =
     applyTombstones(relFor(mapResultsPath, mapReadSchema, snap), snap)
       .select("parent", "bucket", "reduce_key", "doc_id", "seq", "payload")
-  }
 
   private def readTree(): DataFrame =
     relFor(treePath, treeReadSchema, snapshotNow())
@@ -3224,8 +3230,7 @@ class Executer[D, R <: Product: TypeTag](
     * spellings the probe paths already rely on
     * (`StableBucketHash.hash` ≡ the SQL `stableBucket`). */
   private def appendMapDriverFiles(
-      rows: Seq[(String, String, R)], batchSeq: Int,
-      dataSchema: StructType): Vector[String] = {
+      rows: Seq[(String, String, R)], batchSeq: Int): Vector[String] = {
     val staging = s"$mapResultsPath.staging"
     fs.delete(new Path(staging), true)
     // One file per parent, rows sorted by reduce_key — the file set a
@@ -3233,7 +3238,7 @@ class Executer[D, R <: Product: TypeTag](
     val ser = mapWriteEnc.createSerializer()
     rows.groupBy(r => Executer.parentOf(r._1, config.fanIn)).foreach {
       case (parent, rs) =>
-        writeParquetFileDriver(dataSchema, s"$staging/parent=$parent",
+        writeParquetFileDriver(mapWriteSchema, s"$staging/parent=$parent",
           rs.sortBy(_._2).iterator.map { case (id, key, r) =>
             ser((StableBucketHash.hash(id, config.buckets), key, id,
               batchSeq, r))
@@ -3283,6 +3288,30 @@ class Executer[D, R <: Product: TypeTag](
     if (n > cap) None else Some(out.result())
   }
 
+  /** The map table's columns over a batch's raw (doc_id, reduce_key,
+    * payload) map output: normalized id, bucket, parent, the batch's
+    * seq. ONE spelling for the job write's `mapped` plan and the driver
+    * write's [[mapWriteSchema]]. */
+  private def mapColumns(raw: DataFrame, batchSeq: Int): DataFrame =
+    raw.withColumn("doc_id", upper($"doc_id")) // no-op for local rows: one spelling
+      .withColumn(
+        "bucket",
+        StableBucketHash.stableBucket($"doc_id", config.buckets))
+      .withColumn("parent", $"bucket" / lit(config.fanIn) cast "int")
+      .withColumn("seq", lit(batchSeq))
+      .select("parent", "bucket", "reduce_key", "doc_id", "seq", "payload")
+
+  /** The map files' written schema — the one the job spelling persists
+    * from `mapped` (partition column excluded), so driver-written and
+    * job-written map files are interchangeable. Derived once per handle
+    * through [[mapColumns]] over an empty frame of the map output's
+    * type: `bucket` inherits `doc_id`'s nullability there, which
+    * [[mapDriverDataSchema]] does not reproduce. */
+  private lazy val mapWriteSchema: StructType = StructType(
+    mapColumns(spark.createDataset(Seq.empty[(String, String, R)])(encKR)
+      .toDF("doc_id", "reduce_key", "payload"), 0)
+      .schema.filterNot(_.name == "parent"))
+
   /** The map table's row codec without its partition column —
     * (bucket, reduce_key, doc_id, seq, payload) — shared by the driver
     * write's serializer and the driver-side probe read, whose schema is
@@ -3299,12 +3328,14 @@ class Executer[D, R <: Product: TypeTag](
   private lazy val mapRowDeser =
     mapWriteEnc.resolveAndBind().createDeserializer()
 
-  /** The LIVE map rows of the given parent directories, read on the
-    * driver thread — no Spark job, no per-batch plan analysis. Exactly
-    * the rows `readMapResults().where(parent ∈ parents)` would scan:
-    * snapshot-resolved live files with the local tombstone overlay
+  /** The LIVE map rows of the given parent directories under `snap`,
+    * read on the driver thread — no Spark job, no plan analysis. Exactly
+    * the rows `readMapResultsAt(snap).where(parent ∈ parents)` would
+    * scan: the snapshot's live files with the local tombstone overlay
     * applied (a row survives iff no tombstone for its doc is newer than
-    * the batch that wrote it).
+    * the batch that wrote it). Each row's `doc_id` is compared as a
+    * `UTF8String` before the row is decoded, so a row is decoded only
+    * when it is returned.
     *
     * Returns (staleRows, allRows):
     *   - `staleRows` — the live rows whose doc_id ∈ `idsSet`, as
@@ -3312,50 +3343,54 @@ class Executer[D, R <: Product: TypeTag](
     *     [[DriverDirtyLimit]]+1 exactly like the probe collect's
     *     `limit(DriverDirtyLimit + 1)` (the caller derives overflow
     *     from the length, same as the job spelling);
-    *   - `allRows` — every live row as (reduce_key, parent, doc_id,
-    *     seq, payload), for the pruned recompute's level-0 reuse;
-    *     None when the count passes [[DriverMergeMaxRows]] (the probe
-    *     result above stays valid — the read degrades to probe-only
-    *     instead of wasting its decode, which is what made a 10k-doc
-    *     probe on a 456k-row store profitable: ~90 ms of streaming
-    *     decode vs a 200–350 ms collect job).
+    *   - every live row as (reduce_key, parent, doc_id, seq, payload),
+    *     for the pruned recompute's level-0 reuse — only when `allRows`
+    *     asks for them, and None past [[DriverMergeMaxRows]] of them:
+    *     from then on only `idsSet`'s rows are decoded and the read
+    *     degrades to the probe alone (a 10k-doc probe on a 456k-row
+    *     store streams ~90 ms against a 200–350 ms collect job).
     *
     * None when a whole-read gate trips — distributed tombstones
     * present (their parquet overlay stays on the job path), live bytes
     * past [[DriverMapReadMaxBytes]], or a read error — and the caller
     * runs the probe job unchanged. */
-  private def readMapParentsDriver(parents: Seq[Int], idsSet: Set[String])
+  private def readMapParentsDriver(snap: Snapshot, parents: Seq[Int],
+      idsSet: Set[String], allRows: Boolean)
       : Option[(Vector[(String, Int, R)],
         Option[Vector[(String, Int, String, Int, R)]])] = {
-    val snap = snapshotNow()
     if (tombDistNonEmpty(snap)) return None
     val files = liveMapFiles(parents, snap)
     if (files.map(_._3).sum > DriverMapReadMaxBytes) return None
     val tomb: Map[String, Int] = tombLocalEntries(snap).toMap
+    val want = idsSet.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+    val docOrdinal = mapDriverDataSchema.fieldIndex("doc_id")
     try {
       val stale = Vector.newBuilder[(String, Int, R)]
       var nStale = 0
       val all = Vector.newBuilder[(String, Int, String, Int, R)]
       var nAll = 0
-      var allOver = false
+      var keepAll = allRows
       files.foreach { case (parent, p, len) =>
         Executer.foreachRowDriver(spark, mapDriverDataSchema, p, len) { row =>
-          val (_, key, doc, seq, payload) = mapRowDeser(row)
-          val dead = tomb.get(doc).exists(ts => seq < ts)
-          if (!dead) {
-            if (idsSet(doc) && nStale <= DriverDirtyLimit) {
-              stale += ((key, parent, payload))
-              nStale += 1
-            }
-            if (!allOver) {
-              all += ((key, parent, doc, seq, payload))
-              nAll += 1
-              if (nAll > DriverMergeMaxRows) { allOver = true; all.clear() }
+          val mine = want(row.getUTF8String(docOrdinal))
+          if (mine || keepAll) {
+            val (_, key, doc, seq, payload) = mapRowDeser(row)
+            val dead = tomb.get(doc).exists(ts => seq < ts)
+            if (!dead) {
+              if (mine && nStale <= DriverDirtyLimit) {
+                stale += ((key, parent, payload))
+                nStale += 1
+              }
+              if (keepAll) {
+                all += ((key, parent, doc, seq, payload))
+                nAll += 1
+                if (nAll > DriverMergeMaxRows) { keepAll = false; all.clear() }
+              }
             }
           }
         }
       }
-      Some((stale.result(), if (allOver) None else Some(all.result())))
+      Some((stale.result(), if (keepAll) Some(all.result()) else None))
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -3878,7 +3913,7 @@ class Executer[D, R <: Product: TypeTag](
         catch { case _: java.io.IOException => () }
       }
       pending = pending.copy(retired = Vector.empty)
-      pendingRev += 1; pendingDirty = true
+      pendingDirty = true
       publishPending()
     }
     sweepOrphansLocked()

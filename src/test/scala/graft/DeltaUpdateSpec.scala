@@ -198,6 +198,37 @@ class DeltaUpdateSpec extends AnyFunSuite {
     assert(merged == unmerged)
   }
 
+  test("a local batch whose driver merge is gated off negates the " +
+      "pre-batch rows, not its own append") {
+    // A local delta batch builds its Spark plans only on a fallback. Here
+    // 100 re-keyed docs (ids spread over ~70 of 128 parents; short ids
+    // like "d7" share a handful) and their 137 keys (~56 of 64 fparts)
+    // dirty 120-odd directories, past DriverMergeMaxDirs (96): the
+    // driver merge declines, and rereduceDelta first builds the
+    // old-rows plan AFTER this batch's
+    // tombstones and append have landed in the pending generation. That
+    // plan must still read the pre-batch generation: read at first use,
+    // the tombstones hide the old rows and the append shows the new
+    // ones, and the delta retracts the batch's own rows instead.
+    val wide = ExecuterConfig(fanIn = 128, finalParts = 64)
+    val ex = new Executer(DeltaCountByState,
+      TestTmp.dir("graft-delta-prebatch"), wide)
+    ex.execute(spark.createDataset(
+      (0 until 100).map(i => Person(s"$i-d", s"K$i"))))
+    val upd = (0 until 100).map(i => Person(s"$i-d", s"M${i % 37}"))
+    val (_, jobs) = SparkJobs.count(spark)(ex.execute(spark.createDataset(upd)))
+    assert(ex.lastStats.get.mode == "delta")
+    assert(jobs > 0, "the driver merge ran: the gate this test needs did not trip")
+    val fresh = new Executer(DeltaCountByState,
+      TestTmp.dir("graft-delta-prebatch-fresh"), wide)
+    fresh.execute(spark.createDataset(upd))
+    def rows(e: Executer[Person, StatePop]): Seq[String] =
+      e.queryAll().collect().map(_.toString).sorted.toSeq
+    assert(rows(ex) == rows(fresh))
+    assert(allCounts(ex) == (0 until 100).groupBy(i => s"M${i % 37}")
+      .map { case (k, is) => k -> is.size.toLong })
+  }
+
   test("group laws hold for the declared delta tasks") {
     val t = DeltaCountByState
     val r = StatePop("CA", 7L)

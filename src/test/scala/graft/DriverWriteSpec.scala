@@ -111,6 +111,44 @@ class DriverWriteSpec extends AnyFunSuite {
     apply(batches(4), distributed = false)
   }
 
+  /** The Spark schema JSON in the footer of every map_results data file
+    * of a store. */
+  private def mapFooterSchemas(store: String): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(s"$store/map_results")
+    val files = root.getFileSystem(conf).listFiles(root, true)
+    val out = Seq.newBuilder[String]
+    while (files.hasNext) {
+      val p = files.next().getPath
+      if (p.getName.endsWith(".parquet")) {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        try out += r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally r.close()
+      }
+    }
+    out.result()
+  }
+
+  test("driver-written and job-written map files carry the same Spark " +
+      "schema in their footers") {
+    val cfg = ExecuterConfig(fanIn = 8, finalParts = 4)
+    val b = schedule(3, 2)
+    def footers(distributed: Boolean, tag: String): Set[String] = {
+      val store = TestTmp.dir(s"graft-dwschema$tag")
+      val ex = new Executer(DeltaCountByState, store, cfg)
+      b.foreach(submit(ex, _, distributed))
+      val fs = mapFooterSchemas(store)
+      assert(fs.size >= 2 && !fs.contains(null), s"$tag: footers $fs")
+      fs.toSet
+    }
+    val local = footers(distributed = false, "l")
+    val job = footers(distributed = true, "j")
+    assert(local.size == 1, s"local batches wrote ${local.size} schemas")
+    assert(local == job)
+  }
+
   /** With `driverDirtyLimit = 8`, an 8-doc local build is followed by
     * a 12-doc resubmit that runs distributed, so its tombstones land as
     * a parquet append. Every later 4-doc local batch then finds the
