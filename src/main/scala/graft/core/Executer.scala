@@ -367,7 +367,14 @@ object Executer {
 /** Per-batch maintenance observability — the reference's NLog step trace
   * (`MapReduce/Executer.cs:65-78,98-104`) re-expressed as metrics: which
   * maintenance mode ran, how many Spark actions it issued, and how much
-  * state was dirty. Exposed via [[Executer.lastStats]] and logged. */
+  * state was dirty. Exposed via [[Executer.lastStats]] and logged.
+  *
+  * `mode` names the branch a batch took; a purge
+  * ([[Executer.deleteDocuments]], a batch with no documents) reads
+  * `delete-docs` whichever branch ran. `sparkJobs` is hand-counted: the
+  * delta branch counts only the jobs it runs, the others still count
+  * some that their driver spellings skip. -1 marks a figure the branch
+  * did not compute (ids not all on the driver, an overflowed probe). */
 final case class MaintenanceStats(
     mode: String,
     sparkJobs: Int,
@@ -1031,9 +1038,14 @@ class Executer[D, R <: Product: TypeTag](
   // Ingest / update — mirrors `Executer.Execute` (`Executer.cs:31-45`)
   // ---------------------------------------------------------------------
 
-  /** One ingest-or-update batch: delete-and-invalidate prior contributions
-    * of the incoming document ids (`Executer.cs:240-261`), persist new map
-    * output, then incrementally re-reduce only the dirty subtrees.
+  /** One ingest-or-update batch — the reference's `Execute`
+    * (`Executer.cs:31-45`). Prepares the documents (auto-collect,
+    * duplicate-id check, map-contract guard, a local batch's driver-side
+    * map), builds a store's first batch, and hands every later one to
+    * [[maintainBatch]], which [[deleteDocuments]] shares:
+    * delete-and-invalidate the incoming ids' prior contributions
+    * (`Executer.cs:240-261`), persist the new map output, then
+    * incrementally re-reduce only the dirty subtrees.
     *
     * Job-count discipline (the incremental-latency contract): an update
     * must cost O(dirty) *plus a bounded number of Spark actions* — fixed
@@ -1050,7 +1062,6 @@ class Executer[D, R <: Product: TypeTag](
     // `Executer.cs:35`). No-op on a clean store.
     recoverLocked()
     val t0 = System.nanoTime()
-    var jobs = 0
     val t = task // local val: closures must not capture `this`
     val batchSeq = bumpSeq()
     // A batch submitted as a small LOCAL dataset (createDataset — the
@@ -1098,19 +1109,6 @@ class Executer[D, R <: Product: TypeTag](
       // and the cluster never re-executes the map function for it.
       val localDocRows: Option[Seq[D]] =
         if (localSmall) Some(docsL.collect().toSeq) else None
-      // One version per document per batch — REJECTED LOUDLY otherwise.
-      // Tombstones only invalidate seq < batchSeq, so two versions of a
-      // doc in one batch would BOTH survive and silently double-count
-      // its contributions forever (the reference's per-doc Execute
-      // can't express this state; a batch is our extension, and its
-      // contract is delete-and-invalidate per id). Callers coalescing
-      // micro-batches dedupe last-wins first (as ManifestChurnProps does).
-      // Local batches check free on the driver; distributed update
-      // batches detect in the existing ids-probe job below.
-      def dupIdError(id: String): Nothing =
-        throw new IllegalArgumentException(
-          s"batch contains multiple documents with id '$id': submit one " +
-            "version per document per batch (dedupe last-wins upstream)")
       // Map-output CONTRACT GUARD (VERDICT r12 #2): a task's map must emit
       // `(documentId(doc), entry)` pairs (`MapReduceTask.scala:9`; the
       // reference emits `person.Id`, `PeopleCountByState.cs:11-16`). The
@@ -1135,8 +1133,9 @@ class Executer[D, R <: Product: TypeTag](
             "corrupts delete-and-invalidate (rows persist under the " +
             "emitted id, invalidation keys on documentId)")
       // A local batch's ids are normalized once, in batch order: the
-      // duplicate check builds the set that the contract guard and the
-      // ids probe below both read.
+      // duplicate check (see [[dupIdError]]; a distributed batch's runs
+      // in the first build's probe or [[maintainBatch]]'s ids probe)
+      // builds the set that the contract guard and the ids probe read.
       val localIds: Option[scala.collection.Set[String]] =
         localDocRows.map { ds =>
           val seen = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -1154,12 +1153,12 @@ class Executer[D, R <: Product: TypeTag](
           (norm, t.reduceKey(r), r)
         }.toSeq
       }
-      // The batch's Spark plans below (`mappedBase`/`mapped`, the id
-      // projections, `existing` and everything derived from them) are
-      // lazy: the distributed spelling builds each right before the
-      // action that needs it, while a driver-resident batch builds one
-      // only when a gate trips and a fallback runs it — its common path
-      // analyzes no plan at all.
+      // The batch's Spark plans (`mappedBase`/`mapped`, the id
+      // projection and everything derived from them) are lazy: the
+      // distributed spelling builds each right before the action that
+      // needs it, while a driver-resident batch builds one only when a
+      // gate trips and a fallback runs it — its common path analyzes no
+      // plan at all.
       lazy val mappedBase: DataFrame = localMapped match {
         case Some(rows) =>
           spark.createDataset(rows)(encKR).toDF("doc_id", "reduce_key", "payload")
@@ -1208,14 +1207,14 @@ class Executer[D, R <: Product: TypeTag](
       // map output: a doc that now maps to zero entries must still
       // invalidate its previous contributions (`Executer.cs:89-91`).
       // ONE spelling of the id projection (normalization included) —
-      // the dup probes below derive from it, so the ids the guards
-      // check are by construction the ids the engine stores.
+      // the dup probes derive from it, so the ids the guards check are
+      // by construction the ids the engine stores.
       lazy val incomingIdsRaw = docsP
         .map(d => t.documentId(d)).toDF("doc_id")
         .select(upper($"doc_id") as "doc_id")
-      lazy val incomingIds = incomingIdsRaw.distinct()
 
       if (pending.live.getOrElse("map_results", Vector.empty).isEmpty) {
+        var jobs = 0
         // The duplicate-id contract holds on the initial build too
         // (ADVICE r6): local batches were checked driver-side above, but
         // a DISTRIBUTED first build used to skip the ids-probe entirely —
@@ -1281,521 +1280,542 @@ class Executer[D, R <: Product: TypeTag](
         else buildWrites()
         _lastStats = Some(MaintenanceStats("build", jobs, -1, -1, -1,
           (System.nanoTime() - t0) / 1000000))
-      } else {
-        // ---- probe 1: the incoming ids (bounded collect) --------------
-        // Local batches already hold their normalized ids (no job);
-        // `Executer.normDocId` matches the SQL `upper()` the distributed
-        // probe applies (JDK-locale upper would diverge on e.g.
-        // dotted-I). Distributed batches keep the bounded collect.
-        val idsProbe: Array[String] =
-          if (localSmall) localIds.get.toArray
-          else {
-            jobs += 1
-            // Same single job as the old distinct-collect, but grouped
-            // WITH counts so intra-batch duplicate ids are detected for
-            // free (see dupIdError above; past the driver limit the
-            // check covers only the collected prefix — documented
-            // best-effort on huge batches).
-            val counts = incomingIdsRaw
-              .groupBy($"doc_id").agg(count(lit(1)) as "n")
-              .limit(DriverDirtyLimit + 1).collect()
-            counts.find(_.getLong(1) > 1L)
-              .foreach(r => dupIdError(r.getString(0)))
-            counts.map(_.getString(0))
-          }
-        val idsSmall = idsProbe.length <= DriverDirtyLimit
-
-        // A document's bucket (hence `parent` partition) is a pure
-        // function of its id — so every prior contribution of the
-        // incoming ids lives in the parents of the incoming ids
-        // (≤ fanIn values). Small batches compute them driver-side from
-        // the probed ids (zero extra jobs); large batches pay one
-        // bounded distinct/collect. This replaces the reference's
-        // per-doc directory lookup (`Executer.cs:245-250`).
-        val incomingParents: Seq[Int] =
-          if (idsSmall)
-            idsProbe.map(Executer.parentOf(_, config.fanIn))
-              .distinct.sorted.toSeq
-          else {
-            jobs += 1
-            incomingIds
-              .select((StableBucketHash.stableBucket($"doc_id", config.buckets)
-                / lit(config.fanIn)).cast("int") as "parent")
-              .distinct().as[Int].collect().sorted.toSeq
-          }
-        // The PRE-batch generation, captured now: every read of the
-        // incoming parents' prior rows below (the driver probe read and,
-        // on a fallback, `existing`) resolves THIS snapshot, so a plan
-        // first built after this batch's tombstones and append have
-        // landed in the pending generation still sees the rows they
-        // replace — never the batch's own writes.
-        val preBatch = snapshotNow()
-        lazy val existing = readMapResultsAt(preBatch)
-          .where($"parent".isin(incomingParents.map(Integer.valueOf): _*))
-
-        // ---- probe 2: the dirty (key, parent) set ---------------------
-        // Prior contributions of incoming ids — across ALL reduce keys
-        // the doc previously mapped to (`Executer.cs:253-258`) — plus the
-        // pairs of the new map output. Small batches find stale rows with
-        // pushed-down id filters (no join, no shuffle); this action also
-        // materializes `mapped` into the block cache so the map function
-        // runs exactly once per batch. The provenance flag (pair seen on
-        // a stale row vs only on new map output) picks the append fast
-        // path below.
-        lazy val mappedP = if (localSmall) mapped else mapped.persist()
-        def maintain(): Unit = {
-          lazy val stale =
-            if (idsSmall) existing.where($"doc_id".isin(idsProbe.toIndexedSeq: _*))
-            else existing.join(incomingIds, Seq("doc_id"), "left_semi")
-          lazy val dirtyDF = stale
-            .select($"reduce_key", $"parent", lit(true) as "is_stale")
-            .union(mappedP.select($"reduce_key", $"parent", lit(false) as "is_stale"))
-            .distinct()
-          // A "tiny" batch (couple dozen docs) also runs interpreted and
-          // single-partition; larger driver-pruned batches keep codegen
-          // and a narrow fixed width.
-          val tinyBatch = idsSmall && idsProbe.length <= 64
-          // Width policy for the small-PAIRS branch: narrow fixed-width
-          // non-adaptive shuffles are right only when the BATCH is
-          // driver-small too. A batch large in documents (idsSmall
-          // false) can collapse to a small dirty pair set (few reduce
-          // keys) while its level-0 re-reduce still reads a
-          // corpus-scale slice — running THAT at 8-wide with AQE off
-          // under-parallelized the session 4× and forced sort-merge
-          // where AQE would broadcast the id set (measured: the 10k-doc
-          // lineitem update at 17.5s, most of it this; session width
-          // takes it to ~1/3). Such batches keep session width + AQE.
-          def smallBatchWidth[A](f: => A): A =
-            if (idsSmall)
-              withBatchShuffle(tinyBatch)(f)
-            else f
-          // The map-output append and the reduce-tree rewrite are
-          // independent by construction: the tree rewrite's level-0
-          // input is the pre-batch snapshot's rows (`preBatch`, read on
-          // the driver or, on a fallback, through `existing`) plus the
-          // new map output, never the appended files. So
-          // the append runs as a concurrent action and the update's
-          // wall clock pays max(append, tree-rewrite) instead of their
-          // sum. Crash contract is unchanged: a failure of either
-          // leaves the WAL in place and nothing published, so recovery
-          // re-reduces the previous generation (the batch is invisible)
-          // and re-submitting the batch completes it.
-          def startAppend(): () => Unit = {
-            val session = spark
-            val fut = java.util.concurrent.CompletableFuture.supplyAsync { () =>
-              // SQLConf.get in the job thread resolves via the active-
-              // session thread-local; a fresh pool thread has none.
-              org.apache.spark.sql.SparkSession.setActiveSession(session)
-              // Driver-local batches write their per-parent files
-              // directly (no job) and rename them in through the same
-              // additive merge as the job spelling.
-              localMapped match {
-                case Some(rows) => appendMapDriverFiles(rows, batchSeq)
-                case None =>
-                  // The append goes via staging: the merge's file renames
-                  // are what tells the model EXACTLY which files this
-                  // batch added — no listing diff that could adopt a
-                  // crashed batch's orphans. The rename fan-out is pure
-                  // filesystem work and merged files stay invisible until
-                  // the model names them at publish, so it runs here,
-                  // overlapping the tree rewrite, instead of serializing
-                  // at join; only the model mutation stays on the writer
-                  // thread. A crash between the renames and the publish
-                  // leaves orphans compact() sweeps — the same contract
-                  // as a crash before the renames.
-                  mappedP.repartition($"parent")
-                    .sortWithinPartitions($"parent", $"reduce_key")
-                    .write.partitionBy("parent")
-                    .mode("overwrite").parquet(s"$mapResultsPath.staging")
-                  mergeStagedDir(mapResultsPath)
-              }
-            }
-            () => modelAddFiles(fut.join())
-          }
-          // The probe: (distinct dirty pairs, any stale row seen, probe
-          // overflowed past the driver limit). Local batches know their
-          // NEW pairs already (the map ran driver-side), so the probe job
-          // scans only the STALE side — filter + distinct on the incoming
-          // parents, no union with map output, no cache materialization.
-          // Distributed batches keep the combined probe, which also
-          // materializes `mappedP` into the block cache so the map
-          // function runs exactly once per batch.
-          // Delta-eligible local batches collect the stale rows WITH
-          // payloads: the driver merge (rereduceDeltaDriver) negates
-          // them without a second scan. The raw-row bound is tighter
-          // than the old distinct-pair bound — overflow only routes to
-          // the heavier distributed path, never changes results.
-          // Local batches: ONE driver-side file read of the incoming
-          // parents' live map rows ([[readMapParentsDriver]] — the
-          // probe's whole input at ≤[[DriverMapReadMaxBytes]]) serves
-          // the stale probe with no Spark job AND, retained rows
-          // included, the pruned recompute's level-0 source below. A
-          // batch whose read gate trips (distributed tombstones, bytes
-          // past the ceiling, a read error) keeps the bounded collect
-          // job.
-          var staleLocalRows: Option[Array[(String, Int, R)]] = None
-          var liveParentRows: Option[Vector[(String, Int, String, Int, R)]] =
-            None
-          val (pairs, anyStale, probeOverflow) =
-            if (localSmall) {
-              val newPairs = localMapped.get.map { case (id, key, _) =>
-                (key, Executer.parentOf(id, config.fanIn))
-              }.distinct
-              // A delta task never reads the parents' other rows: its
-              // merge needs only the incoming docs' own.
-              val driverProbe = readMapParentsDriver(preBatch,
-                incomingParents, idsProbe.toSet,
-                allRows = !(t.deltaReducible && t.singleOutput))
-              liveParentRows = driverProbe.flatMap(_._2)
-              driverProbe match {
-                case Some((staleVec, _)) =>
-                  // Exactly `stale`'s rows: live (tombstone-overlaid)
-                  // pre-batch rows of the incoming parents, restricted
-                  // to the incoming ids. Same overflow decision as the
-                  // collect spelling — both truncate at the same bound.
-                  val staleRows = staleVec.toArray
-                  val all = (staleRows.iterator.map(r => (r._1, r._2))
-                    ++ newPairs.iterator).toSeq.distinct
-                  val overflow = staleRows.length > DriverDirtyLimit ||
-                    all.length > DriverDirtyLimit
-                  if (!overflow && t.deltaReducible && t.singleOutput)
-                    staleLocalRows = Some(staleRows)
-                  (all, staleRows.nonEmpty, overflow)
-                case None if t.deltaReducible && t.singleOutput =>
-                  implicit val encKPR: Encoder[(String, Int, R)] =
-                    Encoders.tuple(Encoders.STRING, Encoders.scalaInt, encR)
-                  val rows = withBatchShuffle(tinyBatch)(
-                    stale.select($"reduce_key", $"parent", $"payload")
-                      .as[(String, Int, R)]
-                      .limit(DriverDirtyLimit + 1).collect())
-                  jobs += 1
-                  val all = (rows.iterator.map(r => (r._1, r._2))
-                    ++ newPairs.iterator).toSeq.distinct
-                  val overflow = rows.length > DriverDirtyLimit ||
-                    all.length > DriverDirtyLimit
-                  if (!overflow) staleLocalRows = Some(rows)
-                  (all, rows.nonEmpty, overflow)
-                case None =>
-                  val staleRows = withBatchShuffle(tinyBatch)(
-                    stale.select($"reduce_key", $"parent").distinct()
-                      .limit(DriverDirtyLimit + 1).collect())
-                  jobs += 1
-                  val all = (staleRows.iterator
-                    .map(r => (r.getString(0), r.getInt(1)))
-                    ++ newPairs.iterator).toSeq.distinct
-                  (all, staleRows.nonEmpty, staleRows.length > DriverDirtyLimit ||
-                    all.length > DriverDirtyLimit)
-              }
-            } else {
-              val pairsProbe =
-                if (idsSmall)
-                  withBatchShuffle(tinyBatch)(
-                    dirtyDF.limit(DriverDirtyLimit + 1).collect())
-                else dirtyDF.limit(DriverDirtyLimit + 1).collect()
-              jobs += 1
-              val overflowed = pairsProbe.length > DriverDirtyLimit
-              val sampledStale = pairsProbe.exists(_.getBoolean(2))
-              // An OVERFLOWED probe is a truncated sample: a large batch
-              // of mostly-new docs plus a few resubmitted ones can fill
-              // the whole sample with is_stale=false rows while stale
-              // rows exist past the cutoff. Staleness gates tombstoning
-              // and old-row negation in the delta path below — trusting
-              // the sample there silently skips retraction (ADVICE r8,
-              // high). One bounded existence probe (limit-1 over the
-              // semi-joined stale side) makes it exact; non-overflowed
-              // probes saw the complete set and stay job-free. The
-              // localSmall branch is already exact: its stale scan's
-              // limit can only truncate NON-empty results.
-              val staleExact = sampledStale ||
-                (overflowed && { jobs += 1; !stale.isEmpty })
-              (pairsProbe.map(r => (r.getString(0), r.getInt(1))).distinct.toSeq,
-                staleExact, overflowed)
-            }
-
-          // Rebuild-fallback decision (full rationale at its branch
-          // below): dirty pair count vs live level-1 pairs, never for
-          // driver-small batches. Computed FIRST because it gates both
-          // the delta and the recompute paths.
-          val dirtyLower: Long =
-            if (probeOverflow) DriverDirtyLimit.toLong + 1L else pairs.size.toLong
-          val rebuildChosen = anyStale && !idsSmall &&
-            dirtyLower >= RebuildCheckFloor && {
-              jobs += 1
-              val totalPairs = readPartials().count()
-              val threshold = config.rebuildDirtyFraction * totalPairs
-              if (totalPairs == 0L) false
-              else if (dirtyLower >= threshold) true
-              else if (!probeOverflow) false
-              else {
-                // Overflowed probe whose lower bound did not decide:
-                // one exact count (bounded by the stale scan the
-                // distributed path would run anyway).
-                jobs += 1
-                dirtyDF.select("reduce_key", "parent").distinct().count() >=
-                  threshold
-              }
-            }
-
-          // ---- delta maintenance (abelian-group tasks) ----------------
-          // The task declared a group inverse (MapReduceTask.negate):
-          // the tree is maintained by merging reduce(old⁻ ++ new) into
-          // the stored partials/finals — the engine reads the incoming
-          // docs' OLD map rows and the touched partials, never the
-          // other documents sharing the touched keys. Sibling
-          // recomputation pays O(size of touched groups) (a hot
-          // shingle's group is the whole corpus); the delta pays
-          // O(batch + touched partials). The WAL is written FIRST and
-          // recovery replays it through the RECOMPUTE path (rereduce /
-          // rereducePruned) — the group laws make the two equivalent,
-          // so deltas are a steady-state optimization, never the
-          // durability story (DeltaUpdateSpec pins equivalence, zero
-          // disappearance, and the crash window).
-          // The REBUILD fallback below preempts the delta when its
-          // trigger fires: with few reduce keys the delta's savings
-          // (not re-reducing untouched contributors) cannot offset the
-          // probe + tombstone + append machinery, while the rebuild
-          // skips all three and leaves a debt-free store (measured,
-          // 456k-doc lineitem store, 10k-doc bulk update: rebuild 7.4s,
-          // delta 8.8s, sibling recompute 9.1s). Hot-keyed stores with
-          // driver-small batches — the delta's home turf — never meet
-          // the rebuild trigger (it requires !idsSmall).
-          if (t.deltaReducible && t.singleOutput && !rebuildChosen) {
-            def deltaBody(): Unit = {
-              if (!probeOverflow) writeDirtyLogLocal(pairs)
-              else { writeDirtyLog(dirtyDF); jobs += 1 }
-              // Driver merge, first half: gates + the bounded
-              // touched-state read kicked async right after the WAL, so
-              // it overlaps the tombstone write and the append's driver
-              // prep below (it reads only
-              // the reduce tree, which this batch mutates solely in the
-              // final staged write).
-              val mergeStart: Option[() => Boolean] =
-                staleLocalRows.flatMap(oldLoc =>
-                  startRereduceDeltaDriver(oldLoc,
-                    localMapped.get.map { case (id, key, r) =>
-                      (key, Executer.parentOf(id, config.fanIn), r)
-                    }, pairs))
-              if (anyStale) {
-                // Merge-on-read invalidation, same two spellings as the
-                // recompute paths.
-                if (idsSmall) addTombstonesLocal(idsProbe.toIndexedSeq, batchSeq)
-                else { addTombstonesDist(incomingIds, batchSeq); jobs += 1 }
-              }
-              val appendJoin = startAppend(); jobs += 1
-              // The incoming docs' live pre-batch rows, built only when
-              // the distributed merge below runs: `existing` reads the
-              // captured pre-batch snapshot, so the plan never sees this
-              // batch's tombstones or append, even though it is built
-              // after both have landed in the pending generation.
-              lazy val oldRows =
-                if (!anyStale) existing.limit(0)
-                else if (idsSmall)
-                  existing.where($"doc_id".isin(idsProbe.toIndexedSeq: _*))
-                else existing.join(incomingIds, Seq("doc_id"), "left_semi")
-              // Driver merge, second half: join the overlapped read and
-              // finish the plain-Scala merge + driver-written tree.
-              // False (no state touched — the read overflowed its cap
-              // or failed) runs the distributed spelling as before.
-              try {
-                val mergedLocally = mergeStart.exists(finish => finish())
-                if (!mergedLocally)
-                  rereduceDelta(oldRows, mappedP,
-                    if (probeOverflow) None else Some(pairs))
-              } finally appendJoin()
-              jobs += 2
-              _lastStats = Some(MaintenanceStats("delta",
-                jobs, if (idsSmall) idsProbe.length else -1,
-                if (probeOverflow) -1 else pairs.size, -1,
-                (System.nanoTime() - t0) / 1000000))
-            }
-            if (!probeOverflow) smallBatchWidth(deltaBody())
-            else distributedWidth(idsSmall)(deltaBody())
-            clearDirtyLog()
-            return
-          }
-
-          // ---- cost-based rebuild fallback (VERDICT r7 #2) ------------
-          // When the dirty pair set approaches the whole reduce tree —
-          // a bulk re-submit, a corpus-wide reprocess — incremental
-          // maintenance costs MORE than a from-scratch rebuild: it pays
-          // the tombstone append, a near-total sibling re-reduce, and
-          // leaves a merge-on-read overlay behind, where the rebuild is
-          // one clean write per table (measured: 10k-doc update 17.5s vs
-          // 6.2s full build on a 456k-doc corpus, BENCH_r07). Decision
-          // inputs: the dirty pair count (exact when the probe fit the
-          // driver, else lower-bounded by the overflow itself) vs the
-          // live level-1 pair count (one metadata-only count job, gated
-          // behind RebuildCheckFloor so steady-state small updates never
-          // pay it). writePartitioned stages the replacement table and
-          // retires the old files in the pending generation, so a crash
-          // anywhere leaves the published generation intact — the same
-          // atomic-batch contract as any update.
-          // Calibration (measured on the 456k-doc lineitem store, 32
-          // threads): a 10k-doc bulk update dirtying every pair costs
-          // 9.1s incrementally (tombstone + append + near-total
-          // re-reduce, leaving 10k live tombstones) vs 8.2s as a
-          // rebuild (leaving a compact tombstone-free store) — past the
-          // threshold the rebuild is both faster and debt-free. A
-          // DRIVER-SMALL batch (idsSmall) never takes the fallback:
-          // its invalidation is O(batch) pushdown predicates and its
-          // append is tiny, so rewriting the whole map table cannot pay
-          // for itself even when the pair set is 100% dirty (measured:
-          // q41's 1546-doc orders update, 5.6s fallback vs ~2s
-          // incremental).
-          if (rebuildChosen) {
-            // The first-build sequence, applied to (survivors + batch):
-            // FullRebuild WAL sentinel, then one clustered pass whose
-            // cached output feeds the whole-table map write and the
-            // whole-tree reduce concurrently (buildFromMapOutput). A
-            // crash replays rereduceAll over whatever generation is
-            // PUBLISHED (the old one until clearDirtyLog's publish) —
-            // idempotent, batch invisible, re-submitting completes it
-            // (RebuildFallbackSpec pins the kill-mid-fallback window).
-            stageRebuildOldKeys()
-            writeDirtyLogLocal(Seq(("", FullRebuild)))
-            // The trigger requires !idsSmall, so the batch's ids are an
-            // anti-join, never a driver isin (code-review r8: a dead
-            // driver-small arm here implied support the decision logic
-            // forbids).
-            val survivors = readMapResults()
-              .join(incomingIds, Seq("doc_id"), "left_anti")
-            // The rewrite physically excludes every tombstoned row and
-            // every prior row of the incoming ids (`survivors`' plan was
-            // resolved against the pre-batch snapshot, tombstone overlay
-            // included): clear (retire) the tombstone state up front,
-            // exactly as a fold would — readers holding pre-rebuild
-            // snapshots keep resolving the old tombstone files until GC.
-            modelRetireTable("tombstones")
-            modelSetTombLocal(None)
-            buildFromMapOutput(survivors.unionByName(mappedP)); jobs += 2
-            _lastStats = Some(MaintenanceStats("rebuild-fallback",
-              jobs, -1, dirtyLower.toInt, -1,
-              (System.nanoTime() - t0) / 1000000))
-          } else if (!probeOverflow)
-            smallBatchWidth {
-            // Small dirty set — the common incremental case. Everything
-            // downstream is derived from the probe: the WAL is written
-            // from driver rows (a no-scan local-relation write), and all
-            // state scans use pushed-down isin filters.
-            val dirtyParents = pairs.map(_._2).distinct.sorted
-            // The dirty set is on the driver — write the WAL directly to
-            // the store filesystem (no Spark job, no commit protocol).
-            writeDirtyLogLocal(pairs)
-
-            val appendJoin: () => Unit =
-              if (!anyStale) {
-                // Pure insert: nothing to invalidate — the new rows become
-                // additional files in their partition directories. No
-                // read-rewrite of existing state at all.
-                startAppend()
-              } else {
-                // Merge-on-read invalidation (the reference's per-doc file
-                // delete, `Executer.cs:253-258`, at O(batch) write cost):
-                // tombstone the incoming ids — their pre-batch rows die at
-                // read time — and APPEND the new map output, instead of
-                // rewriting every dirty parent partition in full. Both land
-                // in the pending generation only, so a crash between them
-                // leaves the batch invisible.
-                if (idsSmall) addTombstonesLocal(idsProbe.toIndexedSeq, batchSeq)
-                else {
-                  // Incoming ids exceed the driver limit even though the
-                  // dirty pair set collapsed (many docs, few keys): write
-                  // the tombstones distributed instead — still O(batch).
-                  addTombstonesDist(incomingIds, batchSeq); jobs += 1
-                }
-                startAppend()
-              }
-            jobs += 1
-            // The post-update map rows of the dirty parents, as a plan
-            // over the pre-batch snapshot plus the new map output —
-            // rereducePruned reduces from this instead of re-reading the
-            // just-appended table, and builds it only when its driver
-            // spelling falls back. `existing` resolves `preBatch`, so the
-            // appended files and the new tombstones are outside it: the
-            // post-update view is exactly the old snapshot minus the
-            // incoming docs (vacuous for a pure insert), plus the map
-            // output. No read-back of the just-written files at all.
-            lazy val level0Source: DataFrame = {
-              val retained = existing
-                .where($"parent".isin(dirtyParents.map(Integer.valueOf): _*))
-              val retainedMinusIncoming =
-                if (!anyStale) retained
-                else if (idsSmall)
-                  retained.where(!$"doc_id".isin(idsProbe.toIndexedSeq: _*))
-                else retained.join(incomingIds, Seq("doc_id"), "left_anti")
-              retainedMinusIncoming.unionByName(mappedP)
-            }
-            // The driver-resident spelling of level0Source, when the
-            // probe's driver read succeeded: the SAME live rows of
-            // `preBatch`, dirty parents only, minus the incoming docs,
-            // plus the local map output — exactly `level0Source`'s rows.
-            // (For a pure insert the minus-incoming filter is vacuous: no
-            // stale rows means no live rows carry an incoming id.)
-            val level0Local: Option[Seq[(String, Int, R)]] =
-              liveParentRows.map { live =>
-                val idsSet = idsProbe.toSet
-                val dp = dirtyParents.toSet
-                (live.iterator
-                  .filter(r => dp(r._2) && !idsSet(r._3))
-                  .map(r => (r._1, r._2, r._5)) ++
-                  localMapped.get.iterator.map { case (id, key, r) =>
-                    (key, Executer.parentOf(id, config.fanIn), r)
-                  }).toVector
-              }
-            // Join the append before leaving the tiny-shuffle scope even
-            // when the tree rewrite throws: its plan must not outlive
-            // the restored session conf or race a later batch's swap.
-            try rereducePruned(pairs, level0Source,
-              clustered = tinyBatch, level0Local = level0Local)
-            finally appendJoin()
-            jobs += 1
-            _lastStats = Some(MaintenanceStats(
-              if (anyStale) "incremental-pruned" else "append",
-              jobs, if (idsSmall) idsProbe.length else -1,
-              pairs.size, dirtyParents.size,
-              (System.nanoTime() - t0) / 1000000))
-          } else distributedWidth(idsSmall) {
-            // Large dirty set: distributed path (joins against the WAL).
-            writeDirtyLog(dirtyDF); jobs += 1
-            val dirty = readDirtyLog().select("reduce_key", "parent").distinct()
-            // Merge-on-read invalidation, distributed spelling: tombstone
-            // the incoming ids as a parquet append (O(batch)), append the
-            // new map output, and let rereduce read the post-update view
-            // through readMapResults (new files + new tombstones, via the
-            // pending generation).
-            addTombstonesDist(incomingIds, batchSeq); jobs += 1
-            mappedP.repartition($"parent")
-              .sortWithinPartitions($"parent", $"reduce_key")
-              .write.partitionBy("parent")
-              .mode("overwrite").parquet(s"$mapResultsPath.staging"); jobs += 1
-            modelAddFiles(mergeStagedDir(mapResultsPath))
-            // One collect (≤ fanIn values) shared with rereduce — the
-            // stats figure must not pay a second identical Spark job.
-            val dirtyParents = dirty.select("parent").distinct()
-              .as[Int].collect().sorted; jobs += 1
-            rereduce(dirty, Some(dirtyParents)); jobs += 2
-            _lastStats = Some(MaintenanceStats("incremental-distributed",
-              jobs, -1, -1, dirtyParents.length,
-              (System.nanoTime() - t0) / 1000000))
-          }
-          clearDirtyLog()
-        }
-        // Shuffle-width policy lives inside maintain(): the pairs probe
-        // and the small-pairs branch run at tiny-shuffle settings
-        // (1 partition for tiny batches, a fixed narrow width for larger
-        // batches whose dirty pair set still collapsed); the distributed
-        // branch keeps the session's AQE planning on WIDE stores and
-        // narrows on small-shaped ones (see distributedWidth).
-        // Only a distributed batch persisted its map output; a local
-        // batch's `mappedP` may never have been built.
-        try maintain() finally if (!localSmall) mappedP.unpersist()
-        // Bound the merge-on-read overhead: past `tombstoneLimit` live
-        // tombstones, fold them into the data files now (amortized — the
-        // fold is itself O(tombstoned partitions), and resets the clock).
-        if (tombstoneEstimate() > config.tombstoneLimit) foldTombstonesLocked()
-      }
+      } else
+        maintainBatch(batchSeq, t0, localIds.map(_.toIndexedSeq),
+          incomingIdsRaw, localMapped, mapped, purge = false)
     } finally if (!localSmall) docsP.unpersist()
     _lastStats.foreach(s => log.info(s"execute: $s"))
+  }
+
+  /** One version per document per batch — REJECTED LOUDLY otherwise.
+    * Tombstones only invalidate seq < batchSeq, so two versions of a doc
+    * in one batch would BOTH survive and silently double-count its
+    * contributions forever (the reference's per-doc Execute can't
+    * express this state; a batch is our extension, and its contract is
+    * delete-and-invalidate per id). Callers coalescing micro-batches
+    * dedupe last-wins first (as ManifestChurnProps does). Local batches
+    * check free on the driver; distributed batches detect it in the ids
+    * probe job. */
+  private def dupIdError(id: String): Nothing =
+    throw new IllegalArgumentException(
+      s"batch contains multiple documents with id '$id': submit one " +
+        "version per document per batch (dedupe last-wins upstream)")
+
+  /** The maintenance of one batch on a built store — the path
+    * [[execute]] and [[deleteDocuments]] share (a purge is a batch with
+    * no documents). Runs everything from the ids probe on: the incoming
+    * parents, the pre-batch snapshot, the stale probe, the rebuild
+    * choice, the delta / driver-pruned / distributed spelling with its
+    * tombstones and append, publish, and the tombstone fold.
+    *
+    * @param heldIds the batch's normalized, distinct ids when the driver
+    *   holds them (a local batch, a purge list); None for a distributed
+    *   batch, whose ids the probe collects from `idsRaw`
+    * @param idsRaw the ids as a normalized one-column (`doc_id`) plan; a
+    *   distributed batch's may repeat an id, which the probe rejects
+    * @param localMapped the map output as driver rows (doc_id,
+    *   reduce_key, payload), empty for a purge; None when the map output
+    *   is only a plan
+    * @param mapped the map output with the map table's columns, built
+    *   only when a Spark spelling reads it
+    * @param purge the batch has no documents: its stats read
+    *   `delete-docs` */
+  private def maintainBatch(batchSeq: Int, t0: Long,
+      heldIds: Option[IndexedSeq[String]], idsRaw: => DataFrame,
+      localMapped: Option[Seq[(String, String, R)]], mapped: => DataFrame,
+      purge: Boolean): Unit = {
+    var jobs = 0
+    val t = task
+    lazy val incomingIdsRaw = idsRaw
+    lazy val incomingIds = incomingIdsRaw.distinct()
+    // ---- probe 1: the incoming ids (bounded collect) ------------------
+    // Held ids need no job; `Executer.normDocId` matches the SQL
+    // `upper()` the distributed probe applies (JDK-locale upper would
+    // diverge on e.g. dotted-I). Distributed batches keep the bounded
+    // collect.
+    val idsProbe: IndexedSeq[String] = heldIds.getOrElse {
+      jobs += 1
+      // Same single job as a distinct-collect, but grouped WITH counts
+      // so intra-batch duplicate ids are detected for free (see
+      // dupIdError; past the driver limit the check covers only the
+      // collected prefix — documented best-effort on huge batches).
+      val counts = incomingIdsRaw
+        .groupBy($"doc_id").agg(count(lit(1)) as "n")
+        .limit(DriverDirtyLimit + 1).collect()
+      counts.find(_.getLong(1) > 1L)
+        .foreach(r => dupIdError(r.getString(0)))
+      counts.map(_.getString(0)).toIndexedSeq
+    }
+    val idsSmall = idsProbe.length <= DriverDirtyLimit
+    // Every id of the batch is on the driver: a held list of any size, or
+    // a probe that did not overflow. No Spark job collects them again.
+    val idsOnDriver = heldIds.isDefined || idsSmall
+
+    // A document's bucket (hence `parent` partition) is a pure
+    // function of its id — so every prior contribution of the
+    // incoming ids lives in the parents of the incoming ids
+    // (≤ fanIn values). Driver-held ids give them with zero extra
+    // jobs; an overflowed probe pays one bounded distinct/collect.
+    // This replaces the reference's per-doc directory lookup
+    // (`Executer.cs:245-250`).
+    val incomingParents: Seq[Int] =
+      if (idsOnDriver)
+        idsProbe.map(Executer.parentOf(_, config.fanIn)).distinct.sorted
+      else {
+        jobs += 1
+        incomingIds
+          .select((StableBucketHash.stableBucket($"doc_id", config.buckets)
+            / lit(config.fanIn)).cast("int") as "parent")
+          .distinct().as[Int].collect().sorted.toSeq
+      }
+    // The PRE-batch generation, captured now: every read of the
+    // incoming parents' prior rows below (the driver probe read and,
+    // on a fallback, `existing`) resolves THIS snapshot, so a plan
+    // first built after this batch's tombstones and append have
+    // landed in the pending generation still sees the rows they
+    // replace — never the batch's own writes.
+    val preBatch = snapshotNow()
+    lazy val existing = readMapResultsAt(preBatch)
+      .where($"parent".isin(incomingParents.map(Integer.valueOf): _*))
+
+    // Merge-on-read invalidation (the reference's per-doc file delete,
+    // `Executer.cs:253-258`, at O(batch) write cost): tombstone the
+    // incoming ids — their pre-batch rows die at read time. ONE rule
+    // for every spelling: the local file exactly when all the batch's
+    // ids are on the driver, else a parquet append of the id set (one
+    // O(batch) job).
+    def tombstone(): Unit =
+      if (idsOnDriver) addTombstonesLocal(idsProbe, batchSeq)
+      else { addTombstonesDist(incomingIds, batchSeq); jobs += 1 }
+
+    // ---- probe 2: the dirty (key, parent) set -------------------------
+    // Prior contributions of incoming ids — across ALL reduce keys
+    // the doc previously mapped to (`Executer.cs:253-258`) — plus the
+    // pairs of the new map output. Small batches find stale rows with
+    // pushed-down id filters (no join, no shuffle); this action also
+    // materializes `mapped` into the block cache so the map function
+    // runs exactly once per batch. The provenance flag (pair seen on
+    // a stale row vs only on new map output) picks the append fast
+    // path below.
+    lazy val mappedP = if (localMapped.isDefined) mapped else mapped.persist()
+    def maintain(): Unit = {
+      lazy val stale =
+        if (idsSmall) existing.where($"doc_id".isin(idsProbe: _*))
+        else existing.join(incomingIds, Seq("doc_id"), "left_semi")
+      lazy val dirtyDF = stale
+        .select($"reduce_key", $"parent", lit(true) as "is_stale")
+        .union(mappedP.select($"reduce_key", $"parent", lit(false) as "is_stale"))
+        .distinct()
+      // A "tiny" batch (couple dozen docs) also runs interpreted and
+      // single-partition; larger driver-pruned batches keep codegen
+      // and a narrow fixed width.
+      val tinyBatch = idsSmall && idsProbe.length <= 64
+      // Width policy for the small-PAIRS branch: narrow fixed-width
+      // non-adaptive shuffles are right only when the BATCH is
+      // driver-small too. A batch large in documents (idsSmall
+      // false) can collapse to a small dirty pair set (few reduce
+      // keys) while its level-0 re-reduce still reads a
+      // corpus-scale slice — running THAT at 8-wide with AQE off
+      // under-parallelized the session 4× and forced sort-merge
+      // where AQE would broadcast the id set (measured: the 10k-doc
+      // lineitem update at 17.5s, most of it this; session width
+      // takes it to ~1/3). Such batches keep session width + AQE.
+      def smallBatchWidth[A](f: => A): A =
+        if (idsSmall)
+          withBatchShuffle(tinyBatch)(f)
+        else f
+      // The batch's map output as new files in their parent
+      // directories, returned for the model to name: driver rows as
+      // per-parent files (no job), else one job via staging. Both merge
+      // in by the same additive renames, which tell the model EXACTLY
+      // which files this batch added — no listing diff that could adopt
+      // a crashed batch's orphans. A crash between the renames and the
+      // publish leaves orphans compact() sweeps.
+      def appendMap(): Vector[String] = localMapped match {
+        case Some(rows) => appendMapDriverFiles(rows, batchSeq)
+        case None =>
+          mappedP.repartition($"parent")
+            .sortWithinPartitions($"parent", $"reduce_key")
+            .write.partitionBy("parent")
+            .mode("overwrite").parquet(s"$mapResultsPath.staging")
+          mergeStagedDir(mapResultsPath)
+      }
+      // The map-output append and the reduce-tree rewrite are
+      // independent by construction: the tree rewrite's level-0
+      // input is the pre-batch snapshot's rows (`preBatch`, read on
+      // the driver or, on a fallback, through `existing`) plus the
+      // new map output, never the appended files. So
+      // the append runs as a concurrent action and the update's
+      // wall clock pays max(append, tree-rewrite) instead of their
+      // sum. The rename fan-out is pure filesystem work and merged
+      // files stay invisible until the model names them at publish,
+      // so it runs there too; only the model mutation stays on the
+      // writer thread. Crash contract is unchanged: a failure of
+      // either leaves the WAL in place and nothing published, so
+      // recovery re-reduces the previous generation (the batch is
+      // invisible) and re-submitting the batch completes it.
+      def startAppend(): () => Unit = {
+        if (localMapped.isEmpty) jobs += 1
+        val session = spark
+        val fut = java.util.concurrent.CompletableFuture.supplyAsync { () =>
+          // SQLConf.get in the job thread resolves via the active-
+          // session thread-local; a fresh pool thread has none.
+          org.apache.spark.sql.SparkSession.setActiveSession(session)
+          appendMap()
+        }
+        () => modelAddFiles(fut.join())
+      }
+      // The probe: (distinct dirty pairs, any stale row seen, probe
+      // overflowed past the driver limit). Local batches know their
+      // NEW pairs already (the map ran driver-side), so the probe job
+      // scans only the STALE side — filter + distinct on the incoming
+      // parents, no union with map output, no cache materialization.
+      // Distributed batches keep the combined probe, which also
+      // materializes `mappedP` into the block cache so the map
+      // function runs exactly once per batch.
+      // Delta-eligible local batches collect the stale rows WITH
+      // payloads: the driver merge (rereduceDeltaDriver) negates
+      // them without a second scan. The raw-row bound is tighter
+      // than the old distinct-pair bound — overflow only routes to
+      // the heavier distributed path, never changes results.
+      // Local batches: ONE driver-side file read of the incoming
+      // parents' live map rows ([[readMapParentsDriver]] — the
+      // probe's whole input at ≤[[DriverMapReadMaxBytes]]) serves
+      // the stale probe with no Spark job AND, retained rows
+      // included, the pruned recompute's level-0 source below. A
+      // batch whose read gate trips (distributed tombstones, bytes
+      // past the ceiling, a read error) keeps the bounded collect
+      // job.
+      var staleLocalRows: Option[Array[(String, Int, R)]] = None
+      var liveParentRows: Option[Vector[(String, Int, String, Int, R)]] =
+        None
+      val (pairs, anyStale, probeOverflow) = localMapped match {
+        case Some(newRows) =>
+          val newPairs = newRows.map { case (id, key, _) =>
+            (key, Executer.parentOf(id, config.fanIn))
+          }.distinct
+          // A delta task never reads the parents' other rows: its
+          // merge needs only the incoming docs' own.
+          val driverProbe = readMapParentsDriver(preBatch,
+            incomingParents, idsProbe.toSet,
+            allRows = !(t.deltaReducible && t.singleOutput))
+          liveParentRows = driverProbe.flatMap(_._2)
+          driverProbe match {
+            case Some((staleVec, _)) =>
+              // Exactly `stale`'s rows: live (tombstone-overlaid)
+              // pre-batch rows of the incoming parents, restricted
+              // to the incoming ids. Same overflow decision as the
+              // collect spelling — both truncate at the same bound.
+              val staleRows = staleVec.toArray
+              val all = (staleRows.iterator.map(r => (r._1, r._2))
+                ++ newPairs.iterator).toSeq.distinct
+              val overflow = staleRows.length > DriverDirtyLimit ||
+                all.length > DriverDirtyLimit
+              if (!overflow && t.deltaReducible && t.singleOutput)
+                staleLocalRows = Some(staleRows)
+              (all, staleRows.nonEmpty, overflow)
+            case None if t.deltaReducible && t.singleOutput =>
+              implicit val encKPR: Encoder[(String, Int, R)] =
+                Encoders.tuple(Encoders.STRING, Encoders.scalaInt, encR)
+              val rows = withBatchShuffle(tinyBatch)(
+                stale.select($"reduce_key", $"parent", $"payload")
+                  .as[(String, Int, R)]
+                  .limit(DriverDirtyLimit + 1).collect())
+              jobs += 1
+              val all = (rows.iterator.map(r => (r._1, r._2))
+                ++ newPairs.iterator).toSeq.distinct
+              val overflow = rows.length > DriverDirtyLimit ||
+                all.length > DriverDirtyLimit
+              if (!overflow) staleLocalRows = Some(rows)
+              (all, rows.nonEmpty, overflow)
+            case None =>
+              val staleRows = withBatchShuffle(tinyBatch)(
+                stale.select($"reduce_key", $"parent").distinct()
+                  .limit(DriverDirtyLimit + 1).collect())
+              jobs += 1
+              val all = (staleRows.iterator
+                .map(r => (r.getString(0), r.getInt(1)))
+                ++ newPairs.iterator).toSeq.distinct
+              (all, staleRows.nonEmpty, staleRows.length > DriverDirtyLimit ||
+                all.length > DriverDirtyLimit)
+          }
+        case None =>
+          val pairsProbe =
+            if (idsSmall)
+              withBatchShuffle(tinyBatch)(
+                dirtyDF.limit(DriverDirtyLimit + 1).collect())
+            else dirtyDF.limit(DriverDirtyLimit + 1).collect()
+          jobs += 1
+          val overflowed = pairsProbe.length > DriverDirtyLimit
+          val sampledStale = pairsProbe.exists(_.getBoolean(2))
+          // An OVERFLOWED probe is a truncated sample: a large batch
+          // of mostly-new docs plus a few resubmitted ones can fill
+          // the whole sample with is_stale=false rows while stale
+          // rows exist past the cutoff. Staleness gates tombstoning
+          // and old-row negation in the delta path below — trusting
+          // the sample there silently skips retraction (ADVICE r8,
+          // high). One bounded existence probe (limit-1 over the
+          // semi-joined stale side) makes it exact; non-overflowed
+          // probes saw the complete set and stay job-free. The
+          // local-rows branch is already exact: its stale scan's
+          // limit can only truncate NON-empty results.
+          val staleExact = sampledStale ||
+            (overflowed && { jobs += 1; !stale.isEmpty })
+          (pairsProbe.map(r => (r.getString(0), r.getInt(1))).distinct.toSeq,
+            staleExact, overflowed)
+      }
+
+      // Rebuild-fallback decision (full rationale at its branch
+      // below): dirty pair count vs live level-1 pairs, never for
+      // driver-small batches. Computed FIRST because it gates both
+      // the delta and the recompute paths.
+      val dirtyLower: Long =
+        if (probeOverflow) DriverDirtyLimit.toLong + 1L else pairs.size.toLong
+      val rebuildChosen = anyStale && !idsSmall &&
+        dirtyLower >= RebuildCheckFloor && {
+          jobs += 1
+          val totalPairs = readPartials().count()
+          val threshold = config.rebuildDirtyFraction * totalPairs
+          if (totalPairs == 0L) false
+          else if (dirtyLower >= threshold) true
+          else if (!probeOverflow) false
+          else {
+            // Overflowed probe whose lower bound did not decide:
+            // one exact count (bounded by the stale scan the
+            // distributed path would run anyway).
+            jobs += 1
+            dirtyDF.select("reduce_key", "parent").distinct().count() >=
+              threshold
+          }
+        }
+      def stats(mode: String, dirtyPairs: Int, dirtyParents: Int): Unit =
+        _lastStats = Some(MaintenanceStats(
+          if (purge) "delete-docs" else mode, jobs,
+          if (idsOnDriver) idsProbe.length else -1, dirtyPairs, dirtyParents,
+          (System.nanoTime() - t0) / 1000000))
+
+      // ---- delta maintenance (abelian-group tasks) ----------------
+      // The task declared a group inverse (MapReduceTask.negate):
+      // the tree is maintained by merging reduce(old⁻ ++ new) into
+      // the stored partials/finals — the engine reads the incoming
+      // docs' OLD map rows and the touched partials, never the
+      // other documents sharing the touched keys. Sibling
+      // recomputation pays O(size of touched groups) (a hot
+      // shingle's group is the whole corpus); the delta pays
+      // O(batch + touched partials). The WAL is written FIRST and
+      // recovery replays it through the RECOMPUTE path (rereduce /
+      // rereducePruned) — the group laws make the two equivalent,
+      // so deltas are a steady-state optimization, never the
+      // durability story (DeltaUpdateSpec pins equivalence, zero
+      // disappearance, and the crash window).
+      // The REBUILD fallback below preempts the delta when its
+      // trigger fires: with few reduce keys the delta's savings
+      // (not re-reducing untouched contributors) cannot offset the
+      // probe + tombstone + append machinery, while the rebuild
+      // skips all three and leaves a debt-free store (measured,
+      // 456k-doc lineitem store, 10k-doc bulk update: rebuild 7.4s,
+      // delta 8.8s, sibling recompute 9.1s). Hot-keyed stores with
+      // driver-small batches — the delta's home turf — never meet
+      // the rebuild trigger (it requires !idsSmall).
+      if (t.deltaReducible && t.singleOutput && !rebuildChosen) {
+        def deltaBody(): Unit = {
+          if (!probeOverflow) writeDirtyLogLocal(pairs)
+          else { writeDirtyLog(dirtyDF); jobs += 1 }
+          // Driver merge, first half: gates + the bounded
+          // touched-state read kicked async right after the WAL, so
+          // it overlaps the tombstone write and the append's driver
+          // prep below (it reads only
+          // the reduce tree, which this batch mutates solely in the
+          // final staged write).
+          val mergeStart: Option[() => Boolean] =
+            staleLocalRows.flatMap(oldLoc =>
+              startRereduceDeltaDriver(oldLoc,
+                localMapped.get.map { case (id, key, r) =>
+                  (key, Executer.parentOf(id, config.fanIn), r)
+                }, pairs))
+          if (anyStale) tombstone()
+          val appendJoin = startAppend()
+          // The incoming docs' live pre-batch rows, built only when
+          // the distributed merge below runs: `existing` reads the
+          // captured pre-batch snapshot, so the plan never sees this
+          // batch's tombstones or append, even though it is built
+          // after both have landed in the pending generation.
+          lazy val oldRows =
+            if (!anyStale) existing.limit(0)
+            else if (idsSmall)
+              existing.where($"doc_id".isin(idsProbe: _*))
+            else existing.join(incomingIds, Seq("doc_id"), "left_semi")
+          // Driver merge, second half: join the overlapped read and
+          // finish the plain-Scala merge + driver-written tree.
+          // False (no state touched — the read overflowed its cap
+          // or failed) runs the distributed spelling as before.
+          try {
+            val mergedLocally = mergeStart.exists(finish => finish())
+            if (!mergedLocally) {
+              rereduceDelta(oldRows, mappedP,
+                if (probeOverflow) None else Some(pairs))
+              jobs += 2
+            }
+          } finally appendJoin()
+          stats("delta", if (probeOverflow) -1 else pairs.size, -1)
+        }
+        if (!probeOverflow) smallBatchWidth(deltaBody())
+        else distributedWidth(idsSmall)(deltaBody())
+        clearDirtyLog()
+        return
+      }
+
+      // ---- cost-based rebuild fallback (VERDICT r7 #2) ------------
+      // When the dirty pair set approaches the whole reduce tree —
+      // a bulk re-submit, a corpus-wide reprocess — incremental
+      // maintenance costs MORE than a from-scratch rebuild: it pays
+      // the tombstone append, a near-total sibling re-reduce, and
+      // leaves a merge-on-read overlay behind, where the rebuild is
+      // one clean write per table (measured: 10k-doc update 17.5s vs
+      // 6.2s full build on a 456k-doc corpus, BENCH_r07). Decision
+      // inputs: the dirty pair count (exact when the probe fit the
+      // driver, else lower-bounded by the overflow itself) vs the
+      // live level-1 pair count (one metadata-only count job, gated
+      // behind RebuildCheckFloor so steady-state small updates never
+      // pay it). writePartitioned stages the replacement table and
+      // retires the old files in the pending generation, so a crash
+      // anywhere leaves the published generation intact — the same
+      // atomic-batch contract as any update.
+      // Calibration (measured on the 456k-doc lineitem store, 32
+      // threads): a 10k-doc bulk update dirtying every pair costs
+      // 9.1s incrementally (tombstone + append + near-total
+      // re-reduce, leaving 10k live tombstones) vs 8.2s as a
+      // rebuild (leaving a compact tombstone-free store) — past the
+      // threshold the rebuild is both faster and debt-free. A
+      // DRIVER-SMALL batch (idsSmall) never takes the fallback:
+      // its invalidation is O(batch) pushdown predicates and its
+      // append is tiny, so rewriting the whole map table cannot pay
+      // for itself even when the pair set is 100% dirty (measured:
+      // q41's 1546-doc orders update, 5.6s fallback vs ~2s
+      // incremental).
+      if (rebuildChosen) {
+        // The first-build sequence, applied to (survivors + batch):
+        // FullRebuild WAL sentinel, then one clustered pass whose
+        // cached output feeds the whole-table map write and the
+        // whole-tree reduce concurrently (buildFromMapOutput). A
+        // crash replays rereduceAll over whatever generation is
+        // PUBLISHED (the old one until clearDirtyLog's publish) —
+        // idempotent, batch invisible, re-submitting completes it
+        // (RebuildFallbackSpec pins the kill-mid-fallback window).
+        stageRebuildOldKeys()
+        writeDirtyLogLocal(Seq(("", FullRebuild)))
+        // The trigger requires !idsSmall, so the batch's ids are an
+        // anti-join, never a driver isin (code-review r8: a dead
+        // driver-small arm here implied support the decision logic
+        // forbids).
+        val survivors = readMapResults()
+          .join(incomingIds, Seq("doc_id"), "left_anti")
+        // The rewrite physically excludes every tombstoned row and
+        // every prior row of the incoming ids (`survivors`' plan was
+        // resolved against the pre-batch snapshot, tombstone overlay
+        // included): clear (retire) the tombstone state up front,
+        // exactly as a fold would — readers holding pre-rebuild
+        // snapshots keep resolving the old tombstone files until GC.
+        modelRetireTable("tombstones")
+        modelSetTombLocal(None)
+        buildFromMapOutput(survivors.unionByName(mappedP)); jobs += 2
+        stats("rebuild-fallback", dirtyLower.toInt, -1)
+      } else if (!probeOverflow)
+        smallBatchWidth {
+        // Small dirty set — the common incremental case. Everything
+        // downstream is derived from the probe: the WAL is written
+        // from driver rows (a no-scan local-relation write), and all
+        // state scans use pushed-down isin filters.
+        val dirtyParents = pairs.map(_._2).distinct.sorted
+        // The dirty set is on the driver — write the WAL directly to
+        // the store filesystem (no Spark job, no commit protocol).
+        writeDirtyLogLocal(pairs)
+        // A pure insert (no stale rows) has nothing to invalidate: the
+        // new rows become additional files in their partition
+        // directories, with no read-rewrite of existing state at all.
+        // Otherwise the ids are tombstoned and the new rows appended,
+        // instead of rewriting every dirty parent partition in full;
+        // both land in the pending generation only, so a crash between
+        // them leaves the batch invisible.
+        if (anyStale) tombstone()
+        val appendJoin = startAppend()
+        // The post-update map rows of the dirty parents, as a plan
+        // over the pre-batch snapshot plus the new map output —
+        // rereducePruned reduces from this instead of re-reading the
+        // just-appended table, and builds it only when its driver
+        // spelling falls back. `existing` resolves `preBatch`, so the
+        // appended files and the new tombstones are outside it: the
+        // post-update view is exactly the old snapshot minus the
+        // incoming docs (vacuous for a pure insert), plus the map
+        // output. No read-back of the just-written files at all.
+        lazy val level0Source: DataFrame = {
+          val retained = existing
+            .where($"parent".isin(dirtyParents.map(Integer.valueOf): _*))
+          val retainedMinusIncoming =
+            if (!anyStale) retained
+            else if (idsSmall)
+              retained.where(!$"doc_id".isin(idsProbe: _*))
+            else retained.join(incomingIds, Seq("doc_id"), "left_anti")
+          retainedMinusIncoming.unionByName(mappedP)
+        }
+        // The driver-resident spelling of level0Source, when the
+        // probe's driver read succeeded: the SAME live rows of
+        // `preBatch`, dirty parents only, minus the incoming docs,
+        // plus the local map output — exactly `level0Source`'s rows.
+        // (For a pure insert the minus-incoming filter is vacuous: no
+        // stale rows means no live rows carry an incoming id.)
+        val level0Local: Option[Seq[(String, Int, R)]] =
+          liveParentRows.map { live =>
+            val idsSet = idsProbe.toSet
+            val dp = dirtyParents.toSet
+            (live.iterator
+              .filter(r => dp(r._2) && !idsSet(r._3))
+              .map(r => (r._1, r._2, r._5)) ++
+              localMapped.get.iterator.map { case (id, key, r) =>
+                (key, Executer.parentOf(id, config.fanIn), r)
+              }).toVector
+          }
+        // Join the append before leaving the tiny-shuffle scope even
+        // when the tree rewrite throws: its plan must not outlive
+        // the restored session conf or race a later batch's swap.
+        try rereducePruned(pairs, level0Source,
+          clustered = tinyBatch, level0Local = level0Local)
+        finally appendJoin()
+        jobs += 1
+        stats(if (anyStale) "incremental-pruned" else "append",
+          pairs.size, dirtyParents.size)
+      } else distributedWidth(idsSmall) {
+        // Large dirty set: distributed path (joins against the WAL).
+        writeDirtyLog(dirtyDF); jobs += 1
+        val dirty = readDirtyLog().select("reduce_key", "parent").distinct()
+        // Merge-on-read invalidation, then the append, and let
+        // rereduce read the post-update view through readMapResults
+        // (new files + new tombstones, via the pending generation).
+        tombstone()
+        modelAddFiles(appendMap())
+        if (localMapped.isEmpty) jobs += 1
+        // One collect (≤ fanIn values) shared with rereduce — the
+        // stats figure must not pay a second identical Spark job.
+        val dirtyParents = dirty.select("parent").distinct()
+          .as[Int].collect().sorted; jobs += 1
+        rereduce(dirty, Some(dirtyParents)); jobs += 2
+        stats("incremental-distributed", -1, dirtyParents.length)
+      }
+      clearDirtyLog()
+    }
+    // Shuffle-width policy lives inside maintain(): the pairs probe
+    // and the small-pairs branch run at tiny-shuffle settings
+    // (1 partition for tiny batches, a fixed narrow width for larger
+    // batches whose dirty pair set still collapsed); the distributed
+    // branch keeps the session's AQE planning on WIDE stores and
+    // narrows on small-shaped ones (see distributedWidth).
+    // Only a distributed batch persisted its map output; a local
+    // batch's `mappedP` may never have been built.
+    try maintain() finally if (localMapped.isEmpty) mappedP.unpersist()
+    // Bound the merge-on-read overhead: past `tombstoneLimit` live
+    // tombstones, fold them into the data files now (amortized — the
+    // fold is itself O(tombstoned partitions), and resets the clock).
+    if (tombstoneEstimate() > config.tombstoneLimit) foldTombstonesLocked()
   }
 
   /** Delta spelling of the two-level re-reduce, for tasks declaring the
@@ -3014,49 +3034,22 @@ class Executer[D, R <: Product: TypeTag](
     clearDirtyLog()
   }
 
-  /** Remove documents from the index entirely — the update path with an
-    * empty insert: tombstone the ids (O(docs) write), re-reduce only the
-    * (key, parent) pairs they fed. The reference has no doc-level delete
-    * (only the whole-key utility), but update-as-delete+insert implies
-    * it; at scale this is the "purge these records" compliance op,
-    * costing O(changed docs), never a table rewrite. Ids are a
-    * driver-side Seq by contract (a purge list, not a dataset). */
+  /** Remove documents from the index entirely: an update with no
+    * documents (the reference's `Execute` invalidates a document's prior
+    * entries before mapping it, `Executer.cs:245-258`), run through
+    * [[maintainBatch]] like [[execute]]'s batches. It costs O(changed
+    * docs), never a table rewrite — the "purge these records" compliance
+    * op. Ids are a driver-side Seq by contract (a purge list, not a
+    * dataset), so the tombstones are always the local file. An empty
+    * list, a store with no map rows or unknown ids publish nothing. */
   def deleteDocuments(docIds: Seq[String]): Unit = withLease {
     recoverLocked()
     val t0 = System.nanoTime()
-    var jobs = 0
-    val ids = docIds.map(Executer.normDocId).distinct
-    if (ids.nonEmpty && exists(mapResultsPath)) {
-      val batchSeq = bumpSeq()
-      val parents = ids
-        .map(id => Executer.parentOf(id, config.fanIn))
-        .distinct.sorted
-      val existing = readMapResults()
-        .where($"parent".isin(parents.map(Integer.valueOf): _*))
-      val tiny = ids.length <= 64
-      val pairs = withBatchShuffle(tiny) {
-        existing.where($"doc_id".isin(ids: _*))
-          .select($"reduce_key", $"parent").distinct().collect()
-          .map(r => (r.getString(0), r.getInt(1))).toSeq
-      }; jobs += 1
-      if (pairs.nonEmpty) {
-        // WAL first, then tombstones — same crash ordering as execute.
-        writeDirtyLogLocal(pairs)
-        addTombstonesLocal(ids, batchSeq)
-        withBatchShuffle(tiny) {
-          val dirtyParents = pairs.map(_._2).distinct.sorted
-          val level0 = existing
-            .where($"parent".isin(dirtyParents.map(Integer.valueOf): _*))
-            .where(!$"doc_id".isin(ids: _*))
-          rereducePruned(pairs, level0, clustered = tiny); jobs += 1
-        }
-        clearDirtyLog()
-        _lastStats = Some(MaintenanceStats("delete-docs", jobs, ids.length,
-          pairs.size, pairs.map(_._2).distinct.size,
-          (System.nanoTime() - t0) / 1000000))
-        if (tombstoneEstimate() > config.tombstoneLimit) foldTombstonesLocked()
-      }
-    }
+    val ids = docIds.map(Executer.normDocId).distinct.toIndexedSeq
+    if (ids.nonEmpty &&
+        pending.live.getOrElse("map_results", Vector.empty).nonEmpty)
+      maintainBatch(bumpSeq(), t0, Some(ids), ids.toDF("doc_id"), Some(Nil),
+        noMapOutput, purge = true)
   }
 
   private def fpartOf(key: String): Int =
@@ -3301,16 +3294,20 @@ class Executer[D, R <: Product: TypeTag](
       .withColumn("seq", lit(batchSeq))
       .select("parent", "bucket", "reduce_key", "doc_id", "seq", "payload")
 
+  /** An empty map output with the map table's columns, through
+    * [[mapColumns]]: a purge's (it maps no document), and the source of
+    * [[mapWriteSchema]]. */
+  private lazy val noMapOutput: DataFrame =
+    mapColumns(spark.createDataset(Seq.empty[(String, String, R)])(encKR)
+      .toDF("doc_id", "reduce_key", "payload"), 0)
+
   /** The map files' written schema — the one the job spelling persists
     * from `mapped` (partition column excluded), so driver-written and
     * job-written map files are interchangeable. Derived once per handle
-    * through [[mapColumns]] over an empty frame of the map output's
-    * type: `bucket` inherits `doc_id`'s nullability there, which
-    * [[mapDriverDataSchema]] does not reproduce. */
-  private lazy val mapWriteSchema: StructType = StructType(
-    mapColumns(spark.createDataset(Seq.empty[(String, String, R)])(encKR)
-      .toDF("doc_id", "reduce_key", "payload"), 0)
-      .schema.filterNot(_.name == "parent"))
+    * from [[noMapOutput]]: `bucket` inherits `doc_id`'s nullability
+    * there, which [[mapDriverDataSchema]] does not reproduce. */
+  private lazy val mapWriteSchema: StructType =
+    StructType(noMapOutput.schema.filterNot(_.name == "parent"))
 
   /** The map table's row codec without its partition column —
     * (bucket, reduce_key, doc_id, seq, payload) — shared by the driver

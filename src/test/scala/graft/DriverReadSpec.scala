@@ -48,6 +48,28 @@ class DriverReadSpec extends AnyFunSuite {
       s"lastStats counts ${ex.lastStats.map(_.sparkJobs)}, the listener $n")
   }
 
+  test("a 1-doc update and a 1-id purge run 0 Spark jobs, on a recompute " +
+      "and a delta task") {
+    for ((name, tk) <- Seq("recompute" -> PeopleCountByState,
+        "delta" -> DeltaCountByState)) {
+      val ex = new Executer(tk, TestTmp.dir(s"graft-dread-purge-$name"), cfg)
+      ex.execute(spark.createDataset(Seq(
+        Person("a", "CA"), Person("b", "TX"), Person("c", "CA"))))
+      val nu = jobs(ex.execute(spark.createDataset(Seq(Person("a", "NV")))))
+      assert(nu == 0, s"$name: the 1-doc update ran $nu Spark jobs")
+      // The delta spelling counts only the jobs it runs.
+      if (name == "delta") assert(ex.lastStats.map(_.sparkJobs) == Some(nu),
+        s"$name update: lastStats counts ${ex.lastStats.map(_.sparkJobs)}")
+      val np = jobs(ex.deleteDocuments(Seq("b")))
+      assert(np == 0, s"$name: the 1-id purge ran $np Spark jobs")
+      assert(ex.lastStats.map(_.mode) == Some("delete-docs"))
+      if (name == "delta") assert(ex.lastStats.map(_.sparkJobs) == Some(np),
+        s"$name purge: lastStats counts ${ex.lastStats.map(_.sparkJobs)}")
+      assert(ex.queryAll().collect().map(r => (r.getString(0), r.getLong(2)))
+        .toMap == Map("CA" -> 1L, "NV" -> 1L))
+    }
+  }
+
   test("key reads and a local-only changed-keys poll run 0 Spark jobs") {
     val store = TestTmp.dir("graft-dread-zero")
     // singleOutput, so diffSince (paired by key) serves this store too.

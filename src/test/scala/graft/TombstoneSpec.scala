@@ -107,14 +107,56 @@ class TombstoneSpec extends AnyFunSuite {
     assert(mapFiles(store) == before, "purge must not rewrite data files")
     assert(ex.lastStats.exists(_.mode == "delete-docs"))
 
-    // Unknown ids are a no-op; deleting every doc of a key removes it.
+    // Unknown ids and an empty list are no-ops that publish no
+    // generation; deleting every doc of a key removes it.
+    val v = ex.snapshotVersion()
     ex.deleteDocuments(Seq("nope"))
+    ex.deleteDocuments(Nil)
+    assert(ex.snapshotVersion() == v, "a no-op purge published a generation")
     assert(counts(ex) == Map("CA" -> 48L, "TX" -> 49L))
     ex.deleteDocuments((2 to 100 by 2).map(i => s"p-$i"))
     assert(counts(ex).get("CA").isEmpty)
     // State stays maintainable afterwards.
     ex.execute(spark.createDataset(Seq(Person("p-2", "CA"))))
     assert(counts(ex)("CA") == 1L)
+
+    // A store with no map rows: nothing to purge, nothing published.
+    val empty = new Executer(PeopleCountByState, tmp(),
+      ExecuterConfig(fanIn = 4, finalParts = 2))
+    empty.deleteDocuments(Seq("p-1"))
+    assert(empty.snapshotVersion() == -1L)
+    assert(empty.isEmptyStore)
+  }
+
+  test("a purge past driverDirtyLimit goes distributed with local tombstones") {
+    val cfg = ExecuterConfig(fanIn = 4, finalParts = 2, driverDirtyLimit = 8)
+    val people = (1 to 100).map(i =>
+      Person(s"p-$i", Seq("CA", "TX", "WA")(i % 3)))
+    val gone = (1 to 40 by 2).map(i => s"p-$i") // 20 ids > the limit of 8
+    val store = tmp()
+    val ex = new Executer(PeopleCountByState, store, cfg)
+    ex.execute(spark.createDataset(people))
+    val (_, n) = SparkJobs.count(spark)(ex.deleteDocuments(gone))
+    val st = ex.lastStats.get
+    assert(st.mode == "delete-docs")
+    // The probe overflowed the driver limit (no exact pair count) and
+    // the distributed re-reduce ran.
+    assert(st.dirtyPairs == -1 && n > 0, s"stats $st, $n jobs")
+    assert(st.incomingDocs == 20L)
+    // The caller holds every id, so the tombstones are the local file.
+    assert(!new java.io.File(s"$store/tombstones").exists(),
+      "a purge wrote parquet tombstones")
+    assert(ex.storeStats()("tombstones") == 20L)
+    val survivors = people.filterNot(p => gone.contains(p.id))
+    val fresh = new Executer(PeopleCountByState, tmp(), cfg)
+    fresh.execute(spark.createDataset(survivors))
+    assert(ex.queryAll().collect().toSet == fresh.queryAll().collect().toSet)
+    // With no parquet tombstones left behind, a 1-doc local update
+    // stays on the driver.
+    val (_, n1) = SparkJobs.count(spark)(
+      ex.execute(spark.createDataset(Seq(Person("p-2", "NV")))))
+    assert(n1 == 0, s"the 1-doc update after the purge ran $n1 Spark jobs")
+    assert(counts(ex)("NV") == 1L)
   }
 
   test("distributed path also tombstones instead of rewriting") {
